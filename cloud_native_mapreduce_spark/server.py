@@ -35,7 +35,7 @@ _DEFAULT_SCRIPTS_DIR = os.path.join(
 def _validated_script(path: str, scripts_dir: str) -> str:
     """Resolve a requested mapper/reducer path inside the allowlisted
     scripts directory. The endpoint executes these as child processes
-    (rdd.pipe), so an unrestricted path is remote code execution for
+    (JavaRDD.pipe), so an unrestricted path is remote code execution for
     anyone who can reach the socket — the trust model is: whoever
     controls ``scripts_dir`` controls what can run, and the HTTP caller
     only picks WHICH vetted script. Relative paths resolve against

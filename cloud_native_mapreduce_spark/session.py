@@ -79,7 +79,7 @@ def ship_package(spark: SparkSession) -> None:
     the driver's cwd/sys.path, by zipping it and shipping via addPyFile.
 
     Needed only for code paths that run *named module functions* on workers
-    (rdd.pipe glue, module-level UDFs). Closures defined inside functions
+    (module-level UDFs). Closures defined inside functions
     are pickled by value and don't need this — the preferred style here.
     Idempotent per session.
     """

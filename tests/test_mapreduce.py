@@ -8,10 +8,15 @@ insensitively, and per-reducer output files must exist.
 from __future__ import annotations
 
 import collections
+import json
 import os
 import re
+import subprocess
+import sys
+import textwrap
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from cloud_native_mapreduce_spark import mapreduce as MR
 
@@ -156,3 +161,112 @@ def test_reducer_sees_sorted_contiguous_keys(spark, corpus_dir):
     golden = _golden_counts(CORPUS)
     assert {r["key"]: int(r["value"]) for r in rows} == golden
     assert seen_orders == []  # structural check only
+
+
+def test_every_reducer_writes_a_part_file(spark, tmp_path):
+    """Reference: one output blob per reducer, even when a reducer gets
+    no keys."""
+    d = tmp_path / "one_word"
+    d.mkdir()
+    (d / "in.txt").write_text("solo\n", encoding="utf-8")
+    spec = MR.wordcount_spec([str(d)], num_map_tasks=1, num_reduce_tasks=4)
+    files = MR.submit_job(spark, spec, output_dir=str(tmp_path / "out"))
+    assert [os.path.basename(f) for f in files] == [
+        f"part-{i:05d}" for i in range(4)]
+    texts = []
+    for f in files:
+        with open(f, encoding="utf-8") as fh:
+            texts.append(fh.read())
+    assert sorted(texts) == ["", "", "", "solo\t1\n"]
+
+
+def _script(tmp_path, name, body):
+    path = tmp_path / name
+    path.write_text(textwrap.dedent(body), encoding="utf-8")
+    return str(path)
+
+
+def test_pipe_reducer_sees_sorted_lines(spark, corpus_dir, tmp_path):
+    """The R1 invariant on the pipe path: the reducer script exits 7 (and
+    fails the job) if a stdin line sorts below the one before it."""
+    reducer = _script(tmp_path, "check_sorted.py", """
+        import sys
+        prev = None
+        for line in sys.stdin:
+            if prev is not None and line < prev:
+                sys.exit(7)
+            prev = line
+            sys.stdout.write(line)
+        """)
+    spec = MR.MapReduceSpec(
+        input_paths=(corpus_dir,),
+        mapper=MR.wordcount_spec([corpus_dir]).mapper, reducer=reducer,
+        num_map_tasks=3, num_reduce_tasks=2)
+    got = collections.Counter(
+        r["key"] for r in MR.result_df(spark, spec).collect())
+    assert dict(got) == _golden_counts(CORPUS)
+
+
+def test_pipe_scripts_get_extra_env(spark, corpus_dir, tmp_path):
+    reducer = _script(tmp_path, "echo_env.py", """
+        import os, sys
+        n = sum(1 for _ in sys.stdin)
+        print(f"{os.environ['MR_TAG']}\t{n}")
+        """)
+    spec = MR.MapReduceSpec(
+        input_paths=(corpus_dir,),
+        mapper=MR.wordcount_spec([corpus_dir]).mapper, reducer=reducer,
+        num_map_tasks=2, num_reduce_tasks=1,
+        extra_env={"MR_TAG": "tagged"})
+    rows = MR.result_df(spark, spec).collect()
+    assert [(r["key"], int(r["value"])) for r in rows] == [
+        ("tagged", sum(_golden_counts(CORPUS).values()))]
+
+
+def test_failing_mapper_fails_the_job(spark, corpus_dir, tmp_path):
+    """A non-zero script exit fails the task, and so the job: no output
+    from a half-run mapper is ever reduced."""
+    mapper = _script(tmp_path, "exit3.py", """
+        import sys
+        sys.stdin.read()
+        sys.exit(3)
+        """)
+    spec = MR.MapReduceSpec(
+        input_paths=(corpus_dir,), mapper=mapper,
+        reducer=MR.wordcount_spec([corpus_dir]).reducer,
+        num_map_tasks=2, num_reduce_tasks=2)
+    with pytest.raises(Py4JJavaError, match="exited with status 3"):
+        MR.submit_job(spark, spec, output_dir=str(tmp_path / "out"))
+
+
+_FOREIGN_CWD_JOB = textwrap.dedent("""
+    import json, sys
+    sys.path.insert(0, {repo!r})
+    from cloud_native_mapreduce_spark import mapreduce as MR
+    from cloud_native_mapreduce_spark.session import get_spark
+
+    spark = get_spark("foreign-cwd", master="local[2]",
+                      extra_conf={{"spark.ui.enabled": "false"}})
+    spec = MR.wordcount_spec([{corpus!r}], num_map_tasks=2,
+                             num_reduce_tasks=2)
+    got = {{r["key"]: int(r["value"])
+           for r in MR.result_df(spark, spec).collect()}}
+    print("RESULT", json.dumps(got, sort_keys=True))
+    spark.stop()
+""")
+
+
+def test_pipe_job_runs_from_a_foreign_cwd(corpus_dir, tmp_path):
+    """Launched outside the repository with no PYTHONPATH, executor
+    Python workers cannot import this package; the pipe job must not
+    need them."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         _FOREIGN_CWD_JOB.format(repo=repo, corpus=corpus_dir)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = next(ln for ln in proc.stdout.splitlines()
+                if ln.startswith("RESULT "))
+    assert json.loads(line[len("RESULT "):]) == _golden_counts(CORPUS)

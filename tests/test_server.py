@@ -77,6 +77,26 @@ def test_http_job_failure_is_500(server, tmp_path):
         })
 
 
+def test_http_failing_script_is_500(spark, tmp_path):
+    """A vetted mapper that exits non-zero fails the job → 500."""
+    (tmp_path / "exit3.py").write_text(
+        "import sys\nsys.stdin.read()\nsys.exit(3)\n", encoding="utf-8")
+    (tmp_path / "corpus").mkdir()
+    (tmp_path / "corpus" / "in.txt").write_text("a b\n", encoding="utf-8")
+    srv = JobServer(spark, scripts_dir=str(tmp_path)).start()
+    try:
+        with pytest.raises(RuntimeError,
+                           match=r"(?s)HTTP 500.*exited with status 3"):
+            submit_http(srv.address, {
+                "input_paths": [str(tmp_path / "corpus")],
+                "mapper": "exit3.py",
+                "reducer": "exit3.py",
+                "output_dir": str(tmp_path / "out"),
+            })
+    finally:
+        srv.stop()
+
+
 def test_script_outside_allowlist_rejected(server, tmp_path):
     """The endpoint executes scripts as child processes, so the path
     allowlist IS the security boundary: a request naming a script
