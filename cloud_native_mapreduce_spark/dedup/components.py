@@ -39,7 +39,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
                          max_iter: int = 50,
                          pointer_jumping: bool = False,
                          edges_canonical: bool = False,
-                         hint_labels: bool = True) -> DataFrame:
+                         hint_labels: bool = False) -> DataFrame:
     """Return (node_col, component) where component = min node id reachable.
 
     `nodes`: one row per node (singletons allowed — they keep their own
@@ -61,6 +61,17 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     edge-connectivity; L(L(u)) because L(u) is itself in u's
     component), so the scalar-sum convergence test and the fixed point
     L = component-min are unchanged.
+
+    ``hint_labels`` puts a ``shuffle_hash`` hint on the |V|-row label
+    side of each round's edge join. Pass True for large graphs such as
+    the co-purchase graph: the planner's default sort-merge re-sorts
+    the 2m-row edge frame every round, and hash-building the label
+    slice is the same memory class as the loop's own min-aggregate
+    (~25-30% off each round at sf0.1; hub_removal 8.5/8.7 s with the
+    hint vs 11.0/12.0 without). Leave it False for tiny graphs such as
+    near-dup pair graphs: the hint suppresses AQE's broadcast of the
+    label side, which is faster there (dedup_components alternating
+    A/B: hint 3.2/3.3/4.8 s vs no hint 2.6/2.8/4.0).
     """
     # Materialize the symmetrized edge list ONCE: every round joins it,
     # and without the checkpoint each round would re-execute the whole
@@ -105,18 +116,6 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     prev_sum = labels.agg(F.sum("comp")).collect()[0][0]
 
     def one_round(labels: DataFrame) -> DataFrame:
-        # shuffle_hash hint on the |V|-row label side: the planner's
-        # default sort-merge would re-sort the 2m-row edge frame every
-        # round; hash-building the per-partition label slice instead is
-        # the same memory class as the loop's own min-aggregate state
-        # (measured ~25-30% off each round at sf0.1 on the co-purchase
-        # graph). ``hint_labels=False`` (round-15, VERDICT r14 #6):
-        # callers whose pair graph is TINY (near-dup corpora) are
-        # faster letting AQE broadcast the label side — the explicit
-        # hint suppresses the broadcast rewrite (dedup_components
-        # alternating A/B: hint 3.2/3.3/4.8 s vs no-hint 2.6/2.8/4.0;
-        # hub_removal with the big co-purchase graph wants the hint:
-        # 8.5/8.7 s vs 11.0/12.0 without).
         lbl_side = labels.hint("shuffle_hash") if hint_labels else labels
         neighbor_min = (sym.join(lbl_side,
                                  F.col("src") == F.col("node"))

@@ -457,8 +457,7 @@ def curation_pipeline_neardup(docs: DataFrame,
         gated = gated.unionByName(dup)
     pairs = (minhash.near_duplicates(gated, threshold=jaccard_threshold)
              .select("doc_a", "doc_b"))
-    comp = components.connected_components(
-        gated.select("doc_id"), pairs, hint_labels=False)
+    comp = components.connected_components(gated.select("doc_id"), pairs)
     surv = (comp.groupBy("comp")
             .agg(F.min("doc_id").alias("doc_id"),
                  F.count("*").alias("cluster_size")))

@@ -1274,8 +1274,7 @@ def leakage_safe_split(docs: DataFrame, edges: DataFrame,
     one 3-row aggregate."""
     from cloud_native_mapreduce_spark.dedup import components
 
-    comp = components.connected_components(
-        docs.select("doc_id"), edges, hint_labels=False)
+    comp = components.connected_components(docs.select("doc_id"), edges)
     u = hash_uniform(F.col("comp"))
     split = (F.when(u < train, F.lit("train"))
              .when(u < val, F.lit("val"))

@@ -1,38 +1,38 @@
-"""Graph analytics over derived graphs: distributed triangle counting.
+"""Graph analytics over the co-purchase part graph.
 
-North-star scope (the reference has no graph surface): triangle counting
-is the canonical "joins as graph compute" workload — the same
-edge-list-join pattern MapReduce graph papers use (Suri & Vassilvitskii,
-"Counting Triangles and the Curse of the Last Reducer", WWW'11),
-executed here as keyed equi-joins that Catalyst plans like any other.
+Parts are vertices; two parts are adjacent when they appear in the same
+order (`copart_pairs`, one canonical (a < b) row per edge, degree-capped
+by `copart_edges`). On that graph the module runs the classic
+MapReduce graph family as keyed equi-joins that Catalyst plans like any
+other query: triangles and clustering, PageRank and personalized
+PageRank, BFS, SSSP, landmark and diameter sweeps, k-core and k-truss
+peels, label propagation, MIS, WL refinement, Borůvka MSF, and degree,
+brand and rich-club structure readouts.
 
-Scale posture at 100 TB:
-  * pair enumeration never self-joins the fact table: one shuffle
-    groups lines by order, pairs explode from the per-order part array
-    (bounded by lines-per-order — TPC-H ≤ 7 — so the explosion is a
-    constant factor, not quadratic), then one distinct;
-  * **degree orientation** — each edge is directed from its
-    lower-degree endpoint to its higher-degree one (ties by ID), and
-    triangles are counted only where both edges point outward. Every
-    triangle has exactly one vertex whose two triangle edges both point
-    outward (its (deg, id)-minimum corner), so each is counted once,
-    and out-degree is ≤ √(2m) in any degree-ordered orientation — the
-    closure work is O(m^1.5) regardless of hub skew;
-  * the `max_degree` cap drops super-node vertices entirely
-    (documented, mirrored in the oracle) — kept as a safety valve for
-    adversarial skew, no longer the cost bound. Cap and orientation
-    share ONE degree aggregate and one 2-way join against the |V|-row
-    degree table;
-  * closure is the **edge-iterator** form: out-adjacency arrays are
-    built once (Σ|N⁺| = m entries), joined back onto each oriented
-    edge, and triangles are Σ_e |N⁺(src) ∩ N⁺(dst)| via
-    `array_intersect` — JVM-side sorted-array work per edge instead of
-    materializing Σ outdeg² wedge rows through a shuffle + semi-join
-    (measured 1.7× faster at sf0.1, and the gap widens with skew).
+Iteration is repeated join plus aggregate (*MapReduce Algorithms for
+Big Data Analysis*, VLDB'12), and three kernels, defined next to
+`copart_edges`, carry the shapes the operators share:
 
-Orientation and edge-iteration change only the physical plan: the
-capped graph and its exact triangle count are identical to the naive
-wedge algorithm, so the DuckDB oracle needs no semantic knob.
+  * `bidirected(edges, *carry)` — both directions of a canonical edge
+    list as (src, dst, *carry);
+  * `endpoints(edges)` — one `v` column stacking `a` and `b`, the base
+    of every vertex-set and degree build;
+  * `relax(edges, state, agg, msg, rounds)` — the min/max relaxation
+    loop behind `bfs_hops`, `sssp_weighted`, `landmark_distances`, the
+    `graph_diameter_approx` sweeps and `dag_layers`.
+
+Triangle work uses **degree orientation**: each edge points from its
+lower-degree endpoint to its higher-degree one (ties by ID), so every
+triangle is found once, at its (deg, id)-minimum corner, and the
+closure work is O(m^1.5) regardless of hub skew (Suri & Vassilvitskii,
+"Counting Triangles and the Curse of the Last Reducer", WWW'11).
+`triangle_count`/`clustering_coefficients` close wedges by
+intersecting out-adjacency arrays per edge (`_closing_adjacency`);
+`ktruss_edges`/`local_bridges` enumerate wedges at the lowest-ranked
+corner (`_triangle_edges`). The `max_degree` cap drops super-node
+vertices entirely (documented, mirrored in the oracles) as a safety
+valve for adversarial skew. Orientation changes only the physical
+plan, so the DuckDB oracles need no semantic knob.
 """
 
 from __future__ import annotations
@@ -79,9 +79,7 @@ def capped_oriented(edges: DataFrame,
     orientation only needs *some* total order on vertices, so reusing
     them is free.
     """
-    deg = (edges.select(F.col("a").alias("v"))
-           .unionAll(edges.select(F.col("b").alias("v")))
-           .groupBy("v").agg(F.count("*").alias("deg")))
+    deg = _degrees(edges)
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("v").alias("b"), F.col("deg").alias("deg_b"))
     a_first = (F.col("deg_a") < F.col("deg_b")) | \
@@ -105,6 +103,97 @@ def copart_edges(lineitem: DataFrame,
             .select("a", "b"))
 
 
+def bidirected(edges: DataFrame, *carry: str) -> DataFrame:
+    """Both directions of a canonical (a, b) edge list: (src, dst,
+    *carry), one row per directed edge. The two legs each read
+    `edges`, and Spark does not share common subplans, so callers
+    checkpoint or persist `edges` first when it is expensive."""
+    return (edges.select(F.col("a").alias("src"), F.col("b").alias("dst"),
+                         *carry)
+            .unionAll(edges.select(F.col("b").alias("src"),
+                                   F.col("a").alias("dst"), *carry)))
+
+
+def endpoints(edges: DataFrame) -> DataFrame:
+    """One `v` column stacking both ends of every (a, b) edge: the
+    vertex set after a distinct, the degree table after a count."""
+    return (edges.select(F.col("a").alias("v"))
+            .unionAll(edges.select(F.col("b").alias("v"))))
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(v, deg) degree table of an (a, b) edge list."""
+    return endpoints(edges).groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
+
+
+_KEEP = {F.min: F.least, F.max: F.greatest}
+
+
+def relax(edges: DataFrame, state: DataFrame, agg, msg,
+          rounds: int) -> DataFrame:
+    """`rounds` synchronous min/max relaxation rounds over directed
+    (src, dst, ...) edges and a (v, *cols) vertex state:
+
+        nᵗ(v) = agg over edges u→v of msg(colᵗ(u))
+        colᵗ⁺¹(v) = least/greatest(colᵗ(v), nᵗ(v))
+
+    for every state column, with `agg` F.min (least) or F.max
+    (greatest) and `msg` mapping a state column to the message sent
+    along an edge (it may read edge columns, e.g. a weight `w`). A
+    vertex with no incoming message keeps its value: the left join
+    leaves nᵗ NULL there and Spark's least/greatest skip NULL. min and
+    max are aggregation-order independent, so every caller earns an
+    unrolled-SQL value oracle.
+
+    Per round only the |V|-row state moves: one keyed join of the edge
+    list (persisted and hash-partitioned on src by the callers that
+    reuse it) against the state, one map-side-combining aggregate per
+    destination, and a left join back, then a lazy localCheckpoint
+    that keeps plan depth O(1) per round. The join back hash-builds the
+    aggregated messages (`shuffle_hash`): the default sort-merge
+    re-sorted both |V|-row frames every round, and the hash build is the
+    same memory class as the round's own aggregation state (A/B on
+    bfs_hops at sf0.1: 6.7 → 6.0-6.4 s)."""
+    cols = [c for c in state.columns if c != "v"]
+    keep = _KEEP[agg]
+    for _ in range(rounds):
+        nbr = (edges.join(state, edges.src == state.v)
+               .groupBy("dst")
+               .agg(*[agg(msg(F.col(c))).alias(f"n_{c}") for c in cols]))
+        state = (state.join(nbr.hint("shuffle_hash"),
+                            state.v == nbr.dst, "left")
+                 .select("v", *[keep(c, f"n_{c}").alias(c) for c in cols])
+                 .localCheckpoint(eager=False))
+    return state
+
+
+def _from_source(verts: DataFrame, source: DataFrame,
+                 inf: int) -> DataFrame:
+    """(v, dist) seed of a single-source relaxation: 0 at the vertex
+    named by the 1-row frame `source` (column `s`), `inf` elsewhere."""
+    return (verts.crossJoin(F.broadcast(source))
+            .select("v", F.when(F.col("v") == F.col("s"), 0)
+                    .otherwise(F.lit(inf)).alias("dist")))
+
+
+def _closing_adjacency(oriented: DataFrame) -> DataFrame:
+    """Edge-iterator closure input: every oriented (src, dst) edge with
+    both endpoints' sorted out-adjacency arrays (na, nb) attached, so
+    |na ∩ nb| is the edge's triangle count. Out-adjacency is built once
+    (Σ|N⁺| = m entries) and keyed twice: JVM-side sorted-array work per
+    edge instead of materializing Σ outdeg² wedge rows through a shuffle
+    and semi-join (measured 1.7× faster at sf0.1, and the gap widens
+    with skew)."""
+    adj = (oriented.groupBy("src")
+           .agg(F.sort_array(F.collect_list("dst")).alias("nbrs")))
+    return (oriented
+            .join(adj.select(F.col("src"), F.col("nbrs").alias("na")),
+                  "src", "inner")
+            .join(adj.select(F.col("src").alias("dst"),
+                             F.col("nbrs").alias("nb")),
+                  "dst", "inner"))
+
+
 def triangle_count(lineitem: DataFrame,
                    max_degree: int = MAX_DEGREE) -> DataFrame:
     """Count triangles in the co-purchase part graph (single summary
@@ -114,22 +203,11 @@ def triangle_count(lineitem: DataFrame,
     (deg, id)-minimum corner."""
     edges = capped_oriented(copart_pairs(lineitem), max_degree) \
         .localCheckpoint(eager=False)
-    oriented = edges.select("src", "dst")
-    adj = (oriented.groupBy("src")
-           .agg(F.sort_array(F.collect_list("dst")).alias("nbrs")))
-    both = (oriented
-            .join(adj.select(F.col("src"), F.col("nbrs").alias("na")),
-                  "src", "inner")
-            .join(adj.select(F.col("src").alias("dst"),
-                             F.col("nbrs").alias("nb")),
-                  "dst", "inner"))
-    tri = (both.select(
+    tri = (_closing_adjacency(edges.select("src", "dst")).select(
         F.size(F.array_intersect("na", "nb")).alias("t"))
         .agg(F.coalesce(F.sum("t"), F.lit(0)).cast("bigint")
              .alias("n_triangles")))
-    nodes = (edges.select(F.col("a").alias("v"))
-             .unionAll(edges.select(F.col("b").alias("v")))
-             .agg(F.count_distinct("v").alias("n_nodes")))
+    nodes = endpoints(edges).agg(F.count_distinct("v").alias("n_nodes"))
     n_edges = edges.agg(F.count("*").alias("n_edges"))
     # three 1-row frames — the crossJoins are trivially broadcast
     return (nodes.crossJoin(F.broadcast(n_edges))
@@ -179,10 +257,7 @@ def pagerank(lineitem: DataFrame, n_iter: int = PR_ITERS,
         .localCheckpoint(eager=False)
     # ...and persist the bidirectional list too: it feeds the degree
     # aggregate AND the bi_d join input
-    bi = (edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-          .unionAll(edges.select(F.col("b").alias("src"),
-                                 F.col("a").alias("dst")))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    bi = bidirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
     outd = bi.groupBy("src").agg(F.count("*").alias("d"))
     # bidirectional edges with the sender's degree attached once —
     # reused by every iteration's scatter join. Hash-partitioned on the
@@ -230,10 +305,8 @@ def bfs_hops(lineitem: DataFrame, n_hops: int = 4,
     unbounded frontier loop is `dedup/components`' convergence-test
     pattern, demonstrated there).
 
-    Scale posture: the relaxation join is keyed on the persisted
-    hash-partitioned edge list (only the |V|-row distance table moves
-    per round), the per-round aggregate is a map-side-combining min,
-    and each round is lineage-truncated.
+    Scale posture: `relax` over the persisted hash-partitioned edge
+    list, so only the |V|-row distance table moves per round.
     """
     from pyspark import StorageLevel
 
@@ -241,33 +314,12 @@ def bfs_hops(lineitem: DataFrame, n_hops: int = 4,
     # subplan so the bidirectional union builds it once
     edges = copart_edges(lineitem, max_degree) \
         .localCheckpoint(eager=False)
-    bi = (edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-          .unionAll(edges.select(F.col("b").alias("src"),
-                                 F.col("a").alias("dst"))))
-    bi = bi.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
+    bi = (bidirected(edges).repartition("src")
+          .persist(StorageLevel.MEMORY_AND_DISK))
     verts = bi.select(F.col("src").alias("v")).distinct()
     source = verts.agg(F.min("v").alias("s"))
-    dists = (verts.crossJoin(F.broadcast(source))
-             .select("v", F.when(F.col("v") == F.col("s"), 0)
-                     .otherwise(F.lit(BFS_INF)).cast("int")
-                     .alias("dist")))
-    for _ in range(n_hops):
-        nbr = (bi.join(dists, bi.src == dists.v)
-               .groupBy("dst")
-               .agg((F.min("dist") + 1).alias("nd")))
-        # shuffle_hash on the per-round |V|-row message side (round-15,
-        # the components-loop lesson applied family-wide): sort-merge
-        # re-sorted both |V|-row frames every round; hash-building the
-        # aggregated messages is the same memory class as the round's
-        # own aggregation state (A/B at sf0.1: 6.7 → 6.0-6.4 s)
-        dists = (dists.join(nbr.hint("shuffle_hash"),
-                             dists.v == nbr.dst, "left")
-                 .select("v", F.least(
-                     F.col("dist"),
-                     F.coalesce(F.col("nd"), F.lit(BFS_INF)))
-                     .cast("int").alias("dist"))
-                 .localCheckpoint(eager=False))
-    return dists.select("v", "dist")
+    return relax(bi, _from_source(verts, source, BFS_INF), F.min,
+                 lambda c: c + 1, n_hops)
 
 
 def link_prediction(lineitem: DataFrame, min_common: int = 2,
@@ -304,10 +356,8 @@ def link_prediction(lineitem: DataFrame, min_common: int = 2,
 
     edges = copart_edges(lineitem, max_degree) \
         .localCheckpoint(eager=False)
-    bi = (edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-          .unionAll(edges.select(F.col("b").alias("u"),
-                                 F.col("a").alias("v")))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    bi = bidirected(edges).toDF("u", "v") \
+        .persist(StorageLevel.MEMORY_AND_DISK)
     deg = bi.groupBy("u").agg(F.count("*").alias("deg"))
     centers = (bi.join(deg.where(F.col("deg") <= max_center_degree)
                        .select("u"), "u", "left_semi"))
@@ -354,10 +404,7 @@ def personalized_pagerank(lineitem: DataFrame, n_iter: int = PR_ITERS,
 
     edges = copart_edges(lineitem, max_degree) \
         .localCheckpoint(eager=False)
-    bi = (edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-          .unionAll(edges.select(F.col("b").alias("src"),
-                                 F.col("a").alias("dst")))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    bi = bidirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
     outd = bi.groupBy("src").agg(F.count("*").alias("d"))
     bi_d = (bi.join(outd, "src")
             .repartition("src")
@@ -416,9 +463,7 @@ def kcore_membership(lineitem: DataFrame, k: int = 3,
     # the degree aggregate are both keyed on u, so the persisted
     # layout satisfies their clustering requirement and only the
     # |V|-row survivor frame moves per round
-    bi = (edges.select(F.col("a").alias("u"), F.col("b").alias("w"))
-          .unionAll(edges.select(F.col("b").alias("u"),
-                                 F.col("a").alias("w")))
+    bi = (bidirected(edges).toDF("u", "w")
           .repartition("u")
           .persist(StorageLevel.MEMORY_AND_DISK))
     verts = (bi.select(F.col("u").alias("v")).distinct()
@@ -440,27 +485,9 @@ def kcore_membership(lineitem: DataFrame, k: int = 3,
                     .alias("in_core")))
 
 
-#: Break-even for the frontier round's fixed overhead, in edge-scan
-#: equivalents. Measured A/B on local[32]: at m = 2.39M (sf0.1) the
-#: frontier tail ran 1.2-2.9 s/round vs 0.7-1.0 all-vertex, and at
-#: m = 24M (sf1) adaptive vs all-vertex was 113.2 vs 105.1 s — the
-#: frontier round still SCANS the full edge list twice for its
-#: semi-joins (only the window shrinks), so it is not O(touched) on
-#: an unindexed layout and never beat the stats-fixed all-vertex
-#: round at either tested scale. The default therefore keeps the
-#: switch off below 50M directed edges; the genuine 100 TB frontier
-#: shape additionally wants the bidirectional edge list BUCKETED on
-#: u so the changed-set semi-join becomes partition pruning instead
-#: of a scan (the ivf_index.py layout lesson applied to graphs) —
-#: pass a lower value to force the branch (the tests do).
-FRONTIER_OVERHEAD_EDGES = 50_000_000
-
-
 def kcore_decomposition(lineitem: DataFrame,
                         max_degree: int = MAX_DEGREE,
-                        max_rounds: int = 256,
-                        frontier_overhead_edges: int =
-                        FRONTIER_OVERHEAD_EDGES) -> DataFrame:
+                        max_rounds: int = 256) -> DataFrame:
     """Full k-core decomposition (per-vertex core number) of the
     capped co-purchase part graph, run to TRUE fixpoint — the
     peel-to-convergence upgrade of `kcore_membership`'s fixed-round
@@ -474,155 +501,76 @@ def kcore_decomposition(lineitem: DataFrame,
     that at least h neighbors have estimate >= h). The min against
     static deg (not against core_t) is enough for monotonicity: H_t is
     non-increasing in t because each neighbor estimate is, so
-    core_{t+1} = min(deg, H_t) <= min(deg, H_{t-1}) = core_t — which
-    makes the per-round estimate sum strictly decreasing until the
-    exact fixpoint, so ONE scalar-sum collect per round is a complete
-    convergence barrier (the dedup/components convention; sum equal =>
-    pointwise equal, since every update moves down or stays).
+    core_{t+1} = min(deg, H_t) <= min(deg, H_{t-1}) = core_t — every
+    update moves down or stays, so ONE changed-count collect per round
+    is a complete convergence barrier (zero changed IS the fixpoint).
 
     Shape per round: one keyed join of the persisted bidirectional
     edge list against the |V|-row estimate table, one partitioned
     window (rank neighbor estimates desc; h = max_j min(j, c_j) is
     tie-order invariant), one map-side-combined max aggregate, eager
     localCheckpoint lineage truncation. Nothing driver-side but the
-    1-value sum probe. Rounds needed = the graph's h-index convergence
+    1-value probe. Rounds needed = the graph's h-index convergence
     depth (9 at sf0.001, 18 at sf0.01, 37 at sf0.1 — erosion moves one
     hop per round along chains); `max_rounds` is a runaway backstop,
     not the semantics.
 
-    Adaptive frontier switch (round-13 verdict #4, upgrading the
-    round-10 measured note): a Pregel-style delta iteration
-    (recompute only N(changed)) is EXACT here — estimates are
-    monotone non-increasing, so H({core_t(w) : w ~ v}) can only move
-    when some neighbor's estimate moved, hence a vertex outside
-    N(changed_t) keeps its value verbatim — but hard-wiring it LOST
-    at bench scale (round-10 A/B: the frontier restriction adds ~3
-    extra shuffles per round, and while the changed set touches a
-    large edge fraction those barriers cost more than the all-vertex
-    window saves; 48 s → several minutes at sf0.1). The erosion
-    profile is front-loaded though: the round-14 trajectory at sf0.1
-    shows |changed| collapsing 19.5k → ≤80 by round 13 with ~24 tail
-    rounds of tens-of-vertices erosion — over 2/3 of the 51 s wall
-    time was all-vertex rounds windowing 2.39M edge rows to update
-    ~50 estimates. The cutover criterion is EDGES TOUCHED, not
-    vertex count (a first |changed| < m/10 attempt switched at round
-    0, because |changed| ≤ |V| ≪ m here, and ran the whole graph
-    through the frontier overhead): frontier runs next round iff
-    Σ deg(changed) < m/10, re-decided EVERY round in both directions
-    (the trajectory is non-monotone — changed bounces 1.3k → 6.2k at
-    rounds 9-12). One 3-value collect per round is both the
-    convergence barrier and the switch signal: new_core carries
-    (core, old, deg), so the aggregate yields (sum(core), n_changed,
-    Σ deg(changed)); the sum is strictly decreasing until fixpoint
-    (monotonicity, as before) and n_changed == 0 IS the fixpoint.
+    Negative result: a frontier round recomputing only N(changed) is
+    exact (estimates only fall), but on an unindexed layout it still
+    scans the edge list twice for its semi-joins and never beat the
+    all-vertex round: 1.2-2.9 vs 0.7-1.0 s/round at sf0.1 (60.4 vs
+    36.5 s total), 113.2 vs 105.1 s at sf1. It needs the edge list
+    bucketed on u.
 
-    Checkpoint-stats trap (found by thread-dumping the exponential
-    slowdown this switch first exhibited): `Dataset.localCheckpoint`
-    REWRITES the new LogicalRDD's stats from the checkpointed plan's
-    estimate, and the size-in-bytes visitor MULTIPLIES across joins
-    in BigInt. A round that references the previous checkpoint twice
-    (neighbor estimates + own-old-value join — both branches below
-    do) therefore SQUARES the carried estimate every round: the
-    BigInt's digit count doubles per round and by round ~20 the
-    driver spends tens of seconds inside BigInteger.multiply during
-    the stats rewrite (the single-reference r10-r13 loop only grew
-    the digits linearly, which is why it never hit this). Fix:
-    persist each round's frame so the checkpoint's stats rewrite
-    reads the InMemoryRelation's EXACT materialized byte count
-    instead of the compounded estimate — clean stats every round
-    (and better AQE broadcast choices: measured 1.2-1.5 s/round →
-    0.7-1.0 all-vertex). The previous round's cache entry is dropped
-    once its successor is materialized."""
+    Checkpoint-stats trap (found by thread-dumping an exponential
+    slowdown): `Dataset.localCheckpoint` REWRITES the new LogicalRDD's
+    stats from the checkpointed plan's estimate, and the size-in-bytes
+    visitor MULTIPLIES across joins in BigInt. A round that references
+    the previous checkpoint twice (neighbor estimates + own-old-value
+    join, as below) therefore SQUARES the carried estimate every
+    round: the BigInt's digit count doubles per round, and by round
+    ~20 each stats rewrite spends tens of seconds inside
+    BigInteger.multiply. Fix: persist each round's frame so the
+    checkpoint's stats rewrite reads the InMemoryRelation's EXACT
+    materialized byte count instead of the compounded estimate —
+    clean stats every round (and better AQE broadcast choices:
+    measured 1.2-1.5 s/round → 0.7-1.0). The previous round's cache
+    entry is dropped once its successor is materialized."""
     from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
     edges = copart_edges(lineitem, max_degree) \
         .localCheckpoint(eager=False)
-    bi = (edges.select(F.col("a").alias("u"), F.col("b").alias("w"))
-          .unionAll(edges.select(F.col("b").alias("u"),
-                                 F.col("a").alias("w")))
+    bi = (bidirected(edges).toDF("u", "w")
           .persist(StorageLevel.MEMORY_AND_DISK))
     deg = (bi.groupBy("u").agg(F.count("*").alias("deg"))
            .persist(StorageLevel.MEMORY_AND_DISK))
-    # one setup count: the frontier cutover threshold (~m/10 edges
-    # touched). Also forces bi's persist, which every round reuses.
-    m_edges = bi.count()
-    switch_below = max(1, m_edges // 10)
-    degv = deg.select(F.col("u").alias("v"), F.col("deg").alias("deg"))
     core = deg.select(F.col("u").alias("v"), F.col("deg").alias("core"))
     rn = Window.partitionBy("u").orderBy(F.col("nc").desc())
-    frontier = False
-    new_core = None
     prev_cache = None
     for _ in range(max_rounds):
-        if not frontier:
-            # all-vertex round: window every vertex's neighbor multiset
-            nbr = bi.join(core.select(F.col("v").alias("w"),
-                                      F.col("core").alias("nc")), "w")
-            h = (nbr.select("u", F.least(F.row_number().over(rn),
-                                         F.col("nc")).alias("m"))
-                 .groupBy("u").agg(F.max("m").alias("h")))
-            pre = (deg.join(h, "u")
-                   .join(core.select(F.col("v").alias("u"),
-                                     F.col("core").alias("old")),
-                         "u")
-                   .select(F.col("u").alias("v"),
-                           F.least("deg", "h").alias("core"),
-                           "old", "deg")
-                   .persist(StorageLevel.MEMORY_AND_DISK))
-            new_core = pre.localCheckpoint(eager=True)
-        else:
-            # frontier round: recompute only N(changed); everyone else
-            # keeps their estimate verbatim (exact by monotonicity).
-            # `changed` is derived from the PREVIOUS round's
-            # checkpointed frame — never stale.
-            changed = new_core.where(
-                F.col("core") < F.col("old")).select("v")
-            affected = (bi.join(changed.select(F.col("v").alias("w")),
-                                "w", "left_semi")
-                        .select(F.col("u").alias("v")).distinct())
-            nbr = (bi.join(affected.select(F.col("v").alias("u")), "u",
-                           "left_semi")
-                   .join(core.select(F.col("v").alias("w"),
-                                     F.col("core").alias("nc")), "w"))
-            h = (nbr.select("u", F.least(F.row_number().over(rn),
-                                         F.col("nc")).alias("m"))
-                 .groupBy("u").agg(F.max("m").alias("h")))
-            upd = (deg.join(h, "u")
-                   .join(core.select(F.col("v").alias("u"),
-                                     F.col("core").alias("old")), "u")
-                   .select(F.col("u").alias("v"),
-                           F.least("deg", "h").alias("core"),
-                           "old", "deg"))
-            pre = (core.join(affected, "v", "left_anti")
-                   .select("v", "core",
-                           F.col("core").alias("old"))
-                   .join(degv, "v")
-                   .select("v", "core", "old", "deg")
-                   .unionAll(upd)
-                   .persist(StorageLevel.MEMORY_AND_DISK))
-            new_core = pre.localCheckpoint(eager=True)
+        nbr = bi.join(core.select(F.col("v").alias("w"),
+                                  F.col("core").alias("nc")), "w")
+        h = (nbr.select("u", F.least(F.row_number().over(rn),
+                                     F.col("nc")).alias("m"))
+             .groupBy("u").agg(F.max("m").alias("h")))
+        pre = (deg.join(h, "u")
+               .join(core.select(F.col("v").alias("u"),
+                                 F.col("core").alias("old")), "u")
+               .select(F.col("u").alias("v"),
+                       F.least("deg", "h").alias("core"), "old")
+               .persist(StorageLevel.MEMORY_AND_DISK))
+        new_core = pre.localCheckpoint(eager=True)
         # drop the previous round's cache entry now that its
         # successor is materialized (checkpoint blocks keep the data)
         if prev_cache is not None:
             prev_cache.unpersist()
         prev_cache = pre
-        s, n_changed, changed_deg = new_core.agg(
-            F.sum("core"),
-            F.count(F.when(F.col("core") < F.col("old"), 1)),
-            F.coalesce(F.sum(F.when(F.col("core") < F.col("old"),
-                                    F.col("deg"))),
-                       F.lit(0))).collect()[0]
+        n_changed = new_core.where(
+            F.col("core") < F.col("old")).count()
         core = new_core.select("v", "core")
         if n_changed == 0:
             break
-        # Cost guard alongside the data-fraction rule: restricting
-        # the recompute only pays when the edges NOT touched exceed
-        # the frontier round's fixed overhead (see
-        # FRONTIER_OVERHEAD_EDGES for the measured break-even and
-        # why an unindexed layout caps the benefit).
-        frontier = (changed_deg < switch_below
-                    and m_edges - changed_deg > frontier_overhead_edges)
     return core.select("v", F.col("core").cast("bigint").alias("core"))
 
 
@@ -673,10 +621,7 @@ def copart_weighted_edges(lineitem: DataFrame,
                    F.col("y.l_partkey").alias("b"),
                    (F.col("x.q") + F.col("y.q")).alias("pw"))
            .groupBy("a", "b").agg(F.min("pw").cast("int").alias("w")))
-    deg = (raw.select(F.col("a").alias("v"))
-           .unionAll(raw.select(F.col("b").alias("v")))
-           .groupBy("v").agg(F.count("*").alias("deg"))
-           .where(F.col("deg") <= max_degree))
+    deg = _degrees(raw).where(F.col("deg") <= max_degree)
     return (raw
             .join(deg.select(F.col("v").alias("a")), "a", "left_semi")
             .join(deg.select(F.col("v").alias("b")), "b", "left_semi")
@@ -696,39 +641,33 @@ def sssp_weighted(lineitem: DataFrame, n_rounds: int = 4,
     (SSSP_INF + w) can never undercut a real distance and is clipped
     by the least() against the vertex's own bound.
 
-    Scale posture: identical to `bfs_hops` — the relaxation join is
-    keyed on the persisted hash-partitioned bidirectional edge list
-    (only the |V|-row distance table moves per round), the per-round
-    aggregate is a map-side-combining min, each round is
-    lineage-truncated, and rounds are the explicit cost bound.
+    Scale posture: identical to `bfs_hops` (`relax` over the persisted
+    hash-partitioned bidirectional edge list, weight carried), and
+    rounds are the explicit cost bound.
     """
     from pyspark import StorageLevel
 
     edges = copart_weighted_edges(lineitem, max_degree) \
         .localCheckpoint(eager=False)
-    bi = (edges.select(F.col("a").alias("src"), F.col("b").alias("dst"),
-                       "w")
-          .unionAll(edges.select(F.col("b").alias("src"),
-                                 F.col("a").alias("dst"), "w")))
-    bi = bi.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
+    bi = (bidirected(edges, "w").repartition("src")
+          .persist(StorageLevel.MEMORY_AND_DISK))
     verts = bi.select(F.col("src").alias("v")).distinct()
     source = verts.agg(F.min("v").alias("s"))
-    dists = (verts.crossJoin(F.broadcast(source))
-             .select("v", F.when(F.col("v") == F.col("s"), 0)
-                     .otherwise(F.lit(SSSP_INF)).cast("int")
-                     .alias("dist")))
-    for _ in range(n_rounds):
-        nbr = (bi.join(dists, bi.src == dists.v)
-               .groupBy("dst")
-               .agg(F.min(F.col("dist") + F.col("w")).alias("nd")))
-        dists = (dists.join(nbr.hint("shuffle_hash"),
-                             dists.v == nbr.dst, "left")
-                 .select("v", F.least(
-                     F.col("dist"),
-                     F.coalesce(F.col("nd"), F.lit(SSSP_INF)))
-                     .cast("int").alias("dist"))
-                 .localCheckpoint(eager=False))
-    return dists.select("v", "dist")
+    return relax(bi, _from_source(verts, source, SSSP_INF), F.min,
+                 lambda c: c + F.col("w"), n_rounds)
+
+
+def _planted_edges(lineitem: DataFrame, max_degree: int,
+                   block_mod: int | None, cross_mod: int) -> DataFrame:
+    """Capped canonical edges (a, b) of `label_propagation`'s graph:
+    with `block_mod` set, only same-residue pairs (a ≡ b mod block_mod)
+    plus the thin (a + b) ≡ 0 mod `cross_mod` cross slice survive."""
+    pairs = copart_pairs(lineitem)
+    if block_mod is not None:
+        pairs = pairs.where(
+            (F.col("a") % block_mod == F.col("b") % block_mod)
+            | ((F.col("a") + F.col("b")) % cross_mod == 0))
+    return capped_oriented(pairs, max_degree).select("a", "b")
 
 
 def label_propagation(lineitem: DataFrame, n_rounds: int = 3,
@@ -769,16 +708,9 @@ def label_propagation(lineitem: DataFrame, n_rounds: int = 3,
     from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
-    pairs = copart_pairs(lineitem)
-    if block_mod is not None:
-        pairs = pairs.where(
-            (F.col("a") % block_mod == F.col("b") % block_mod)
-            | ((F.col("a") + F.col("b")) % cross_mod == 0))
-    edges = (capped_oriented(pairs, max_degree).select("a", "b")
-             .localCheckpoint(eager=False))
-    bi = (edges.select(F.col("a").alias("u"), F.col("b").alias("w"))
-          .unionAll(edges.select(F.col("b").alias("u"),
-                                 F.col("a").alias("w")))
+    edges = _planted_edges(lineitem, max_degree, block_mod, cross_mod) \
+        .localCheckpoint(eager=False)
+    bi = (bidirected(edges).toDF("u", "w")
           .repartition("u").persist(StorageLevel.MEMORY_AND_DISK))
     labels = (bi.select(F.col("u").alias("v")).distinct()
               .select("v", F.col("v").alias("label")))
@@ -852,13 +784,8 @@ def lpa_modularity(lineitem: DataFrame, n_rounds: int = 3,
     labels = label_propagation(lineitem, n_rounds, max_degree,
                                block_mod, cross_mod) \
         .localCheckpoint(eager=False)
-    pairs = copart_pairs(lineitem)
-    if block_mod is not None:
-        pairs = pairs.where(
-            (F.col("a") % block_mod == F.col("b") % block_mod)
-            | ((F.col("a") + F.col("b")) % cross_mod == 0))
-    edges = (capped_oriented(pairs, max_degree).select("a", "b")
-             .localCheckpoint(eager=False))
+    edges = _planted_edges(lineitem, max_degree, block_mod, cross_mod) \
+        .localCheckpoint(eager=False)
     m = edges.agg(F.count("*").cast("bigint").alias("m"))
     la = labels.select(F.col("v").alias("a"), F.col("label").alias("lab_a"))
     lb = labels.select(F.col("v").alias("b"), F.col("label").alias("lab_b"))
@@ -866,10 +793,7 @@ def lpa_modularity(lineitem: DataFrame, n_rounds: int = 3,
              .where(F.col("lab_a") == F.col("lab_b"))
              .groupBy(F.col("lab_a").alias("label"))
              .agg(F.count("*").cast("bigint").alias("intra_edges")))
-    bi = (edges.select(F.col("a").alias("u"))
-          .unionAll(edges.select(F.col("b").alias("u"))))
-    deg = bi.groupBy("u").agg(F.count("*").cast("bigint").alias("deg"))
-    dmass = (deg.join(labels.select(F.col("v").alias("u"), "label"), "u")
+    dmass = (_degrees(edges).join(labels, "v")
              .groupBy("label")
              .agg(F.sum("deg").cast("bigint").alias("degree_sum"),
                   F.count("*").cast("bigint").alias("n_members")))
@@ -912,10 +836,8 @@ def neighbor_agg_2hop(lineitem: DataFrame, part: DataFrame,
     from pyspark import StorageLevel
 
     edges = copart_edges(lineitem, max_degree).localCheckpoint(eager=False)
-    bi = (edges.select(F.col("a").alias("u"), F.col("b").alias("w"))
-          .unionAll(edges.select(F.col("b").alias("u"),
-                                 F.col("a").alias("w")))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    bi = bidirected(edges).toDF("u", "w") \
+        .persist(StorageLevel.MEMORY_AND_DISK)
     feat = (bi.select(F.col("u").alias("v")).distinct()
             .join(part.select(F.col("p_partkey").alias("v"),
                               F.round(F.col("p_retailprice") * 100)
@@ -957,35 +879,22 @@ def landmark_distances(lineitem: DataFrame, n_hops: int = 4,
     from pyspark import StorageLevel
 
     edges = copart_edges(lineitem, max_degree).localCheckpoint(eager=False)
-    bi = (edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-          .unionAll(edges.select(F.col("b").alias("src"),
-                                 F.col("a").alias("dst"))))
-    bi = bi.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
+    bi = (bidirected(edges).repartition("src")
+          .persist(StorageLevel.MEMORY_AND_DISK))
     verts = bi.select(F.col("src").alias("v")).distinct()
     lm = (verts.orderBy("v").limit(n_landmarks)
           .agg(F.sort_array(F.collect_set("v")).alias("ls")))
     cols = [f"d{k}" for k in range(1, n_landmarks + 1)]
-    dists = verts.crossJoin(F.broadcast(lm)).select(
+    seed = verts.crossJoin(F.broadcast(lm)).select(
         "v", *[F.when(F.col("v") == F.element_at("ls", k), 0)
-               .otherwise(F.lit(LM_INF)).cast("int").alias(f"d{k}")
-               for k in range(1, n_landmarks + 1)])
-    for _ in range(n_hops):
-        nbr = (bi.join(dists, bi.src == dists.v)
-               .groupBy("dst")
-               .agg(*[(F.min(c) + 1).alias(f"n{c}") for c in cols]))
-        dists = (dists.join(nbr.hint("shuffle_hash"),
-                             dists.v == nbr.dst, "left")
-                 .select("v", *[F.least(
-                     F.col(c), F.coalesce(F.col(f"n{c}"),
-                                          F.lit(LM_INF)))
-                     .cast("int").alias(c) for c in cols])
-                 .localCheckpoint(eager=False))
+               .otherwise(F.lit(LM_INF)).alias(c)
+               for k, c in enumerate(cols, start=1)])
+    dists = relax(bi, seed, F.min, lambda c: c + 1, n_hops)
     best = F.least(*[F.col(c) for c in cols])
     nearest = F.when(best >= LM_INF, F.lit(0))
     for k, c in enumerate(cols, start=1):
         nearest = nearest.when(F.col(c) == best, F.lit(k))
-    return dists.select("v", *cols,
-                        nearest.cast("int").alias("nearest"))
+    return dists.select("v", *cols, nearest.alias("nearest"))
 
 
 def clustering_coefficients(lineitem: DataFrame,
@@ -1009,15 +918,7 @@ def clustering_coefficients(lineitem: DataFrame,
     |V|-row degree join — no new corpus-sized shuffle."""
     edges = capped_oriented(copart_pairs(lineitem), max_degree) \
         .localCheckpoint(eager=False)
-    oriented = edges.select("src", "dst")
-    adj = (oriented.groupBy("src")
-           .agg(F.sort_array(F.collect_list("dst")).alias("nbrs")))
-    tri_inst = (oriented
-                .join(adj.select(F.col("src"), F.col("nbrs").alias("na")),
-                      "src", "inner")
-                .join(adj.select(F.col("src").alias("dst"),
-                                 F.col("nbrs").alias("nb")),
-                      "dst", "inner")
+    tri_inst = (_closing_adjacency(edges.select("src", "dst"))
                 .select("src", "dst",
                         F.explode(F.array_intersect("na", "nb"))
                         .alias("w")))
@@ -1025,9 +926,7 @@ def clustering_coefficients(lineitem: DataFrame,
                .unionAll(tri_inst.select(F.col("dst").alias("v")))
                .unionAll(tri_inst.select(F.col("w").alias("v")))
                .groupBy("v").agg(F.count(F.lit(1)).alias("t")))
-    deg = (edges.select(F.col("a").alias("v"))
-           .unionAll(edges.select(F.col("b").alias("v")))
-           .groupBy("v").agg(F.count(F.lit(1)).alias("deg")))
+    deg = _degrees(edges)
     cc = (F.lit(2).cast("double") * F.col("t").cast("double")
           / (F.col("deg").cast("double")
              * (F.col("deg") - 1).cast("double")))
@@ -1058,30 +957,18 @@ def dag_layers(lineitem: DataFrame,
     primitive (scheduling, lineage ordering) next to bfs_hops'
     shortest-path form.
 
-    Per round only the |V|-row layer frame moves: incoming-max is a
-    keyed join edges⋈state on the source, a map-side-combining max
-    per destination, and a left join back — the persisted-edge
-    bfs_hops shape with localCheckpoint truncation. All arithmetic
-    is small integers; the oracle unrolls the identical rounds.
+    Per round only the |V|-row layer frame moves: `relax` with a max
+    aggregate over the a → b edges. All arithmetic is small integers;
+    the oracle unrolls the identical rounds.
 
     Output: one row per layer (depth, vertex count, min vertex) —
     bounded by n_rounds + 1 rows."""
     edges = copart_pairs(lineitem).localCheckpoint(eager=False)
-    verts = (edges.select(F.col("a").alias("v"))
-             .unionAll(edges.select(F.col("b").alias("v")))
-             .distinct())
+    verts = endpoints(edges).distinct()
     state = verts.select("v", F.lit(0).alias("lay")) \
         .localCheckpoint(eager=False)
-    for _ in range(n_rounds):
-        incoming = (edges.join(state.withColumnRenamed("v", "a"), "a")
-                    .groupBy(F.col("b").alias("v"))
-                    .agg((F.max("lay") + 1).alias("ml")))
-        state = (state.join(incoming.hint("shuffle_hash"), "v", "left")
-                 .select("v", F.greatest(F.col("lay"),
-                                         F.coalesce(F.col("ml"),
-                                                    F.lit(0)))
-                         .alias("lay"))
-                 .localCheckpoint(eager=False))
+    state = relax(edges.toDF("src", "dst"), state, F.max,
+                  lambda c: c + 1, n_rounds)
     return (state.groupBy(F.col("lay").alias("layer"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_vertices"),
                  F.min("v").cast("bigint").alias("min_vertex")))
@@ -1139,9 +1026,7 @@ def boruvka_msf(lineitem: DataFrame, n_rounds: int = BORUVKA_ROUNDS,
     # recorded so round 16 doesn't retry it.
     edges = copart_weighted_edges(lineitem, max_degree) \
         .localCheckpoint(eager=False)
-    comp = (edges.select(F.col("a").alias("v"))
-            .unionAll(edges.select(F.col("b").alias("v")))
-            .distinct()
+    comp = (endpoints(edges).distinct()
             .select("v", F.col("v").alias("c"))
             .localCheckpoint(eager=False))
     round_stats = []
@@ -1169,10 +1054,9 @@ def boruvka_msf(lineitem: DataFrame, n_rounds: int = BORUVKA_ROUNDS,
                       .alias("weight_added")))
         # selection graph (bidirectional) is FIXED for the inner
         # loop; only the |C|-row label frame moves per round
-        gedges = (sel.select(F.col("cc").alias("gc"),
-                             F.col("oc").alias("gn"))
-                  .unionAll(sel.select(F.col("oc").alias("gc"),
-                                       F.col("cc").alias("gn")))
+        gedges = (bidirected(sel.select(F.col("cc").alias("a"),
+                                        F.col("oc").alias("b")))
+                  .toDF("gc", "gn")
                   .distinct()
                   .localCheckpoint(eager=False))
         label = (comp.select(F.col("c").alias("cc")).distinct()
@@ -1229,30 +1113,14 @@ def graph_diameter_approx(lineitem: DataFrame, n_hops: int = 4,
 
     edges = copart_edges(lineitem, max_degree) \
         .localCheckpoint(eager=False)
-    bi = (edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-          .unionAll(edges.select(F.col("b").alias("src"),
-                                 F.col("a").alias("dst"))))
-    bi = bi.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
+    bi = (bidirected(edges).repartition("src")
+          .persist(StorageLevel.MEMORY_AND_DISK))
     verts = bi.select(F.col("src").alias("v")).distinct() \
         .localCheckpoint(eager=False)
 
     def sweep(source):  # source: broadcastable 1-row frame with col s
-        dists = (verts.crossJoin(F.broadcast(source))
-                 .select("v", F.when(F.col("v") == F.col("s"), 0)
-                         .otherwise(F.lit(BFS_INF)).cast("int")
-                         .alias("dist")))
-        for _ in range(n_hops):
-            nbr = (bi.join(dists, bi.src == dists.v)
-                   .groupBy("dst")
-                   .agg((F.min("dist") + 1).alias("nd")))
-            dists = (dists.join(nbr.hint("shuffle_hash"),
-                             dists.v == nbr.dst, "left")
-                     .select("v", F.least(
-                         F.col("dist"),
-                         F.coalesce(F.col("nd"), F.lit(BFS_INF)))
-                         .cast("int").alias("dist"))
-                     .localCheckpoint(eager=False))
-        return dists
+        return relax(bi, _from_source(verts, source, BFS_INF), F.min,
+                     lambda c: c + 1, n_hops)
 
     s1 = verts.agg(F.min("v").alias("s"))
     d1 = sweep(s1)
@@ -1376,9 +1244,7 @@ def luby_mis(lineitem: DataFrame,
     key = (F.conv(F.substring(F.md5(F.col("v").cast("string")), 1, 7),
                   16, 10).cast("bigint")
            * F.lit(_MIS_SHIFT) + F.col("v"))
-    sym = (edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .localCheckpoint(eager=True))
+    sym = bidirected(edges).toDF("a", "b").localCheckpoint(eager=True)
     und = (sym.select(F.col("a").alias("v")).distinct()
            .withColumn("k", key)
            .localCheckpoint(eager=True))
@@ -1466,9 +1332,7 @@ def wl_fingerprints(lineitem: DataFrame,
     # drops the partitioning anyway (LogicalRDD, plan-verified on the
     # components loop) and the per-round join broadcasts the label
     # side, so the exchange bought nothing. Left out.
-    sym = (edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .localCheckpoint(eager=False))
+    sym = bidirected(edges).toDF("a", "b").localCheckpoint(eager=False)
     lbl = (sym.select(F.col("a").alias("v")).distinct()
            .withColumn("lbl", F.lit("1"))
            .localCheckpoint(eager=False))
@@ -1517,6 +1381,60 @@ KTRUSS_K = 4
 KTRUSS_ROUNDS = 3
 
 
+def _rank_oriented(edges: DataFrame, deg: DataFrame) -> DataFrame:
+    """(u, w, rw): each canonical edge oriented from its lower-ranked
+    endpoint u to w, under the total order rank = deg·2³² + id (unique
+    per vertex), with w's rank rw. Wedges at u are pairs of its
+    out-neighbors, so each triangle has exactly one wedge: the one at
+    its lowest-ranked corner."""
+    rank = deg.select(
+        "v", (F.col("deg") * F.lit(1 << 32) + F.col("v")).alias("rk"))
+    a_low = F.col("ra") < F.col("rb")
+    return (edges
+            .join(rank.select(F.col("v").alias("a"),
+                              F.col("rk").alias("ra")), "a")
+            .join(rank.select(F.col("v").alias("b"),
+                              F.col("rk").alias("rb")), "b")
+            .select(F.when(a_low, F.col("a")).otherwise(F.col("b"))
+                    .alias("u"),
+                    F.when(a_low, F.col("b")).otherwise(F.col("a"))
+                    .alias("w"),
+                    F.greatest("ra", "rb").alias("rw")))
+
+
+def _triangle_edges(d: DataFrame) -> DataFrame:
+    """Canonical (a, b) rows, three per triangle (one per triangle
+    edge), from a `_rank_oriented` frame: out-neighbor pairs x < y
+    (by rank) of each u, closed against the oriented edge x → y.
+    Join work is Σ_u outdeg(u)² = O(m^1.5).
+
+    The wedge self-join width is pinned to the deploy-configured
+    shuffle width: the oriented frame is tiny in BYTES, so AQE
+    coalesced the self-join on u to one partition and the wedge
+    fan-out ran on one core (measured 22.6 s single-task at sf0.1 in
+    ktruss_edges, 22.9 s of local_bridges' 29.8 s wall). Repartitioning
+    both legs on the join key replaces the join's own exchange rather
+    than adding one."""
+    n_shuffle = int(d.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions"))
+    w1 = (d.select("u", F.col("w").alias("x"), F.col("rw").alias("rx"))
+          .repartition(n_shuffle, F.col("u")))
+    w2 = (d.select("u", F.col("w").alias("y"), F.col("rw").alias("ry"))
+          .repartition(n_shuffle, F.col("u")))
+    closing = d.select(F.col("u").alias("x"), F.col("w").alias("y"))
+    tri = (w1.join(w2, "u")
+           .where(F.col("rx") < F.col("ry"))
+           .join(closing, ["x", "y"]))
+    return (tri.select(F.explode(F.array(
+        F.struct(F.least("u", "x").alias("a"),
+                 F.greatest("u", "x").alias("b")),
+        F.struct(F.least("u", "y").alias("a"),
+                 F.greatest("u", "y").alias("b")),
+        F.struct(F.least("x", "y").alias("a"),
+                 F.greatest("x", "y").alias("b")))).alias("e"))
+        .select("e.a", "e.b"))
+
+
 def ktruss_edges(lineitem: DataFrame, k: int = KTRUSS_K,
                  rounds: int = KTRUSS_ROUNDS) -> DataFrame:
     """k-truss of the capped co-purchase graph (Cohen 2008): the
@@ -1551,53 +1469,9 @@ def ktruss_edges(lineitem: DataFrame, k: int = KTRUSS_K,
     edges = copart_edges(lineitem).localCheckpoint(eager=True)
     prev_n = None
     for _ in range(rounds):
-        deg = (edges.select(F.col("a").alias("v"))
-               .unionAll(edges.select(F.col("b").alias("v")))
-               .groupBy("v").agg(F.count(F.lit(1)).alias("dg")))
-        # total order: rank = deg·2³² + id (unique per vertex)
-        rank = deg.select(
-            "v", (F.col("dg") * F.lit(1 << 32) + F.col("v"))
-            .alias("rk"))
-        d = (edges
-             .join(rank.select(F.col("v").alias("a"),
-                               F.col("rk").alias("ra")), "a")
-             .join(rank.select(F.col("v").alias("b"),
-                               F.col("rk").alias("rb")), "b")
-             .select(F.when(F.col("ra") < F.col("rb"), F.col("a"))
-                     .otherwise(F.col("b")).alias("u"),
-                     F.when(F.col("ra") < F.col("rb"), F.col("b"))
-                     .otherwise(F.col("a")).alias("w"),
-                     F.greatest("ra", "rb").alias("rw"))
-             .localCheckpoint(eager=True))
-        # pinned wedge-join width (round-14): the oriented edge frame
-        # is tiny in BYTES, so AQE coalesces the self-join on u to one
-        # partition and the Σ outdeg² wedge fan-out computes on one
-        # core (measured 22.6 s single-task at sf0.1); repartitioning
-        # both legs on the join key at the deploy-configured shuffle
-        # width replaces the join's own exchange rather than adding one
-        n_shuffle = int(lineitem.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-        w1 = (d.select("u", F.col("w").alias("x"),
-                       F.col("rw").alias("rx"))
-              .repartition(n_shuffle, F.col("u")))
-        w2 = (d.select("u", F.col("w").alias("y"),
-                       F.col("rw").alias("ry"))
-              .repartition(n_shuffle, F.col("u")))
-        closing = d.select(F.col("u").alias("x"),
-                           F.col("w").alias("y"))
-        tri = (w1.join(w2, "u")
-               .where(F.col("rx") < F.col("ry"))
-               .join(closing, ["x", "y"]))
-        supp = (tri.select(F.explode(F.array(
-                    F.struct(F.least("u", "x").alias("a"),
-                             F.greatest("u", "x").alias("b")),
-                    F.struct(F.least("u", "y").alias("a"),
-                             F.greatest("u", "y").alias("b")),
-                    F.struct(F.least("x", "y").alias("a"),
-                             F.greatest("x", "y").alias("b"))))
-                    .alias("e"))
-                .select("e.a", "e.b")
-                .groupBy("a", "b")
+        d = _rank_oriented(edges, _degrees(edges)) \
+            .localCheckpoint(eager=True)
+        supp = (_triangle_edges(d).groupBy("a", "b")
                 .agg(F.count(F.lit(1)).alias("sup")))
         edges = (edges.join(supp, ["a", "b"])
                  .where(F.col("sup") >= k - 2)
@@ -1630,11 +1504,8 @@ def degree_assortativity(lineitem: DataFrame) -> DataFrame:
     onto the edge list, one global aggregate. Output: (n_edges,
     mean_deg — 2m/n 2dp, r)."""
     edges = copart_edges(lineitem)
-    deg = (edges.select(F.col("a").alias("v"))
-           .unionAll(edges.select(F.col("b").alias("v")))
-           .groupBy("v").agg(F.count(F.lit(1)).alias("deg")))
-    sym = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    deg = _degrees(edges)
+    sym = bidirected(edges).toDF("a", "b")
     d38 = "decimal(38,0)"
     j = (sym.join(deg.select(F.col("v").alias("a"),
                              F.col("deg").alias("dx")), "a")
@@ -1739,13 +1610,8 @@ def hub_removal_impact(lineitem: DataFrame,
     from cloud_native_mapreduce_spark.dedup.components import (
         connected_components)
     edges = copart_edges(lineitem).localCheckpoint(eager=True)
-    verts = (edges.select(F.col("a").alias("v"))
-             .unionAll(edges.select(F.col("b").alias("v")))
-             .distinct()
-             .localCheckpoint(eager=False))
-    deg = (edges.select(F.col("a").alias("v"))
-           .unionAll(edges.select(F.col("b").alias("v")))
-           .groupBy("v").agg(F.count(F.lit(1)).alias("deg")))
+    verts = endpoints(edges).distinct().localCheckpoint(eager=False)
+    deg = _degrees(edges)
     hubs = (deg.orderBy(F.col("deg").desc(), F.col("v"))
             .limit(k).select("v")
             .localCheckpoint(eager=True))
@@ -1758,7 +1624,7 @@ def hub_removal_impact(lineitem: DataFrame,
             nodes.select(F.col("v").alias("doc_id")),
             es.select(F.col("a").alias("doc_a"),
                       F.col("b").alias("doc_b")),
-            edges_canonical=True)
+            edges_canonical=True, hint_labels=True)
         sizes = comp.groupBy("comp").agg(
             F.count(F.lit(1)).alias("sz"))
         return sizes.agg(
@@ -1807,10 +1673,7 @@ def rich_club_coefficients(lineitem: DataFrame,
     phi)."""
     spark = lineitem.sparkSession
     edges = copart_edges(lineitem).localCheckpoint(eager=False)
-    deg = (edges.select(F.col("a").alias("v"))
-           .unionAll(edges.select(F.col("b").alias("v")))
-           .groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
-           .localCheckpoint(eager=False))
+    deg = _degrees(edges).localCheckpoint(eager=False)
     kf = spark.createDataFrame([(k,) for k in ks], "k int")
     members = (deg.crossJoin(F.broadcast(kf))
                .where(F.col("deg") > F.col("k"))
@@ -1855,48 +1718,14 @@ def local_bridges(lineitem: DataFrame) -> DataFrame:
     endpoint is degree-1 (a pendant edge — trivially a local
     bridge). Output: (a, b, deg_a, deg_b, pendant)."""
     edges = copart_edges(lineitem).localCheckpoint(eager=False)
-    deg = (edges.select(F.col("a").alias("v"))
-           .unionAll(edges.select(F.col("b").alias("v")))
-           .groupBy("v").agg(F.count(F.lit(1)).alias("dg")))
-    rank = deg.select(
-        "v", (F.col("dg") * F.lit(1 << 32) + F.col("v")).alias("rk"))
-    d = (edges
-         .join(rank.select(F.col("v").alias("a"),
-                           F.col("rk").alias("ra")), "a")
-         .join(rank.select(F.col("v").alias("b"),
-                           F.col("rk").alias("rb")), "b")
-         .select(F.when(F.col("ra") < F.col("rb"), F.col("a"))
-                 .otherwise(F.col("b")).alias("u"),
-                 F.when(F.col("ra") < F.col("rb"), F.col("b"))
-                 .otherwise(F.col("a")).alias("w"),
-                 F.greatest("ra", "rb").alias("rw"))
-         .localCheckpoint(eager=False))
-    # pinned wedge-join width — the ktruss_edges rationale verbatim
-    # (AQE coalesces the byte-tiny self-join input to one partition and
-    # the wedge fan-out ran single-task, 22.9 s of the 29.8 s wall)
-    n_shuffle = int(lineitem.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"))
-    w1 = (d.select("u", F.col("w").alias("x"), F.col("rw").alias("rx"))
-          .repartition(n_shuffle, F.col("u")))
-    w2 = (d.select("u", F.col("w").alias("y"), F.col("rw").alias("ry"))
-          .repartition(n_shuffle, F.col("u")))
-    closing = d.select(F.col("u").alias("x"), F.col("w").alias("y"))
-    tri = (w1.join(w2, "u")
-           .where(F.col("rx") < F.col("ry"))
-           .join(closing, ["x", "y"]))
-    supported = (tri.select(F.explode(F.array(
-        F.struct(F.least("u", "x").alias("a"),
-                 F.greatest("u", "x").alias("b")),
-        F.struct(F.least("u", "y").alias("a"),
-                 F.greatest("u", "y").alias("b")),
-        F.struct(F.least("x", "y").alias("a"),
-                 F.greatest("x", "y").alias("b")))).alias("e"))
-        .select("e.a", "e.b").distinct())
+    deg = _degrees(edges)
+    d = _rank_oriented(edges, deg).localCheckpoint(eager=False)
+    supported = _triangle_edges(d).distinct()
     return (edges.join(supported, ["a", "b"], "left_anti")
             .join(deg.select(F.col("v").alias("a"),
-                             F.col("dg").alias("deg_a")), "a")
+                             F.col("deg").alias("deg_a")), "a")
             .join(deg.select(F.col("v").alias("b"),
-                             F.col("dg").alias("deg_b")), "b")
+                             F.col("deg").alias("deg_b")), "b")
             .select(F.col("a").cast("bigint").alias("a"),
                     F.col("b").cast("bigint").alias("b"),
                     F.col("deg_a").cast("bigint").alias("deg_a"),

@@ -226,7 +226,7 @@ def golden_record(customer: DataFrame,
     comps = connected_components(
         members.select("rec_key"), matches, node_col="rec_key",
         src_col="clean_key", dst_col="dirty_key",
-        edges_canonical=True)
+        edges_canonical=True, hint_labels=True)
     m = members.join(comps, "rec_key").localCheckpoint(eager=False)
 
     w_name = Window.partitionBy("comp").orderBy(

@@ -264,8 +264,7 @@ def dbscan_grid(customer: DataFrame,
     # shape the components doc reserves the shortcut step for.
     comp = connected_components(
         cores.select(F.col("k").alias("doc_id")),
-        star.unionByName(cross), pointer_jumping=True,
-        hint_labels=False)
+        star.unionByName(cross), pointer_jumping=True)
     comp = comp.select(F.col("doc_id").alias("k"),
                        F.col("comp").alias("cluster"))
     border = (neighbor_pairs().select("k", "bk")

@@ -2139,11 +2139,7 @@ def q_dedup_components(spark, sf_dir):
     edges = (ngram_jaccard.near_duplicates(docs, threshold=0.4,
                                            max_df=_NGRAM_MAX_DF)
              .select("doc_a", "doc_b"))
-    # hint_labels=False: the near-dup pair graph is tiny, so AQE's
-    # label-side broadcast beats the forced shuffle-hash build
-    # (round-15 alternating A/B; see connected_components)
-    return components.connected_components(docs.select("doc_id"), edges,
-                                           hint_labels=False)
+    return components.connected_components(docs.select("doc_id"), edges)
 
 
 # ---------------------------------------------------------------------------

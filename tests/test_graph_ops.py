@@ -1,4 +1,4 @@
-"""Hand-built-graph invariants for the round-9 graph operators.
+"""Hand-built-graph invariants for the graph operators and kernels.
 
 The registry oracles value-check these operators on the derived
 co-purchase graph; these tests pin their SEMANTICS on tiny graphs
@@ -354,3 +354,132 @@ def test_boruvka_matches_full_mst_weight_on_corpus(spark):
     rows = G.boruvka_msf(li).collect()
     assert sum(r["weight_added"] for r in rows) == want_w
     assert sum(r["edges_added"] for r in rows) == want_e
+
+
+def test_kcore_full_path_plus_clique_fixpoint(spark):
+    """A long path erodes one hop per round, so the loop runs many
+    rounds with tiny change sets; core numbers must reach the exact
+    fixpoint (path graph: all cores = 1, plus a 4-clique at the end
+    staying at 3)."""
+    from cloud_native_mapreduce_spark.operators.graph import (
+        kcore_decomposition)
+    # lineitem co-purchase rows: orders buying part pairs
+    edges = [(i, i + 1) for i in range(20)]          # path 0..20
+    edges += [(100, 101), (100, 102), (100, 103),
+              (101, 102), (101, 103), (102, 103)]    # 4-clique
+    rows = []
+    for o, (a, b) in enumerate(edges):
+        rows += [(o, a, 1.0), (o, b, 1.0)]
+    li = spark.createDataFrame(
+        rows, "l_orderkey long, l_partkey long, l_quantity double")
+    got = {r.v: r.core for r in kcore_decomposition(li).collect()}
+    want = {v: 1 for v in range(21)}
+    want.update({100: 3, 101: 3, 102: 3, 103: 3})
+    assert got == want
+
+
+def _relax_edges(spark):
+    """Directed chain 1→2→3 feeding a diamond 3→{4, 5}→6 with edge
+    weights `w`; vertex 1 has no in-edge and vertex 7 no edge at all."""
+    return spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 2), (3, 4, 5), (3, 5, 1), (4, 6, 1),
+         (5, 6, 10)], "src long, dst long, w int")
+
+
+def _relax_state(spark, cols, seed):
+    """(v, *cols) int state over vertices 1..7, seed(v) -> values."""
+    return spark.createDataFrame(
+        [(v, *seed(v)) for v in range(1, 8)],
+        "v long, " + ", ".join(f"{c} int" for c in cols))
+
+
+def test_relax_min_weighted_two_columns(spark):
+    """Bellman-Ford under F.min with msg = c + w, two sources relaxed
+    at once (x from 1, y from 3). Vertex 1 gets no message and vertex 7
+    none at all: both keep their own value, because the join back
+    leaves the message NULL and least() skips NULL."""
+    from cloud_native_mapreduce_spark.operators.graph import relax
+    inf = 100
+    seed = _relax_state(spark, ("x", "y"), lambda v: (
+        0 if v == 1 else inf, 0 if v == 3 else inf))
+    got = {r.v: (r.x, r.y) for r in
+           relax(_relax_edges(spark), seed, F.min,
+                 lambda c: c + F.col("w"), 4)
+           .collect()}
+    assert got == {1: (0, inf), 2: (1, inf), 3: (3, 0), 4: (8, 5),
+                   5: (4, 1), 6: (9, 6), 7: (inf, inf)}
+
+
+def test_relax_max_longest_path(spark):
+    """Longest weighted path under F.max with msg = c + w: vertex 1
+    (no in-edge) keeps its seed 3 and isolated vertex 7 keeps 42 via
+    greatest()'s NULL skip; 6 takes the heavier diamond leg 1→2→3→5→6
+    (3 + 1 + 2 + 1 + 10 = 17)."""
+    from cloud_native_mapreduce_spark.operators.graph import relax
+    seed = _relax_state(spark, ("x",),
+                        lambda v: ({1: 3, 7: 42}.get(v, 0),))
+    got = {r.v: r.x for r in
+           relax(_relax_edges(spark), seed, F.max,
+                 lambda c: c + F.col("w"), 4)
+           .collect()}
+    assert got == {1: 3, 2: 4, 3: 6, 4: 11, 5: 7, 6: 17, 7: 42}
+
+
+class TestKtruss:
+    def test_hand_peel(self, spark):
+        """Two triangles sharing an edge (4-clique minus one edge)
+        plus a pendant path: the 4-truss (support >= 2) keeps ONLY
+        the shared edge's... — hand-walk: K4 minus edge {1-2, 1-3,
+        1-4, 2-3, 2-4}: edges 1-2 (common nb 3,4: sup 2), 1-3
+        (common 2: sup 1), 1-4 (common 2: 1), 2-3 (common 1: 1),
+        2-4 (common 1: 1). Round 1 keeps only 1-2; round 2 drops it
+        (no triangles left) -> empty truss. A full K4 survives
+        entirely (every edge sup 2)."""
+        from cloud_native_mapreduce_spark.operators.graph import (
+            ktruss_edges)
+
+        def li(orders):
+            rows = [(o, p, 1.0) for o, parts in orders for p in parts]
+            return spark.createDataFrame(
+                rows, "l_orderkey long, l_partkey long, "
+                      "l_quantity double")
+
+        near_k4 = [(1, [1, 2, 3]), (2, [1, 2, 4])]   # K4 minus 3-4
+        got = {(r.a, r.b) for r in ktruss_edges(li(near_k4)).collect()}
+        assert got == set()
+        k4 = [(1, [1, 2, 3, 4])]
+        got = {(r.a, r.b) for r in ktruss_edges(li(k4)).collect()}
+        assert got == {(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)}
+
+    def test_truss_is_subset_of_core(self, spark, sf_dir):
+        """Every 4-truss edge endpoint is a 3-core vertex (the
+        standard containment: k-truss ⊆ (k-1)-core)."""
+        from cloud_native_mapreduce_spark.registry import QUERIES
+        from cloud_native_mapreduce_spark.operators.graph import (
+            kcore_membership)
+        from cloud_native_mapreduce_spark.sources.tables import (
+            load_table)
+        truss = QUERIES["ktruss_edges"].builder(spark, sf_dir).collect()
+        li = load_table(spark, sf_dir, "lineitem")
+        core = {r.v for r in kcore_membership(li).collect()
+                if r.in_core}
+        verts = {v for r in truss for v in (r.a, r.b)}
+        assert verts <= core
+
+
+class TestLocalBridges:
+    def test_hand_graph(self, spark):
+        """Triangle 1-2-3 plus a pendant 3-4 and a path 4-5: the
+        triangle edges are supported; (3,4) and (4,5) are local
+        bridges, both pendant-flagged via vertex 5 / vertex 4."""
+        from cloud_native_mapreduce_spark.operators.graph import (
+            local_bridges)
+        orders = [(1, [1, 2, 3]), (2, [3, 4]), (3, [4, 5])]
+        rows = [(o, p, 1.0) for o, parts in orders for p in parts]
+        li = spark.createDataFrame(
+            rows, "l_orderkey long, l_partkey long, l_quantity double")
+        got = {(r.a, r.b): (r.deg_a, r.deg_b, r.pendant)
+               for r in local_bridges(li).collect()}
+        assert set(got) == {(3, 4), (4, 5)}
+        assert got[(3, 4)] == (3, 2, False)
+        assert got[(4, 5)] == (2, 1, True)

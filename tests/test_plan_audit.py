@@ -614,13 +614,10 @@ def test_sssp_relaxation_round_is_keyed_on_persisted_edges(
     import pyspark.sql.functions as F
     from pyspark import StorageLevel
     from cloud_native_mapreduce_spark.operators.graph import (
-        SSSP_INF, copart_weighted_edges)
+        SSSP_INF, bidirected, copart_weighted_edges)
     from cloud_native_mapreduce_spark.registry import load_table
     edges = copart_weighted_edges(load_table(spark, sf_dir, "lineitem"))
-    bi = (edges.select(F.col("a").alias("src"), F.col("b").alias("dst"),
-                       "w")
-          .unionAll(edges.select(F.col("b").alias("src"),
-                                 F.col("a").alias("dst"), "w"))
+    bi = (bidirected(edges, "w")
           .repartition("src").persist(StorageLevel.MEMORY_AND_DISK))
     try:
         verts = bi.select(F.col("src").alias("v")).distinct()

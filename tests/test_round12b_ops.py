@@ -684,48 +684,6 @@ class TestDidAndBennet:
                            - r.delta) < 2e-4, r
 
 
-class TestKtruss:
-    def test_hand_peel(self, spark):
-        """Two triangles sharing an edge (4-clique minus one edge)
-        plus a pendant path: the 4-truss (support >= 2) keeps ONLY
-        the shared edge's... — hand-walk: K4 minus edge {1-2, 1-3,
-        1-4, 2-3, 2-4}: edges 1-2 (common nb 3,4: sup 2), 1-3
-        (common 2: sup 1), 1-4 (common 2: 1), 2-3 (common 1: 1),
-        2-4 (common 1: 1). Round 1 keeps only 1-2; round 2 drops it
-        (no triangles left) -> empty truss. A full K4 survives
-        entirely (every edge sup 2)."""
-        from cloud_native_mapreduce_spark.operators.graph import (
-            ktruss_edges)
-
-        def li(orders):
-            rows = [(o, p, 1.0) for o, parts in orders for p in parts]
-            return spark.createDataFrame(
-                rows, "l_orderkey long, l_partkey long, "
-                      "l_quantity double")
-
-        near_k4 = [(1, [1, 2, 3]), (2, [1, 2, 4])]   # K4 minus 3-4
-        got = {(r.a, r.b) for r in ktruss_edges(li(near_k4)).collect()}
-        assert got == set()
-        k4 = [(1, [1, 2, 3, 4])]
-        got = {(r.a, r.b) for r in ktruss_edges(li(k4)).collect()}
-        assert got == {(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)}
-
-    def test_truss_is_subset_of_core(self, spark, sf_dir):
-        """Every 4-truss edge endpoint is a 3-core vertex (the
-        standard containment: k-truss ⊆ (k-1)-core)."""
-        from cloud_native_mapreduce_spark.registry import QUERIES
-        from cloud_native_mapreduce_spark.operators.graph import (
-            kcore_membership)
-        from cloud_native_mapreduce_spark.sources.tables import (
-            load_table)
-        truss = QUERIES["ktruss_edges"].builder(spark, sf_dir).collect()
-        li = load_table(spark, sf_dir, "lineitem")
-        core = {r.v for r in kcore_membership(li).collect()
-                if r.in_core}
-        verts = {v for r in truss for v in (r.a, r.b)}
-        assert verts <= core
-
-
 class TestBlocklistFilter:
     def test_leet_deobfuscation(self, spark):
         """'sl0w', '5low' and 'SLOW' all hit 'slow'; '$pam' hits

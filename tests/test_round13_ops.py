@@ -514,24 +514,6 @@ class TestMatrixProfile:
         assert all(abs(r.pos - r.nn_pos) >= 7 for r in got)
 
 
-class TestLocalBridges:
-    def test_hand_graph(self, spark):
-        """Triangle 1-2-3 plus a pendant 3-4 and a path 4-5: the
-        triangle edges are supported; (3,4) and (4,5) are local
-        bridges, both pendant-flagged via vertex 5 / vertex 4."""
-        from cloud_native_mapreduce_spark.operators.graph import (
-            local_bridges)
-        orders = [(1, [1, 2, 3]), (2, [3, 4]), (3, [4, 5])]
-        rows = [(o, p, 1.0) for o, parts in orders for p in parts]
-        li = spark.createDataFrame(
-            rows, "l_orderkey long, l_partkey long, l_quantity double")
-        got = {(r.a, r.b): (r.deg_a, r.deg_b, r.pendant)
-               for r in local_bridges(li).collect()}
-        assert set(got) == {(3, 4), (4, 5)}
-        assert got[(3, 4)] == (3, 2, False)
-        assert got[(4, 5)] == (2, 1, True)
-
-
 class TestEventTypeMI:
     def test_independent_types_zero_mi(self, spark):
         """4 users, type A on users 1,2 and type B on users 1,3:

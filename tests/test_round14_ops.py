@@ -269,33 +269,6 @@ class TestDedupClusterHistogram:
         assert got == {3: (1, 3), 2: (1, 2), 1: (1, 1)}
 
 
-class TestKcoreAdaptiveFrontier:
-    def test_frontier_tail_matches_all_vertex_fixpoint(self, spark):
-        """A long path forces tiny per-round change sets, so the
-        frontier branch carries most rounds; core numbers must equal
-        the all-vertex fixpoint (path graph: all cores = 1, plus a
-        4-clique at the end staying at 3)."""
-        from cloud_native_mapreduce_spark.operators.graph import (
-            kcore_decomposition)
-        # lineitem co-purchase rows: orders buying part pairs
-        edges = [(i, i + 1) for i in range(20)]          # path 0..20
-        edges += [(100, 101), (100, 102), (100, 103),
-                  (101, 102), (101, 103), (102, 103)]    # 4-clique
-        rows = []
-        for o, (a, b) in enumerate(edges):
-            rows += [(o, a, 1.0), (o, b, 1.0)]
-        li = spark.createDataFrame(
-            rows, "l_orderkey long, l_partkey long, l_quantity double")
-        # frontier_overhead_edges=0 forces the frontier branch on this
-        # small graph (the cost guard would otherwise keep a tiny m
-        # all-vertex, which is its correct production behavior)
-        got = {r.v: r.core for r in kcore_decomposition(
-            li, frontier_overhead_edges=0).collect()}
-        want = {v: 1 for v in range(21)}
-        want.update({100: 3, 101: 3, 102: 3, 103: 3})
-        assert got == want
-
-
 class TestRboVocabAgreement:
     def test_identical_rankings_give_one(self, spark):
         """Identical top lists -> RBO_trunc = (1-p)·Σ p^{i-1}/1·(i/i)

@@ -1,8 +1,10 @@
-"""Dump loop-BODY plans for iterative operators (round-15, VERDICT r14
-item #8): the per-round localCheckpoint turns every round's frame into
-a `Scan ExistingRDD` stub in the final explain, so pinned-width / SHJ /
-layout claims about loop internals were not plan-verifiable from
-plans/<tag>/<query>_{before,after}.txt alone.
+"""Dump the loop-BODY plans and the final formatted plan of queries.
+
+The per-round localCheckpoint turns every round's frame into a
+`Scan ExistingRDD` stub in the final explain, so pinned-width / SHJ /
+layout claims about loop internals are not plan-verifiable from the
+final plan alone. This tool writes both: every checkpointed frame's
+plan, then the query's final `explain("formatted")`.
 
 Mechanism: ``DataFrame.localCheckpoint`` is wrapped so that every
 frame is EXPLAINED at the moment it is checkpointed — i.e. with its
@@ -13,9 +15,11 @@ checkpoint then proceeds unchanged, so eager loops and convergence
 probes behave normally.
 
 Usage: python tools/dump_loop_body.py <tag> <suffix> <query> [query ...]
-Writes plans/<tag>/<query>_loop_body_<suffix>.txt (tree sections of
-every checkpointed frame, in call order; sf dir from
-$SPARK_GRAFT_SF_DIR, default sf0.001 to keep probe replay cheap).
+Writes plans/<tag>/<query>_loop_body_<suffix>.txt: the tree sections of
+every checkpointed frame, in call order, followed by the final
+formatted plan (sf dir from $SPARK_GRAFT_SF_DIR, default sf0.001 to
+keep probe replay cheap). To compare two versions of the code, dump
+each with its own suffix and diff the files.
 """
 
 from __future__ import annotations
@@ -61,6 +65,8 @@ def main() -> None:
         for name in names:
             captured.clear()
             df = QUERIES[name].builder(spark, sf_dir)
+            final = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
             # force the lazy tail so late-round checkpoints register
             df.write.format("noop").mode("overwrite").save()
             path = os.path.join(out_dir,
@@ -69,9 +75,11 @@ def main() -> None:
                 f.write("-- loop-body evidence: each section is the "
                         "plan of a frame AT ITS localCheckpoint call "
                         "(own round un-truncated, prior rounds "
-                        "stubs); tree sections only --\n")
+                        "stubs); tree sections only, then the final "
+                        "formatted plan --\n")
                 for i, tree in enumerate(captured):
                     f.write(f"\n== checkpoint call {i} ==\n{tree}\n")
+                f.write(f"\n== final plan (formatted) ==\n{final}\n")
             print(f"wrote {path} ({len(captured)} checkpointed "
                   f"frames)")
             spark.catalog.clearCache()
