@@ -19,7 +19,10 @@ Big Data Analysis*, VLDB'12), and three kernels, defined next to
     of every vertex-set and degree build;
   * `relax(edges, state, agg, msg, rounds)` — the min/max relaxation
     loop behind `bfs_hops`, `sssp_weighted`, `landmark_distances`, the
-    `graph_diameter_approx` sweeps and `dag_layers`.
+    `graph_diameter_approx` sweeps and `dag_layers`. Its rounds
+    checkpoint in the loop session (`session.loop_session`: AQE off,
+    one width from the edge frame's size), where the state stays
+    hash-partitioned on `v` and a round shuffles only its messages.
 
 Triangle work uses **degree orientation**: each edge points from its
 lower-degree endpoint to its higher-degree one (ties by ID), so every
@@ -37,8 +40,11 @@ plan, so the DuckDB oracles need no semantic knob.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cloud_native_mapreduce_spark.session import (
+    loop_checkpoint, loop_session)
 
 #: Drop vertices with more co-occurrence partners than this before the
 #: closure stage (the WWW'11 "last reducer" guard; with degree
@@ -130,7 +136,7 @@ _KEEP = {F.min: F.least, F.max: F.greatest}
 
 
 def relax(edges: DataFrame, state: DataFrame, agg, msg,
-          rounds: int) -> DataFrame:
+          rounds: int, loop: SparkSession | None = None) -> DataFrame:
     """`rounds` synchronous min/max relaxation rounds over directed
     (src, dst, ...) edges and a (v, *cols) vertex state:
 
@@ -146,25 +152,48 @@ def relax(edges: DataFrame, state: DataFrame, agg, msg,
     unrolled-SQL value oracle.
 
     Per round only the |V|-row state moves: one keyed join of the edge
-    list (persisted and hash-partitioned on src by the callers that
-    reuse it) against the state, one map-side-combining aggregate per
-    destination, and a left join back, then a lazy localCheckpoint
-    that keeps plan depth O(1) per round. The join back hash-builds the
+    list against the state, one map-side-combining aggregate per
+    destination, and a left join back, then a lazy checkpoint in the
+    loop session (`loop`, by default `loop_session(edges)`) that keeps
+    plan depth O(1) per round. There the checkpointed state keeps its
+    hash partitioning on `v`, so the join back and the next round's
+    edge join (against edges laid out on `src` at the loop width, see
+    `_loop_edges`) plan no exchange on the state side: each round
+    shuffles only the messages. The join back hash-builds the
     aggregated messages (`shuffle_hash`): the default sort-merge
     re-sorted both |V|-row frames every round, and the hash build is the
     same memory class as the round's own aggregation state (A/B on
     bfs_hops at sf0.1: 6.7 → 6.0-6.4 s)."""
+    loop = loop or loop_session(edges)
     cols = [c for c in state.columns if c != "v"]
     keep = _KEEP[agg]
     for _ in range(rounds):
         nbr = (edges.join(state, edges.src == state.v)
                .groupBy("dst")
                .agg(*[agg(msg(F.col(c))).alias(f"n_{c}") for c in cols]))
-        state = (state.join(nbr.hint("shuffle_hash"),
-                            state.v == nbr.dst, "left")
-                 .select("v", *[keep(c, f"n_{c}").alias(c) for c in cols])
-                 .localCheckpoint(eager=False))
+        state = loop_checkpoint(
+            state.join(nbr.hint("shuffle_hash"), state.v == nbr.dst, "left")
+            .select("v", *[keep(c, f"n_{c}").alias(c) for c in cols]),
+            loop)
     return state
+
+
+def _loop_edges(edges: DataFrame,
+                *carry: str) -> tuple[DataFrame, SparkSession]:
+    """(bi, loop): the loop session of a canonical edge list, and the
+    list bidirected, hash-partitioned on src at that session's width
+    and persisted, so every `relax` round reads it co-partitioned with
+    the state. `edges` is checkpointed in the loop session first, the
+    union-leg dedup barrier: the two legs of the bidirected union then
+    read it once instead of building it twice."""
+    from pyspark import StorageLevel
+
+    loop = loop_session(edges)
+    edges = loop_checkpoint(edges, loop)
+    width = int(loop.conf.get("spark.sql.shuffle.partitions"))
+    bi = (bidirected(edges, *carry).repartition(width, "src")
+          .persist(StorageLevel.MEMORY_AND_DISK))
+    return bi, loop
 
 
 def _from_source(verts: DataFrame, source: DataFrame,
@@ -308,18 +337,11 @@ def bfs_hops(lineitem: DataFrame, n_hops: int = 4,
     Scale posture: `relax` over the persisted hash-partitioned edge
     list, so only the |V|-row distance table moves per round.
     """
-    from pyspark import StorageLevel
-
-    # same union-leg dedup barrier as pagerank: checkpoint the edge
-    # subplan so the bidirectional union builds it once
-    edges = copart_edges(lineitem, max_degree) \
-        .localCheckpoint(eager=False)
-    bi = (bidirected(edges).repartition("src")
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    bi, loop = _loop_edges(copart_edges(lineitem, max_degree))
     verts = bi.select(F.col("src").alias("v")).distinct()
     source = verts.agg(F.min("v").alias("s"))
     return relax(bi, _from_source(verts, source, BFS_INF), F.min,
-                 lambda c: c + 1, n_hops)
+                 lambda c: c + 1, n_hops, loop)
 
 
 def link_prediction(lineitem: DataFrame, min_common: int = 2,
@@ -645,16 +667,11 @@ def sssp_weighted(lineitem: DataFrame, n_rounds: int = 4,
     hash-partitioned bidirectional edge list, weight carried), and
     rounds are the explicit cost bound.
     """
-    from pyspark import StorageLevel
-
-    edges = copart_weighted_edges(lineitem, max_degree) \
-        .localCheckpoint(eager=False)
-    bi = (bidirected(edges, "w").repartition("src")
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    bi, loop = _loop_edges(copart_weighted_edges(lineitem, max_degree), "w")
     verts = bi.select(F.col("src").alias("v")).distinct()
     source = verts.agg(F.min("v").alias("s"))
     return relax(bi, _from_source(verts, source, SSSP_INF), F.min,
-                 lambda c: c + F.col("w"), n_rounds)
+                 lambda c: c + F.col("w"), n_rounds, loop)
 
 
 def _planted_edges(lineitem: DataFrame, max_degree: int,
@@ -876,11 +893,7 @@ def landmark_distances(lineitem: DataFrame, n_hops: int = 4,
     order independent, full unrolled-SQL oracle; unreached-in-budget
     keeps the LM_INF sentinel and nearest = 0.
     """
-    from pyspark import StorageLevel
-
-    edges = copart_edges(lineitem, max_degree).localCheckpoint(eager=False)
-    bi = (bidirected(edges).repartition("src")
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    bi, loop = _loop_edges(copart_edges(lineitem, max_degree))
     verts = bi.select(F.col("src").alias("v")).distinct()
     lm = (verts.orderBy("v").limit(n_landmarks)
           .agg(F.sort_array(F.collect_set("v")).alias("ls")))
@@ -889,7 +902,7 @@ def landmark_distances(lineitem: DataFrame, n_hops: int = 4,
         "v", *[F.when(F.col("v") == F.element_at("ls", k), 0)
                .otherwise(F.lit(LM_INF)).alias(c)
                for k, c in enumerate(cols, start=1)])
-    dists = relax(bi, seed, F.min, lambda c: c + 1, n_hops)
+    dists = relax(bi, seed, F.min, lambda c: c + 1, n_hops, loop)
     best = F.least(*[F.col(c) for c in cols])
     nearest = F.when(best >= LM_INF, F.lit(0))
     for k, c in enumerate(cols, start=1):
@@ -963,12 +976,14 @@ def dag_layers(lineitem: DataFrame,
 
     Output: one row per layer (depth, vertex count, min vertex) —
     bounded by n_rounds + 1 rows."""
-    edges = copart_pairs(lineitem).localCheckpoint(eager=False)
-    verts = endpoints(edges).distinct()
-    state = verts.select("v", F.lit(0).alias("lay")) \
-        .localCheckpoint(eager=False)
+    edges = copart_pairs(lineitem)
+    loop = loop_session(edges)
+    edges = loop_checkpoint(edges, loop)
+    state = loop_checkpoint(
+        endpoints(edges).distinct().select("v", F.lit(0).alias("lay")),
+        loop)
     state = relax(edges.toDF("src", "dst"), state, F.max,
-                  lambda c: c + 1, n_rounds)
+                  lambda c: c + 1, n_rounds, loop)
     return (state.groupBy(F.col("lay").alias("layer"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_vertices"),
                  F.min("v").cast("bigint").alias("min_vertex")))
@@ -1109,18 +1124,13 @@ def graph_diameter_approx(lineitem: DataFrame, n_hops: int = 4,
     distance frame moves per round); the sweep pivot is a 1-row
     broadcast. Output is one row: (source_v, ecc_source, far_v,
     diameter_lb)."""
-    from pyspark import StorageLevel
-
-    edges = copart_edges(lineitem, max_degree) \
-        .localCheckpoint(eager=False)
-    bi = (bidirected(edges).repartition("src")
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    verts = bi.select(F.col("src").alias("v")).distinct() \
-        .localCheckpoint(eager=False)
+    bi, loop = _loop_edges(copart_edges(lineitem, max_degree))
+    verts = loop_checkpoint(bi.select(F.col("src").alias("v")).distinct(),
+                            loop)
 
     def sweep(source):  # source: broadcastable 1-row frame with col s
         return relax(bi, _from_source(verts, source, BFS_INF), F.min,
-                     lambda c: c + 1, n_hops)
+                     lambda c: c + 1, n_hops, loop)
 
     s1 = verts.agg(F.min("v").alias("s"))
     d1 = sweep(s1)

@@ -872,3 +872,61 @@ def test_also_bought_avoids_fact_self_join(spark, sf_dir):
     a = PA.audit(_df("also_bought_topk", spark, sf_dir))
     assert not a.has_cartesian, a.text
     assert a.text.count("Scan parquet") <= 1, a.text
+
+
+def _exchanges(node) -> list[str]:
+    """Node names of the exchanges in a physical plan, hash exchanges
+    with their partitioning; walks `children` only, so a persisted
+    frame's cached plan (an inner child of its scan) is not counted."""
+    name = node.nodeName()
+    out = ([node.outputPartitioning().toString()] if name == "Exchange"
+           else [name] if name == "BroadcastExchange" else [])
+    kids = node.children()
+    for i in range(kids.size()):
+        out += _exchanges(kids.apply(i))
+    return out
+
+
+def test_relax_round_in_loop_session_shuffles_only_messages(
+        spark, monkeypatch):
+    """A `relax` round checkpointed in the loop session (AQE off, W=2)
+    plans exactly one hash exchange, on `dst`: the messages. The state
+    comes back from the previous round's checkpoint hash-partitioned on
+    `v` and the persisted edges sit on `src` at the same width, so the
+    edge join and the join back read both sides where they are."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.classic.dataframe import DataFrame
+    from cloud_native_mapreduce_spark.operators.graph import (
+        _loop_edges, relax)
+
+    plans = []
+    real = DataFrame.localCheckpoint
+
+    def capturing(self, eager=True, *args, **kwargs):
+        plans.append(_exchanges(self._jdf.queryExecution().executedPlan()))
+        return real(self, eager, *args, **kwargs)
+
+    # 120 edges; the cross join with a one-row filter of a 20,000-row
+    # range multiplies Catalyst's size estimate to ~1.4 advisory
+    # partitions, so the width rule gives W=2 (and nothing broadcasts)
+    edges = (spark.range(120)
+             .select((F.col("id") % 40).alias("a"),
+                     (F.col("id") % 40 + F.col("id") % 3 * 2 + 1).alias("b"))
+             .crossJoin(spark.range(20000).where("id = 0").select())
+             .select("a", "b"))
+    bi, loop = _loop_edges(edges)
+    state = bi.select(F.col("src").alias("v")).distinct() \
+        .select("v", F.when(F.col("v") == 0, 0).otherwise(99).alias("dist"))
+    monkeypatch.setattr(DataFrame, "localCheckpoint", capturing)
+    try:
+        dist = {r.v: r.dist for r in
+                relax(bi, state, F.min, lambda c: c + 1, 3, loop).collect()}
+    finally:
+        bi.unpersist()
+    assert loop.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert loop.conf.get("spark.sql.shuffle.partitions") == "2"
+    assert (dist[0], dist[1], dist[2], dist[3]) == (0, 1, 2, 1), dist
+    assert len(plans) == 3
+    for plan in plans[1:]:  # rounds 2 and 3 read a checkpointed state
+        assert len(plan) == 1 and plan[0].startswith("hashpartitioning(dst#") \
+            and plan[0].endswith(", 2)"), plan

@@ -12,7 +12,10 @@ own round's operators still in the plan and all PRIOR rounds already
 truncated to stubs. That is exactly "one loop-body plan per round",
 from the real operator code, with no reconstruction. The real
 checkpoint then proceeds unchanged, so eager loops and convergence
-probes behave normally.
+probes behave normally. Each frame's header names the session it is
+checkpointed in: its AQE flag and its shuffle width W, which tells a
+loop-session checkpoint (`session.loop_checkpoint`: AQE off, the
+loop's W) from one in the query's own session.
 
 Usage: python tools/dump_loop_body.py <tag> <suffix> <query> [query ...]
 Writes plans/<tag>/<query>_loop_body_<suffix>.txt: the tree sections of
@@ -54,11 +57,14 @@ def main() -> None:
     captured: list[str] = []
     real = DataFrame.localCheckpoint
 
-    def capturing(self, eager=True):
+    def capturing(self, eager=True, *args, **kwargs):
         txt = self._sc._jvm.PythonSQLUtils.explainString(
             self._jdf.queryExecution(), "formatted")
-        captured.append(txt.split("\n\n")[0])  # tree section only
-        return real(self, eager=eager)
+        conf = self.sparkSession.conf
+        session = (f"aqe={conf.get('spark.sql.adaptive.enabled')} "
+                   f"W={conf.get('spark.sql.shuffle.partitions')}")
+        captured.append((session, txt.split("\n\n")[0]))  # tree only
+        return real(self, eager, *args, **kwargs)
 
     DataFrame.localCheckpoint = capturing  # type: ignore
     try:
@@ -77,8 +83,9 @@ def main() -> None:
                         "(own round un-truncated, prior rounds "
                         "stubs); tree sections only, then the final "
                         "formatted plan --\n")
-                for i, tree in enumerate(captured):
-                    f.write(f"\n== checkpoint call {i} ==\n{tree}\n")
+                for i, (session, tree) in enumerate(captured):
+                    f.write(f"\n== checkpoint call {i} ({session}) "
+                            f"==\n{tree}\n")
                 f.write(f"\n== final plan (formatted) ==\n{final}\n")
             print(f"wrote {path} ({len(captured)} checkpointed "
                   f"frames)")
