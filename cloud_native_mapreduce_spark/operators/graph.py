@@ -17,7 +17,7 @@ Big Data Analysis*, VLDB'12), and three kernels, defined next to
     list as (src, dst, *carry);
   * `endpoints(edges)` — one `v` column stacking `a` and `b`, the base
     of every vertex-set and degree build;
-  * `relax(edges, state, agg, msg, rounds)` — the min/max relaxation
+  * `relax(edges, state, agg, msg, rounds, loop)` — the min/max relaxation
     loop behind `bfs_hops`, `sssp_weighted`, `landmark_distances`, the
     `graph_diameter_approx` sweeps and `dag_layers`. Its rounds
     checkpoint in the loop session (`session.loop_session`: AQE off,
@@ -136,7 +136,7 @@ _KEEP = {F.min: F.least, F.max: F.greatest}
 
 
 def relax(edges: DataFrame, state: DataFrame, agg, msg,
-          rounds: int, loop: SparkSession | None = None) -> DataFrame:
+          rounds: int, loop: SparkSession) -> DataFrame:
     """`rounds` synchronous min/max relaxation rounds over directed
     (src, dst, ...) edges and a (v, *cols) vertex state:
 
@@ -154,7 +154,7 @@ def relax(edges: DataFrame, state: DataFrame, agg, msg,
     Per round only the |V|-row state moves: one keyed join of the edge
     list against the state, one map-side-combining aggregate per
     destination, and a left join back, then a lazy checkpoint in the
-    loop session (`loop`, by default `loop_session(edges)`) that keeps
+    loop session (`loop`, from `session.loop_session`) that keeps
     plan depth O(1) per round. There the checkpointed state keeps its
     hash partitioning on `v`, so the join back and the next round's
     edge join (against edges laid out on `src` at the loop width, see
@@ -164,7 +164,6 @@ def relax(edges: DataFrame, state: DataFrame, agg, msg,
     re-sorted both |V|-row frames every round, and the hash build is the
     same memory class as the round's own aggregation state (A/B on
     bfs_hops at sf0.1: 6.7 → 6.0-6.4 s)."""
-    loop = loop or loop_session(edges)
     cols = [c for c in state.columns if c != "v"]
     keep = _KEEP[agg]
     for _ in range(rounds):
@@ -181,17 +180,20 @@ def relax(edges: DataFrame, state: DataFrame, agg, msg,
 def _loop_edges(edges: DataFrame,
                 *carry: str) -> tuple[DataFrame, SparkSession]:
     """(bi, loop): the loop session of a canonical edge list, and the
-    list bidirected, hash-partitioned on src at that session's width
-    and persisted, so every `relax` round reads it co-partitioned with
-    the state. `edges` is checkpointed in the loop session first, the
-    union-leg dedup barrier: the two legs of the bidirected union then
-    read it once instead of building it twice."""
+    list bidirected, hash-partitioned on src and persisted. In a child
+    loop session the partition count is that session's width, so every
+    `relax` round reads the edges co-partitioned with the state; at the
+    clamp (the caller's own session) AQE keeps sizing the layout.
+    `edges` is checkpointed in the loop session first, the union-leg
+    dedup barrier: the two legs of the bidirected union then read it
+    once instead of building it twice."""
     from pyspark import StorageLevel
 
     loop = loop_session(edges)
+    width = ([] if loop is edges.sparkSession
+             else [int(loop.conf.get("spark.sql.shuffle.partitions"))])
     edges = loop_checkpoint(edges, loop)
-    width = int(loop.conf.get("spark.sql.shuffle.partitions"))
-    bi = (bidirected(edges, *carry).repartition(width, "src")
+    bi = (bidirected(edges, *carry).repartition(*width, "src")
           .persist(StorageLevel.MEMORY_AND_DISK))
     return bi, loop
 

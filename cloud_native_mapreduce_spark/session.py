@@ -15,9 +15,10 @@ that runs each shuffle stage as its own job and drops the state's hash
 partitioning. `loop_session` returns a child session of the caller
 (`newSession()`: same SparkContext and cache, its own SQL conf) with AQE
 off and one shuffle width derived from the size of the loop's edge
-frame; `loop_checkpoint` checkpoints a frame there and hands it back to
-the caller. The state then stays hash-partitioned on its key, so each
-round shuffles only its messages. The caller's conf is never written.
+frame, the way AQE would coalesce it; `loop_checkpoint` checkpoints a
+frame there and hands it back to the caller. The state then stays
+hash-partitioned on its key, so each round shuffles only its messages.
+The caller's conf is never written.
 """
 
 from __future__ import annotations
@@ -108,23 +109,41 @@ _WIDTH = "spark.sql.shuffle.partitions"
 def loop_width(edges: DataFrame) -> int:
     """Shuffle width W for a loop over `edges`:
 
-        W = clamp(ceil(edges_bytes / advisory), 1, shuffle.partitions)
+        W = clamp(ceil(edges_bytes / advisory),
+                  min(cores, ceil(edges_bytes / min_partition)),
+                  shuffle.partitions)
 
-    `edges_bytes` is Catalyst's size estimate of the edge frame (reading
-    it plans but fires no job), `advisory` the caller's
-    `spark.sql.adaptive.advisoryPartitionSizeInBytes` and the upper
-    clamp the caller's `spark.sql.shuffle.partitions`: one partition per
-    AQE target partition's worth of edges, read from existing confs
-    only. The edge frame is the right input: a round plan's own
-    estimate compounds the join fan-out and reads 142 MB for a 200-row
-    frame (1.3 TB at sf0.1)."""
+    with clamp(x, lo, hi) = min(max(x, lo), hi). `edges_bytes` is
+    Catalyst's size estimate of the edge frame (reading it plans but
+    fires no job); `advisory` and `min_partition` are the caller's
+    `spark.sql.adaptive.advisoryPartitionSizeInBytes` and
+    `spark.sql.adaptive.coalescePartitions.minPartitionSize`, `cores`
+    the SparkContext's default parallelism and the upper clamp the
+    caller's `spark.sql.shuffle.partitions`. This is the width AQE's
+    own coalescing aims at (parallelism first: one partition per
+    advisory size, but as many as the cores while each keeps at least
+    the minimum size), read from existing confs only.
+
+    The edge frame is the right input: a round plan's own estimate
+    compounds the join fan-out and reads 142 MB for a 200-row frame
+    (1.3 TB at sf0.1). The lower clamp is measured: with 1 in its
+    place every relax query's edges on the test data (sf0.001 to
+    sf0.1, all far below 64 MiB) gave W=1, each round ran as one task,
+    and at sf0.1 that cut CPU but made sssp_weighted and bfs_hops
+    32 % and 43 % slower in wall time. With this lower clamp both are
+    within 4 % of the parent's wall time, and sssp_weighted keeps a
+    15 % CPU cut (CHANGES.md)."""
     spark = edges.sparkSession
     size = edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
-        .byteStringAsBytes(
-            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes
+    advisory = to_bytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    min_partition = to_bytes(spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize"))
     cap = int(spark.conf.get(_WIDTH))
-    return max(1, min(-(-size // advisory), cap))
+    low = min(spark.sparkContext.defaultParallelism, -(-size // min_partition))
+    return min(max(-(-size // advisory), low, 1), cap)
 
 
 def loop_session(edges: DataFrame) -> SparkSession:
@@ -133,10 +152,13 @@ def loop_session(edges: DataFrame) -> SparkSession:
     Below the upper clamp of `loop_width` this is a child of the caller
     (`newSession()`, so the SparkContext and the cache are shared) with
     the caller's SQL conf, `spark.sql.adaptive.enabled=false` and
-    `spark.sql.shuffle.partitions=W`; one child per caller and width
-    (and caller conf). At the clamp the edges are big enough for AQE's
-    skew splitting and coalescing to earn their keep, so the loop stays
-    in the caller's session. The caller's conf is only read.
+    `spark.sql.shuffle.partitions=W`; one child per caller and width,
+    replaced by a fresh child when the caller's conf has changed since
+    it was copied. At the upper clamp the loop stays in the caller's
+    session: there the edges are big enough for AQE's skew splitting
+    and coalescing to earn their keep, or the lower clamp alone
+    reaches `shuffle.partitions` (AQE off at that width is a negative
+    result below). The caller's conf is only read.
 
     Why AQE off: under AQE a lazy `localCheckpoint` still executes the
     adaptive plan, one job per shuffle stage, and the checkpointed
@@ -150,6 +172,11 @@ def loop_session(edges: DataFrame) -> SparkSession:
         `dag_layers`: 4.79 s tree CPU per pass against 4.43–4.67 s,
         and in 3 alternating pairs parent 5.87/4.91/5.25 s, change
         5.37/5.15/5.90 s;
+      * the cores alone as the lower clamp (W=4 on every input here)
+        gave no CPU gain: sssp_weighted at sf0.1 kept the parent's CPU
+        (39.6 against 40.2 s, medians of 5 alternating pairs) where
+        the rule's W=2 cut it 15 %, and on `dag_layers` it is the flat
+        W=4 above;
       * AQE off at the session width of 32 is about 2× slower
         (`dag_layers` ran 546 tasks against 25);
       * dropping the lineage cut instead makes plans blow up: `relax`
@@ -165,17 +192,16 @@ def loop_session(edges: DataFrame) -> SparkSession:
     if width >= int(spark.conf.get(_WIDTH)):
         return spark
     conf = spark.conf.getAll
-    key = (width, tuple(sorted(conf.items())))
     children = spark.__dict__.setdefault("_cnms_loop_sessions", {})
-    if key not in children:
+    if children.get(width, (None,))[0] != conf:
         child = spark.newSession()
         for k, v in conf.items():
             if spark.conf.isModifiable(k):
                 child.conf.set(k, v)
         child.conf.set(_AQE, "false")
         child.conf.set(_WIDTH, str(width))
-        children[key] = child
-    return children[key]
+        children[width] = (conf, child)
+    return children[width][1]
 
 
 def loop_checkpoint(df: DataFrame, loop: SparkSession,

@@ -399,12 +399,14 @@ def test_relax_min_weighted_two_columns(spark):
     none at all: both keep their own value, because the join back
     leaves the message NULL and least() skips NULL."""
     from cloud_native_mapreduce_spark.operators.graph import relax
+    from cloud_native_mapreduce_spark.session import loop_session
+    edges = _relax_edges(spark)
     inf = 100
     seed = _relax_state(spark, ("x", "y"), lambda v: (
         0 if v == 1 else inf, 0 if v == 3 else inf))
     got = {r.v: (r.x, r.y) for r in
-           relax(_relax_edges(spark), seed, F.min,
-                 lambda c: c + F.col("w"), 4)
+           relax(edges, seed, F.min, lambda c: c + F.col("w"), 4,
+                 loop_session(edges))
            .collect()}
     assert got == {1: (0, inf), 2: (1, inf), 3: (3, 0), 4: (8, 5),
                    5: (4, 1), 6: (9, 6), 7: (inf, inf)}
@@ -416,11 +418,13 @@ def test_relax_max_longest_path(spark):
     greatest()'s NULL skip; 6 takes the heavier diamond leg 1→2→3→5→6
     (3 + 1 + 2 + 1 + 10 = 17)."""
     from cloud_native_mapreduce_spark.operators.graph import relax
+    from cloud_native_mapreduce_spark.session import loop_session
+    edges = _relax_edges(spark)
     seed = _relax_state(spark, ("x",),
                         lambda v: ({1: 3, 7: 42}.get(v, 0),))
     got = {r.v: r.x for r in
-           relax(_relax_edges(spark), seed, F.max,
-                 lambda c: c + F.col("w"), 4)
+           relax(edges, seed, F.max, lambda c: c + F.col("w"), 4,
+                 loop_session(edges))
            .collect()}
     assert got == {1: 3, 2: 4, 3: 6, 4: 11, 5: 7, 6: 17, 7: 42}
 

@@ -908,7 +908,11 @@ def test_relax_round_in_loop_session_shuffles_only_messages(
 
     # 120 edges; the cross join with a one-row filter of a 20,000-row
     # range multiplies Catalyst's size estimate to ~1.4 advisory
-    # partitions, so the width rule gives W=2 (and nothing broadcasts)
+    # partitions, so with one core the width rule gives W=2 (and
+    # nothing broadcasts); the suite's local[8] would clamp it to AQE
+    from pyspark import SparkContext
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda self: 1))
     edges = (spark.range(120)
              .select((F.col("id") % 40).alias("a"),
                      (F.col("id") % 40 + F.col("id") % 3 * 2 + 1).alias("b"))
