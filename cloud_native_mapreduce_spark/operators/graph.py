@@ -19,10 +19,15 @@ Big Data Analysis*, VLDB'12), and three kernels, defined next to
     of every vertex-set and degree build;
   * `relax(edges, state, agg, msg, rounds, loop)` — the min/max relaxation
     loop behind `bfs_hops`, `sssp_weighted`, `landmark_distances`, the
-    `graph_diameter_approx` sweeps and `dag_layers`. Its rounds
-    checkpoint in the loop session (`session.loop_session`: AQE off,
-    one width from the edge frame's size), where the state stays
-    hash-partitioned on `v` and a round shuffles only its messages.
+    `graph_diameter_approx` sweeps and `dag_layers`.
+
+The fixed-round loops (`relax`, PageRank and personalized PageRank
+through `_pagerank_rounds`, `kcore_membership`, `label_propagation`)
+hold their state one way: the edges come from `_loop_edges`, laid out
+on `src` at the loop width, and every round checkpoints through
+`loop_checkpoint` in the loop session (`session.loop_session`: AQE
+off, one width from the edge frame's size). There the state stays
+hash-partitioned on `v`, and a round shuffles only its messages.
 
 Triangle work uses **degree orientation**: each edge points from its
 lower-degree endpoint to its higher-degree one (ties by ID), so every
@@ -269,54 +274,62 @@ def pagerank(lineitem: DataFrame, n_iter: int = PR_ITERS,
     The usual float formulation is this with SCALE→∞; at 1e6 units the
     quantization error per iteration is sub-ppm.
 
-    Scale posture: the loop body is one keyed join (contribution
-    scatter) + one hash aggregate (inflow) per iteration — the
-    textbook MapReduce PageRank shape; degree attaches ONCE before the
-    loop and rides the persisted bidirectional edge list, and each
-    iteration's result is lineage-truncated (localCheckpoint) so plan
-    depth stays O(1) per round, the `dedup/components` lesson. Every
-    vertex of the capped graph has ≥ 1 incident edge, so inflow rows
-    cover all vertices and no rank mass is silently dropped.
+    Scale posture: the textbook MapReduce PageRank shape, one keyed
+    join (contribution scatter) and one map-side-combining sum
+    (inflow) per round (`_pagerank_rounds`) over the `_loop_edges`
+    list with the sender's degree attached once (`_pagerank_edges`).
+    Every vertex of the capped graph has ≥ 1 incident edge, so inflow
+    rows cover all vertices and no rank mass is silently dropped.
     """
-    from pyspark import StorageLevel
-
-    # lineage-truncate the edge list BEFORE the union below: its two
-    # legs each reference the edge subplan, and Spark does not dedup
-    # common subplans — without the barrier the copart_pairs build
-    # (groupBy + explode + distinct) runs once per leg
-    edges = copart_edges(lineitem, max_degree) \
-        .localCheckpoint(eager=False)
-    # ...and persist the bidirectional list too: it feeds the degree
-    # aggregate AND the bi_d join input
-    bi = bidirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    outd = bi.groupBy("src").agg(F.count("*").alias("d"))
-    # bidirectional edges with the sender's degree attached once —
-    # reused by every iteration's scatter join. Hash-partitioned on the
-    # join key BEFORE persisting: the edge list is the big side (m ≫ V
-    # at 100 TB) and must never re-shuffle per iteration — the persisted
-    # layout satisfies the join's clustering requirement so only the
-    # |V|-row rank table moves each round (classic PageRank layout;
-    # sf1 soak: 33.7 s total — one edge-list build + 5 rounds over
-    # ~18M directed edges; before the checkpoint/persist barriers
-    # above the build re-ran per consumer and the same soak took 72 s)
-    bi_d = (bi.join(outd, "src")
-            .repartition("src")
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    bi_d, outd, loop = _pagerank_edges(
+        copart_edges(lineitem, max_degree))
     ranks = outd.select(F.col("src").alias("v"),
                         F.lit(PR_SCALE).cast("long").alias("rank"))
+    return _pagerank_rounds(bi_d, ranks, F.lit(15 * PR_SCALE // 100),
+                            n_iter, loop)
+
+
+def _pagerank_edges(
+        edges: DataFrame) -> tuple[DataFrame, DataFrame, SparkSession]:
+    """(bi_d, outd, loop): `_loop_edges` of a canonical edge list with
+    each sender's degree `d` attached once and checkpointed in the
+    loop session `loop`, where it stays laid out on src; outd is the
+    (src, d) degree table. Built once, not per consumer: an sf1 soak
+    over ~18M directed edges took 72 s when the build re-ran per
+    consumer and 33.7 s with it built once."""
+    bi, loop = _loop_edges(edges)
+    outd = bi.groupBy("src").agg(F.count("*").alias("d"))
+    return loop_checkpoint(bi.join(outd, "src"), loop), outd, loop
+
+
+def _pagerank_rounds(bi_d: DataFrame, ranks: DataFrame, teleport,
+                     n_iter: int, loop: SparkSession,
+                     consts: DataFrame | None = None) -> DataFrame:
+    """`n_iter` integer PageRank rounds over `_pagerank_edges`' bi_d:
+    rankᵗ⁺¹(v) = teleport + (85 · Σ_{u→v} rankᵗ(u) DIV d(u)) DIV 100,
+    with `teleport` a column over the inflow's `dst` and the columns
+    of the optional 1-row frame `consts`, broadcast into every round.
+    Each round's (v, rank) checkpoints in `loop`.
+
+    The scatter join hash-builds the ranks where they lie
+    (`shuffle_hash`, no exchange: both sides sit on the vertex key at
+    the loop width). Unhinted, the planner broadcast the whole edge
+    list from the first (PPR) or third (PageRank) round on, because a
+    checkpointed state's size estimate compounds every round. At sf0.1 on 4 cores
+    (warm median wall, 2 processes unhinted, 4 hinted) the hint took
+    PageRank from 7.2–8.7 s to 4.8–5.5 s and PPR from 11.3–11.7 s to
+    6.6–8.0 s."""
     for _ in range(n_iter):
-        inflow = (bi_d.join(ranks, bi_d.src == ranks.v)
-                  .select(F.col("dst"),
-                          F.expr("rank DIV d").alias("c"))
+        inflow = (bi_d.join(ranks.hint("shuffle_hash"), bi_d.src == ranks.v)
                   .groupBy("dst")
-                  .agg(F.sum("c").alias("inflow")))
-        ranks = (inflow.select(
+                  .agg(F.sum(F.expr("rank DIV d")).alias("inflow")))
+        if consts is not None:
+            inflow = inflow.crossJoin(F.broadcast(consts))
+        ranks = loop_checkpoint(inflow.select(
             F.col("dst").alias("v"),
-            (F.lit(15 * PR_SCALE // 100)
-             + F.expr("(85 * inflow) DIV 100")).cast("long")
-            .alias("rank"))
-            .localCheckpoint(eager=False))
-    return ranks.select("v", "rank")
+            (teleport + F.expr("(85 * inflow) DIV 100")).cast("long")
+            .alias("rank")), loop)
+    return ranks
 
 
 #: BFS: "unreached within the hop budget" sentinel distance.
@@ -420,21 +433,13 @@ def personalized_pagerank(lineitem: DataFrame, n_iter: int = PR_ITERS,
     truncation keeps the iterative fixpoint aggregation-order exact,
     earning the same unrolled-SQL value-level oracle as `pagerank`.
 
-    Same scale shape as `pagerank`: the degree-attached bidirectional
-    edge list is built once, hash-partitioned and persisted; each
-    round moves only the |V|-row rank table and the source/|V| scalars
-    ride a broadcast 1-row frame (no driver-side collect)."""
-    from pyspark import StorageLevel
-
-    edges = copart_edges(lineitem, max_degree) \
-        .localCheckpoint(eager=False)
-    bi = bidirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    outd = bi.groupBy("src").agg(F.count("*").alias("d"))
-    bi_d = (bi.join(outd, "src")
-            .repartition("src")
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    # (source vertex, vertex count) — 1-row frame broadcast into every
-    # round; teleport mass = 15% of the |V|·SCALE total, all at s
+    Same shape as `pagerank`: `_pagerank_rounds` over the
+    `_loop_edges` list of `_pagerank_edges`; the source and |V| ride a
+    broadcast 1-row frame (no driver-side collect)."""
+    bi_d, outd, loop = _pagerank_edges(
+        copart_edges(lineitem, max_degree))
+    # (source vertex, vertex count); teleport mass = 15% of the
+    # |V|·SCALE total, all at s
     vstats = outd.agg(F.min("src").alias("s"),
                       F.count("*").alias("nv"))
     ranks = (outd.join(F.broadcast(vstats))
@@ -442,22 +447,10 @@ def personalized_pagerank(lineitem: DataFrame, n_iter: int = PR_ITERS,
                      F.when(F.col("src") == F.col("s"),
                             F.col("nv") * F.lit(PR_SCALE))
                      .otherwise(F.lit(0)).cast("long").alias("rank")))
-    for _ in range(n_iter):
-        inflow = (bi_d.join(ranks, bi_d.src == ranks.v)
-                  .select(F.col("dst"),
-                          F.expr("rank DIV d").alias("c"))
-                  .groupBy("dst")
-                  .agg(F.sum("c").alias("inflow")))
-        ranks = (inflow.join(F.broadcast(vstats))
-                 .select(
-                     F.col("dst").alias("v"),
-                     (F.when(F.col("dst") == F.col("s"),
-                             F.expr(f"(15 * nv * {PR_SCALE}) DIV 100"))
-                      .otherwise(F.lit(0))
-                      + F.expr("(85 * inflow) DIV 100")).cast("long")
-                     .alias("rank"))
-                 .localCheckpoint(eager=False))
-    return ranks.select("v", "rank")
+    teleport = (F.when(F.col("dst") == F.col("s"),
+                       F.expr(f"(15 * nv * {PR_SCALE}) DIV 100"))
+                .otherwise(F.lit(0)))
+    return _pagerank_rounds(bi_d, ranks, teleport, n_iter, loop, vstats)
 
 
 def kcore_membership(lineitem: DataFrame, k: int = 3,
@@ -474,35 +467,25 @@ def kcore_membership(lineitem: DataFrame, k: int = 3,
     pagerank/bfs. The classic graph-curation signal (densest-region
     extraction / spam-farm pruning at web scale).
 
-    Shape: the bidirectional edge list is built once and persisted;
-    each round is two keyed semi-joins of the edge list against the
-    |V|-row survivor set + one map-side-combined degree aggregate,
-    with per-round lineage truncation."""
-    from pyspark import StorageLevel
-
-    edges = copart_edges(lineitem, max_degree) \
-        .localCheckpoint(eager=False)
-    # hash-partitioned on u BEFORE the persist (round-15, the
-    # pagerank/bfs layout): each round's first survivor semi-join and
-    # the degree aggregate are both keyed on u, so the persisted
-    # layout satisfies their clustering requirement and only the
-    # |V|-row survivor frame moves per round
-    bi = (bidirected(edges).toDF("u", "w")
-          .repartition("u")
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    verts = (bi.select(F.col("u").alias("v")).distinct()
-             .persist(StorageLevel.MEMORY_AND_DISK))
+    Shape: each round is two keyed semi-joins of the `_loop_edges`
+    list against the |V|-row survivor set + one map-side-combined
+    degree aggregate, checkpointed in the loop session. The degree
+    counts edges u→v by their receiver v, as `relax` does: on the
+    symmetric edge list that is v's degree, and a round plans one
+    exchange, on dst (at sf0.1 the survivor sets broadcast)."""
+    bi, loop = _loop_edges(copart_edges(lineitem, max_degree))
+    verts = loop_checkpoint(bi.select(F.col("src").alias("v")).distinct(),
+                            loop)
     alive = verts
     for _ in range(n_rounds):
-        alive = (bi
-                 .join(alive.select(F.col("v").alias("u")), "u",
-                       "left_semi")
-                 .join(alive.select(F.col("v").alias("w")), "w",
-                       "left_semi")
-                 .groupBy("u").agg(F.count("*").alias("c"))
-                 .where(F.col("c") >= k)
-                 .select(F.col("u").alias("v"))
-                 .localCheckpoint(eager=False))
+        alive = loop_checkpoint(
+            bi.join(alive.select(F.col("v").alias("src")), "src",
+                    "left_semi")
+            .join(alive.select(F.col("v").alias("dst")), "dst",
+                  "left_semi")
+            .groupBy("dst").agg(F.count("*").alias("c"))
+            .where(F.col("c") >= k)
+            .select(F.col("dst").alias("v")), loop)
     return (verts
             .join(alive.withColumn("_in", F.lit(True)), "v", "left")
             .select("v", F.coalesce("_in", F.lit(False))
@@ -676,9 +659,10 @@ def sssp_weighted(lineitem: DataFrame, n_rounds: int = 4,
                  lambda c: c + F.col("w"), n_rounds, loop)
 
 
-def _planted_edges(lineitem: DataFrame, max_degree: int,
-                   block_mod: int | None, cross_mod: int) -> DataFrame:
-    """Capped canonical edges (a, b) of `label_propagation`'s graph:
+def _planted_edges(
+        lineitem: DataFrame, max_degree: int, block_mod: int | None,
+        cross_mod: int) -> tuple[DataFrame, SparkSession]:
+    """(bi, loop): `_loop_edges` of `label_propagation`'s capped graph:
     with `block_mod` set, only same-residue pairs (a ≡ b mod block_mod)
     plus the thin (a + b) ≡ 0 mod `cross_mod` cross slice survive."""
     pairs = copart_pairs(lineitem)
@@ -686,7 +670,7 @@ def _planted_edges(lineitem: DataFrame, max_degree: int,
         pairs = pairs.where(
             (F.col("a") % block_mod == F.col("b") % block_mod)
             | ((F.col("a") + F.col("b")) % cross_mod == 0))
-    return capped_oriented(pairs, max_degree).select("a", "b")
+    return _loop_edges(capped_oriented(pairs, max_degree).select("a", "b"))
 
 
 def label_propagation(lineitem: DataFrame, n_rounds: int = 3,
@@ -717,32 +701,33 @@ def label_propagation(lineitem: DataFrame, n_rounds: int = 3,
     the blocks, and the modularity check certifies Q >> 0. The
     two-clique pytest pins recovery on a hand-built graph.
 
-    Scale posture (the `bfs_hops` shape): the per-round join is keyed
-    on the persisted hash-partitioned bidirectional edge list — only
-    the |V|-row label table moves per round; the neighbor-label count
-    is a map-side-combining aggregate; each round lineage-truncates
-    via localCheckpoint. Returns (v, label) for every capped-graph
-    vertex.
+    Scale posture (the `relax` shape): each round joins the sender's
+    label on the `_loop_edges` list (src = v), counts labels per
+    receiver with a map-side-combining aggregate and checkpoints in
+    the loop session, so only the |V|-row label table and the
+    messages move. Returns (v, label) for every capped-graph vertex.
     """
-    from pyspark import StorageLevel
+    return _propagate_labels(
+        *_planted_edges(lineitem, max_degree, block_mod, cross_mod),
+        n_rounds)
+
+
+def _propagate_labels(bi: DataFrame, loop: SparkSession,
+                      n_rounds: int) -> DataFrame:
+    """`label_propagation`'s rounds over its `_planted_edges`."""
     from pyspark.sql.window import Window
 
-    edges = _planted_edges(lineitem, max_degree, block_mod, cross_mod) \
-        .localCheckpoint(eager=False)
-    bi = (bidirected(edges).toDF("u", "w")
-          .repartition("u").persist(StorageLevel.MEMORY_AND_DISK))
-    labels = (bi.select(F.col("u").alias("v")).distinct()
+    labels = (bi.select(F.col("src").alias("v")).distinct()
               .select("v", F.col("v").alias("label")))
-    rn = Window.partitionBy("u").orderBy(F.col("c").desc(),
-                                         F.col("label").asc())
+    rn = Window.partitionBy("dst").orderBy(F.col("c").desc(),
+                                           F.col("label").asc())
     for _ in range(n_rounds):
-        counts = (bi.join(labels.select(F.col("v").alias("w"), "label"),
-                          "w")
-                  .groupBy("u", "label").agg(F.count("*").alias("c")))
-        labels = (counts.withColumn("rn", F.row_number().over(rn))
-                  .where(F.col("rn") == 1)
-                  .select(F.col("u").alias("v"), "label")
-                  .localCheckpoint(eager=False))
+        counts = (bi.join(labels, bi.src == labels.v)
+                  .groupBy("dst", "label").agg(F.count("*").alias("c")))
+        labels = loop_checkpoint(
+            counts.withColumn("rn", F.row_number().over(rn))
+            .where(F.col("rn") == 1)
+            .select(F.col("dst").alias("v"), "label"), loop)
     return labels
 
 
@@ -793,18 +778,17 @@ def lpa_modularity(lineitem: DataFrame, n_rounds: int = 3,
     |E| of the capped graph. All integers — the modularity an audit
     can re-derive — plus the rounded per-community Q contribution.
 
-    Shape: the partition is `label_propagation`'s output; e_c is one
-    keyed double-join of the edge list against the |V|-row label
+    Shape: the partition is `label_propagation`'s, over the same
+    persisted edge list, whose src < dst half is the canonical one; e_c
+    is one keyed double-join of the edge list against the |V|-row label
     table; d_c one degree aggregate joined to labels; m rides along
     as a broadcast 1-row frame (never a driver collect). The quality
     number that tells you whether LPA's communities beat a random
     cut (Q > 0) — the standard acceptance check before using a
     partition for locality-aware placement."""
-    labels = label_propagation(lineitem, n_rounds, max_degree,
-                               block_mod, cross_mod) \
-        .localCheckpoint(eager=False)
-    edges = _planted_edges(lineitem, max_degree, block_mod, cross_mod) \
-        .localCheckpoint(eager=False)
+    bi, loop = _planted_edges(lineitem, max_degree, block_mod, cross_mod)
+    labels = _propagate_labels(bi, loop, n_rounds)
+    edges = bi.where(F.col("src") < F.col("dst")).toDF("a", "b")
     m = edges.agg(F.count("*").cast("bigint").alias("m"))
     la = labels.select(F.col("v").alias("a"), F.col("label").alias("lab_a"))
     lb = labels.select(F.col("v").alias("b"), F.col("label").alias("lab_b"))

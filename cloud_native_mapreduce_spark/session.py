@@ -18,7 +18,10 @@ off and one shuffle width derived from the size of the loop's edge
 frame, the way AQE would coalesce it; `loop_checkpoint` checkpoints a
 frame there and hands it back to the caller. The state then stays
 hash-partitioned on its key, so each round shuffles only its messages.
-The caller's conf is never written.
+The caller's conf is never written. The fixed-round graph loops hold
+their state this way: `relax` and its callers, PageRank and
+personalized PageRank, `kcore_membership` and `label_propagation`
+(`operators/graph.py`, edges from its `_loop_edges`).
 """
 
 from __future__ import annotations

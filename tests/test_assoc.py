@@ -1,19 +1,8 @@
 """Association-rule invariants on a hand-built basket set + plan shape."""
 
-import pytest
-from pyspark.sql import SparkSession
-
 from cloud_native_mapreduce_spark.operators import assoc as A
 from cloud_native_mapreduce_spark.plans import audit as PA
 from cloud_native_mapreduce_spark.sources.tables import load_table
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def test_hand_checked_metrics(spark):

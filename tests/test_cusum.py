@@ -3,22 +3,12 @@ textbook recursion, detection behavior on the planted shift, plan
 shape."""
 
 import pyspark.sql.functions as F
-import pytest
-from pyspark.sql import SparkSession
 
 from cloud_native_mapreduce_spark.operators import events as E
 from cloud_native_mapreduce_spark.plans import audit as PA
 from cloud_native_mapreduce_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def test_window_identity_matches_textbook_recursion(spark):

@@ -6,21 +6,12 @@ import math
 import re
 
 import pytest
-from pyspark.sql import SparkSession
 
 from cloud_native_mapreduce_spark.operators import stats as S
 from cloud_native_mapreduce_spark.plans import audit as PA
 from cloud_native_mapreduce_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 @pytest.fixture(scope="module")

@@ -5,21 +5,12 @@ actually find neighbors (recall vs exact brute force)."""
 
 import pyspark.sql.functions as F
 import pytest
-from pyspark.sql import SparkSession
 
 from cloud_native_mapreduce_spark.plans import audit as PA
 from cloud_native_mapreduce_spark.similarity import graph_ann as GA
 from cloud_native_mapreduce_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 @pytest.fixture(scope="module")

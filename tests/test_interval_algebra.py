@@ -3,8 +3,6 @@ plus exhaustiveness and plan shape on the real corpus."""
 
 import datetime
 
-import pytest
-from pyspark.sql import SparkSession
 
 from cloud_native_mapreduce_spark.operators.relational import (
     allen_interval_relations)
@@ -18,14 +16,6 @@ ALL_RELATIONS = {
     "equals", "after", "met_by", "overlapped_by", "started_by",
     "contains", "finished_by",
 }
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def _orders(spark, rows):

@@ -1,19 +1,8 @@
 """Interval-union islands: hand-built merge cases + plan shape."""
 
-import pytest
-from pyspark.sql import SparkSession
-
 from cloud_native_mapreduce_spark.operators.events import (
     interval_coverage)
 from cloud_native_mapreduce_spark.plans import audit as PA
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def _ev(spark, rows):

@@ -2,8 +2,6 @@
 and the plan never rescans base facts on the delta path."""
 
 import pyspark.sql.functions as F
-import pytest
-from pyspark.sql import SparkSession
 
 from cloud_native_mapreduce_spark.operators.relational import (
     ivm_agg_delta)
@@ -11,14 +9,6 @@ from cloud_native_mapreduce_spark.plans import audit as PA
 from cloud_native_mapreduce_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def test_incremental_equals_recompute(spark):

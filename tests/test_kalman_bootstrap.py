@@ -6,8 +6,6 @@ import hashlib
 import math
 from collections import defaultdict
 
-import pytest
-from pyspark.sql import SparkSession
 
 from cloud_native_mapreduce_spark.operators.events import (
     KALMAN_Q, KALMAN_R, kalman_daily)
@@ -16,14 +14,6 @@ from cloud_native_mapreduce_spark.operators.stats import (
 from cloud_native_mapreduce_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def _brute_kalman(zs):

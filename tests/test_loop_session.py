@@ -44,18 +44,11 @@ def _cores(monkeypatch, n):
 
 @pytest.fixture
 def rule_spark(spark, monkeypatch):
-    """The shared session with the width rule's inputs pinned for one
-    test: shuffle.partitions at the test conf's 4 (a module that calls
-    `SparkSession.builder.config(...).getOrCreate()` rewrites it on the
-    shared session) and 1 core, so that the advisory term decides W.
-    With the suite's 8 cores every frame of 4 MiB or more would clamp
-    to the cap, that is to AQE."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "4")
+    """The shared session with 1 core, so that the advisory term
+    decides W. With the suite's 8 cores every frame of 4 MiB or more
+    would clamp to the cap, that is to AQE."""
     _cores(monkeypatch, 1)
-    yield spark
-    spark.conf.set(key, old)
+    return spark
 
 
 def test_width_rule(rule_spark, monkeypatch):
@@ -131,7 +124,9 @@ def test_loop_checkpoint_hands_back_a_partitioned_frame(rule_spark,
         .startswith("hashpartitioning(v#"), plan.outputPartitioning()
 
 
-@pytest.mark.parametrize("name", ["dag_layers", "bfs_hops", "sssp_weighted"])
+@pytest.mark.parametrize("name", [
+    "dag_layers", "bfs_hops", "sssp_weighted", "pagerank",
+    "pagerank_personalized", "kcore_membership", "label_propagation"])
 def test_loop_queries_leave_caller_conf_untouched(rule_spark, sf_dir, name):
     spark = rule_spark
     spark.__dict__.pop("_cnms_loop_sessions", None)

@@ -1,21 +1,10 @@
 """Markov stationary distribution: probability invariants + a
 hand-checked absorbing-ish chain."""
 
-import pytest
-from pyspark.sql import SparkSession
-
 from cloud_native_mapreduce_spark.operators.events import (
     markov_stationary)
 from cloud_native_mapreduce_spark.plans import audit as PA
 from cloud_native_mapreduce_spark.sources.tables import load_table
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def test_distribution_sums_to_one(spark):

@@ -2,7 +2,6 @@
 
 import pyspark.sql.functions as F
 import pytest
-from pyspark.sql import SparkSession
 
 from cloud_native_mapreduce_spark.operators.retrieval import mmr_rerank
 from cloud_native_mapreduce_spark.plans import audit as PA
@@ -11,14 +10,6 @@ from cloud_native_mapreduce_spark.similarity.graph_ann import (
 from cloud_native_mapreduce_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 @pytest.fixture(scope="module")

@@ -1,18 +1,7 @@
 """Positional phrase search: adjacency semantics + plan shape."""
 
-import pytest
-from pyspark.sql import SparkSession
-
 from cloud_native_mapreduce_spark.operators.retrieval import phrase_search
 from cloud_native_mapreduce_spark.plans import audit as PA
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def test_adjacency_and_order_required(spark):

@@ -887,17 +887,10 @@ def _exchanges(node) -> list[str]:
     return out
 
 
-def test_relax_round_in_loop_session_shuffles_only_messages(
-        spark, monkeypatch):
-    """A `relax` round checkpointed in the loop session (AQE off, W=2)
-    plans exactly one hash exchange, on `dst`: the messages. The state
-    comes back from the previous round's checkpoint hash-partitioned on
-    `v` and the persisted edges sit on `src` at the same width, so the
-    edge join and the join back read both sides where they are."""
-    import pyspark.sql.functions as F
+def _capture_checkpoint_exchanges(monkeypatch) -> list[list[str]]:
+    """From now on, the exchanges of every frame `localCheckpoint`
+    plans, one list per call."""
     from pyspark.sql.classic.dataframe import DataFrame
-    from cloud_native_mapreduce_spark.operators.graph import (
-        _loop_edges, relax)
 
     plans = []
     real = DataFrame.localCheckpoint
@@ -906,31 +899,93 @@ def test_relax_round_in_loop_session_shuffles_only_messages(
         plans.append(_exchanges(self._jdf.queryExecution().executedPlan()))
         return real(self, eager, *args, **kwargs)
 
-    # 120 edges; the cross join with a one-row filter of a 20,000-row
-    # range multiplies Catalyst's size estimate to ~1.4 advisory
-    # partitions, so with one core the width rule gives W=2 (and
-    # nothing broadcasts); the suite's local[8] would clamp it to AQE
+    monkeypatch.setattr(DataFrame, "localCheckpoint", capturing)
+    return plans
+
+
+def _two_wide_loop_edges(spark, monkeypatch):
+    """120 canonical (a, b) edges on 45 vertices, b - a in {1, 3, 5}.
+    The cross join with a one-row filter of a 20,000-row range
+    multiplies Catalyst's size estimate to ~1.4 advisory partitions,
+    so with one core the width rule gives W=2 (and nothing
+    broadcasts); the suite's local[8] would clamp it to AQE."""
+    import pyspark.sql.functions as F
     from pyspark import SparkContext
+
     monkeypatch.setattr(SparkContext, "defaultParallelism",
                         property(lambda self: 1))
-    edges = (spark.range(120)
-             .select((F.col("id") % 40).alias("a"),
-                     (F.col("id") % 40 + F.col("id") % 3 * 2 + 1).alias("b"))
-             .crossJoin(spark.range(20000).where("id = 0").select())
-             .select("a", "b"))
-    bi, loop = _loop_edges(edges)
+    return (spark.range(120)
+            .select((F.col("id") % 40).alias("a"),
+                    (F.col("id") % 40 + F.col("id") % 3 * 2 + 1).alias("b"))
+            .crossJoin(spark.range(20000).where("id = 0").select())
+            .select("a", "b"))
+
+
+def _only_message_exchanges(loop, plans) -> None:
+    assert loop.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert loop.conf.get("spark.sql.shuffle.partitions") == "2"
+    for plan in plans:
+        assert len(plan) == 1 and plan[0].startswith("hashpartitioning(dst#") \
+            and plan[0].endswith(", 2)"), plan
+
+
+def test_relax_round_in_loop_session_shuffles_only_messages(
+        spark, monkeypatch):
+    """A `relax` round checkpointed in the loop session (AQE off, W=2)
+    plans exactly one hash exchange, on `dst`: the messages. The state
+    comes back from the previous round's checkpoint hash-partitioned on
+    `v` and the persisted edges sit on `src` at the same width, so the
+    edge join and the join back read both sides where they are."""
+    import pyspark.sql.functions as F
+    from cloud_native_mapreduce_spark.operators.graph import (
+        _loop_edges, relax)
+
+    bi, loop = _loop_edges(_two_wide_loop_edges(spark, monkeypatch))
     state = bi.select(F.col("src").alias("v")).distinct() \
         .select("v", F.when(F.col("v") == 0, 0).otherwise(99).alias("dist"))
-    monkeypatch.setattr(DataFrame, "localCheckpoint", capturing)
+    plans = _capture_checkpoint_exchanges(monkeypatch)
     try:
         dist = {r.v: r.dist for r in
                 relax(bi, state, F.min, lambda c: c + 1, 3, loop).collect()}
     finally:
         bi.unpersist()
-    assert loop.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert loop.conf.get("spark.sql.shuffle.partitions") == "2"
     assert (dist[0], dist[1], dist[2], dist[3]) == (0, 1, 2, 1), dist
     assert len(plans) == 3
-    for plan in plans[1:]:  # rounds 2 and 3 read a checkpointed state
-        assert len(plan) == 1 and plan[0].startswith("hashpartitioning(dst#") \
-            and plan[0].endswith(", 2)"), plan
+    # rounds 2 and 3 read a checkpointed state
+    _only_message_exchanges(loop, plans[1:])
+
+
+def test_pagerank_round_in_loop_session_shuffles_only_messages(
+        spark, monkeypatch):
+    """A PageRank round checkpointed in the loop session (AQE off, W=2)
+    plans exactly one hash exchange: the messages' `hashpartitioning(dst,
+    W)`. The degree-attached edges sit on `src` and the ranks come back
+    hash-partitioned on `v`, so the scatter join moves neither. The
+    ranks match a Python replica of the integer rounds."""
+    import pyspark.sql.functions as F
+    from cloud_native_mapreduce_spark.operators import graph as G
+
+    bi_d, outd, loop = G._pagerank_edges(
+        _two_wide_loop_edges(spark, monkeypatch))
+    ranks = outd.select(F.col("src").alias("v"),
+                        F.lit(G.PR_SCALE).cast("long").alias("rank"))
+    teleport = 15 * G.PR_SCALE // 100
+    plans = _capture_checkpoint_exchanges(monkeypatch)
+    got = {r.v: r.rank for r in G._pagerank_rounds(
+        bi_d, ranks, F.lit(teleport), 3, loop).collect()}
+    assert len(plans) == 3
+    _only_message_exchanges(loop, plans)
+
+    nbrs = {}
+    for i in range(120):
+        a, b = i % 40, i % 40 + i % 3 * 2 + 1
+        nbrs.setdefault(a, []).append(b)
+        nbrs.setdefault(b, []).append(a)
+    want = dict.fromkeys(nbrs, G.PR_SCALE)
+    for _ in range(3):
+        inflow = dict.fromkeys(nbrs, 0)
+        for u, ns in nbrs.items():
+            for w in ns:
+                inflow[w] += want[u] // len(ns)
+        want = {v: teleport + 85 * inflow[v] // 100 for v in nbrs}
+    assert got == want

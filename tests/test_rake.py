@@ -2,21 +2,11 @@
 plan shape."""
 
 import pyspark.sql.functions as F
-import pytest
-from pyspark.sql import SparkSession
 
 from cloud_native_mapreduce_spark.functions import text as T
 from cloud_native_mapreduce_spark.plans import audit as PA
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def test_known_tiny_corpus(spark):

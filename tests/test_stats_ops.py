@@ -1,8 +1,5 @@
 """Ridge path + A/B z-test invariants."""
 
-import pytest
-from pyspark.sql import SparkSession
-
 from cloud_native_mapreduce_spark.operators.advanced import (
     ols_normal_equations, ridge_path)
 from cloud_native_mapreduce_spark.operators.events import (
@@ -11,14 +8,6 @@ from cloud_native_mapreduce_spark.plans import audit as PA
 from cloud_native_mapreduce_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def test_ridge_lambda_zero_is_ols(spark):

@@ -1,22 +1,12 @@
 """Streaming CUSUM: stream/batch parity and alarm semantics."""
 
 import pyspark.sql.functions as F
-import pytest
-from pyspark.sql import SparkSession
 
 from cloud_native_mapreduce_spark.operators import events as E
 from cloud_native_mapreduce_spark.sources.tables import load_table
 from cloud_native_mapreduce_spark.streaming import core as S
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def test_stream_matches_batch_alarm_counts(spark):

@@ -3,8 +3,6 @@ value checks and invariants."""
 
 from collections import defaultdict
 
-import pytest
-from pyspark.sql import SparkSession
 
 from cloud_native_mapreduce_spark.operators.curation import (
     heaps_law_curve, simpson_diversity)
@@ -12,14 +10,6 @@ from cloud_native_mapreduce_spark.operators.events import kaplan_meier
 from cloud_native_mapreduce_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-    yield s
 
 
 def test_kaplan_meier_matches_brute_force(spark):
