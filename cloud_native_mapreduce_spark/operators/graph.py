@@ -21,13 +21,18 @@ Big Data Analysis*, VLDB'12), and three kernels, defined next to
     loop behind `bfs_hops`, `sssp_weighted`, `landmark_distances`, the
     `graph_diameter_approx` sweeps and `dag_layers`.
 
-The fixed-round loops (`relax`, PageRank and personalized PageRank
-through `_pagerank_rounds`, `kcore_membership`, `label_propagation`)
-hold their state one way: the edges come from `_loop_edges`, laid out
-on `src` at the loop width, and every round checkpoints through
-`loop_checkpoint` in the loop session (`session.loop_session`: AQE
-off, one width from the edge frame's size). There the state stays
-hash-partitioned on `v`, and a round shuffles only its messages.
+The fixed-round loops hold their state one way: every round
+checkpoints through `loop_checkpoint` in the loop session
+(`session.loop_session`: AQE off, one width from the edge frame's
+size). They are `relax`, PageRank and personalized PageRank through
+`_pagerank_rounds`, `kcore_membership`, `label_propagation`,
+`wl_fingerprints`, `luby_mis` and `boruvka_msf`. All but Borůvka take
+their edges from `_loop_edges`, laid out on `src` at the loop width,
+so the state stays hash-partitioned on `v` and a round shuffles only
+its messages; Borůvka checkpoints its weighted (a, b, w) edge frame
+in the loop session as it is. `kcore_decomposition`, `ktruss_edges`
+and `connected_components` (`dedup/components.py`) still checkpoint
+under the caller's AQE.
 
 Triangle work uses **degree orientation**: each edge points from its
 lower-degree endpoint to its higher-degree one (ties by ID), so every
@@ -546,6 +551,7 @@ def kcore_decomposition(lineitem: DataFrame,
     from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
+    # AQE, not the loop session: rounds persist; porting cut 145 → 141 jobs
     edges = copart_edges(lineitem, max_degree) \
         .localCheckpoint(eager=False)
     bi = (bidirected(edges).toDF("u", "w")
@@ -567,6 +573,7 @@ def kcore_decomposition(lineitem: DataFrame,
                .select(F.col("u").alias("v"),
                        F.least("deg", "h").alias("core"), "old")
                .persist(StorageLevel.MEMORY_AND_DISK))
+        # AQE, not the loop session: rounds persist; porting cut 145 → 141 jobs
         new_core = pre.localCheckpoint(eager=True)
         # drop the previous round's cache entry now that its
         # successor is materialized (checkpoint blocks keep the data)
@@ -1013,41 +1020,42 @@ def boruvka_msf(lineitem: DataFrame, n_rounds: int = BORUVKA_ROUNDS,
              (measured 92 s/step at sf0.001), while this form is
              the proven flat-cost shape.
 
+    Every frame checkpoints lazily in the loop session. There a round
+    runs as one job, not one per shuffle stage as under AQE, and its
+    joins plan sort-merge where AQE broadcasts the |C|-row component
+    frames at run time, so most of the time sits in the final query.
+    Against the same checkpoints under AQE, at sf0.1 on 4 cores
+    (medians of 5 alternating pairs): builder 13.7 s against 29.7 s,
+    final execution 11.3 s against 0.6 s, wall 25.1 s against 30.3 s.
+
     Output: one row per round — edges added, weight added (exact
     integer sums), components remaining — the convergence trace a
     100 TB run would be monitored by. Oracle unrolls the identical
     rounds x label rounds in SQL."""
     from pyspark.sql.window import Window
 
-    # Round-15 NEGATIVE experiment: pre-partitioning this frame on "a"
-    # (and the selection graph on "gn") for the per-round tag joins
-    # measured 14.8 → 17.8 s at idle — AQE broadcasts the |C|-row
-    # component/label sides, so the edge frame never shuffles in those
-    # joins and the added layout exchanges were pure cost. Reverted;
-    # recorded so round 16 doesn't retry it.
-    edges = copart_weighted_edges(lineitem, max_degree) \
-        .localCheckpoint(eager=False)
-    comp = (endpoints(edges).distinct()
-            .select("v", F.col("v").alias("c"))
-            .localCheckpoint(eager=False))
+    edges = copart_weighted_edges(lineitem, max_degree)
+    loop = loop_session(edges)
+    edges = loop_checkpoint(edges, loop)
+    comp = loop_checkpoint(endpoints(edges).distinct()
+                           .select("v", F.col("v").alias("c")), loop)
     round_stats = []
     for r in range(1, n_rounds + 1):
-        ce = (edges
-              .join(comp.select(F.col("v").alias("a"),
-                                F.col("c").alias("ca")), "a")
-              .join(comp.select(F.col("v").alias("b"),
-                                F.col("c").alias("cb")), "b")
-              .where(F.col("ca") != F.col("cb"))
-              .localCheckpoint(eager=False))
+        ce = loop_checkpoint(
+            edges.join(comp.select(F.col("v").alias("a"),
+                                   F.col("c").alias("ca")), "a")
+            .join(comp.select(F.col("v").alias("b"),
+                              F.col("c").alias("cb")), "b")
+            .where(F.col("ca") != F.col("cb")), loop)
         cand = (ce.select(F.col("ca").alias("cc"), "w", "a", "b",
                           F.col("cb").alias("oc"))
                 .unionAll(ce.select(F.col("cb").alias("cc"), "w", "a",
                                     "b", F.col("ca").alias("oc"))))
         wsel = Window.partitionBy("cc").orderBy("w", "a", "b")
-        sel = (cand.withColumn("rn", F.row_number().over(wsel))
-               .where(F.col("rn") == 1)
-               .select("cc", "oc", "w", "a", "b")
-               .localCheckpoint(eager=False))
+        sel = loop_checkpoint(
+            cand.withColumn("rn", F.row_number().over(wsel))
+            .where(F.col("rn") == 1)
+            .select("cc", "oc", "w", "a", "b"), loop)
         stats = (sel.select("w", "a", "b").distinct()
                  .agg(F.count(F.lit(1)).cast("bigint")
                       .alias("edges_added"),
@@ -1055,29 +1063,26 @@ def boruvka_msf(lineitem: DataFrame, n_rounds: int = BORUVKA_ROUNDS,
                       .alias("weight_added")))
         # selection graph (bidirectional) is FIXED for the inner
         # loop; only the |C|-row label frame moves per round
-        gedges = (bidirected(sel.select(F.col("cc").alias("a"),
-                                        F.col("oc").alias("b")))
-                  .toDF("gc", "gn")
-                  .distinct()
-                  .localCheckpoint(eager=False))
-        label = (comp.select(F.col("c").alias("cc")).distinct()
-                 .select("cc", F.col("cc").alias("lab"))
-                 .localCheckpoint(eager=False))
+        gedges = loop_checkpoint(
+            bidirected(sel.select(F.col("cc").alias("a"),
+                                  F.col("oc").alias("b")))
+            .toDF("gc", "gn").distinct(), loop)
+        label = loop_checkpoint(
+            comp.select(F.col("c").alias("cc")).distinct()
+            .select("cc", F.col("cc").alias("lab")), loop)
         for _ in range(n_label_rounds):
             nbr = (gedges.join(label.select(F.col("cc").alias("gn"),
                                             "lab"), "gn")
                    .groupBy(F.col("gc").alias("cc"))
                    .agg(F.min("lab").alias("nl")))
-            label = (label.join(nbr, "cc", "left")
-                     .select("cc", F.least(
-                         F.col("lab"),
-                         F.coalesce(F.col("nl"), F.col("lab")))
-                         .alias("lab"))
-                     .localCheckpoint(eager=False))
-        comp = (comp.join(label.select(F.col("cc").alias("c"), "lab"),
-                          "c")
-                .select("v", F.col("lab").alias("c"))
-                .localCheckpoint(eager=False))
+            label = loop_checkpoint(
+                label.join(nbr, "cc", "left")
+                .select("cc", F.least(
+                    F.col("lab"), F.coalesce(F.col("nl"), F.col("lab")))
+                    .alias("lab")), loop)
+        comp = loop_checkpoint(
+            comp.join(label.select(F.col("cc").alias("c"), "lab"), "c")
+            .select("v", F.col("lab").alias("c")), loop)
         n_comp = comp.select("c").distinct() \
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_components"))
         round_stats.append(
@@ -1225,63 +1230,51 @@ def luby_mis(lineitem: DataFrame,
     operator re-checkpointed the whole |V| state and the whole edge
     frame every round and soaked 538 s at sf1; decided vertices
     carry no information, so both frames now SHRINK): per round one
-    keyed join of the current symmetric edge frame against the
-    undecided set for the neighborhood priority floor, the winner
-    cut, and two anti-joins that remove decided vertices from the
-    undecided frame and their edges from the edge frame — round
-    r+1's cost is proportional to what round r left undecided,
-    which on hash priorities collapses geometrically. Early exit on
-    an empty undecided set (one bounded scalar per round); the
-    oracle unrolls the full budget — extra rounds are identity.
+    keyed join of the current symmetric edge frame (`_loop_edges`)
+    against the undecided set for each receiver's neighborhood
+    priority floor, the winner cut, and two anti-joins that remove
+    decided vertices from the undecided frame and their edges from
+    the edge frame — round r+1's cost is proportional to what round
+    r left undecided, which on hash priorities collapses
+    geometrically. Every frame checkpoints lazily in the loop
+    session; the emptiness probe of the undecided set before each
+    round forces the previous round's chain and ends the loop, so no
+    round runs on an empty set. The oracle unrolls the full budget —
+    extra rounds are identity.
 
     Output: (partkey, mis_round) for MIS members, the round each
     joined."""
-    edges = copart_edges(lineitem)
     key = (F.conv(F.substring(F.md5(F.col("v").cast("string")), 1, 7),
                   16, 10).cast("bigint")
            * F.lit(_MIS_SHIFT) + F.col("v"))
-    sym = bidirected(edges).toDF("a", "b").localCheckpoint(eager=True)
-    und = (sym.select(F.col("a").alias("v")).distinct()
-           .withColumn("k", key)
-           .localCheckpoint(eager=True))
+    sym, loop = _loop_edges(copart_edges(lineitem))
+    und = loop_checkpoint(sym.select(F.col("src").alias("v")).distinct()
+                          .withColumn("k", key), loop)
     parts = []
     for r in range(1, rounds + 1):
-        # Round-15 job-count cut (guide §2.4 — remove jobs outright):
-        # the round's four frames used to be four EAGER checkpoints
-        # plus an isEmpty probe — 5 driver barriers per round, ~155
-        # jobs per query at sf0.1 with the wall dominated by per-job
-        # fixed overhead, not compute. The checkpoints are now LAZY
-        # (still lineage-truncating and still cached-once on first
-        # materialization, so no AQE re-execution of shared subtrees)
-        # and ONE und.count() per round forces the chain and doubles
-        # as the early-exit probe. Same frames, same results.
-        kb = und.select(F.col("v").alias("b"), F.col("k").alias("kb"))
-        nmin = (sym.join(kb, "b")
-                .groupBy(F.col("a").alias("v"))
-                .agg(F.min("kb").alias("mn")))
-        m = (und.join(nmin, "v", "left")
-             .where(F.col("mn").isNull() | (F.col("k") < F.col("mn")))
-             .select("v")
-             .localCheckpoint(eager=False))
-        parts.append(m.select("v", F.lit(r).cast("int").alias("rnd")))
-        x = (sym.join(m.select(F.col("v").alias("a")), "a")
-             .select(F.col("b").alias("v")).distinct())
-        removed = m.unionByName(x).distinct() \
-            .localCheckpoint(eager=False)
-        und = (und.join(removed, "v", "left_anti")
-               .localCheckpoint(eager=False))
-        sym = (sym.join(removed.select(F.col("v").alias("a")), "a",
-                        "left_anti")
-               .join(removed.select(F.col("v").alias("b")), "b",
-                     "left_anti")
-               .localCheckpoint(eager=False))
-        if und.count() == 0:
+        if und.isEmpty():
             break
+        nmin = (sym.join(und.select(F.col("v").alias("src"),
+                                    F.col("k").alias("kn")), "src")
+                .groupBy("dst").agg(F.min("kn").alias("mn")))
+        m = loop_checkpoint(
+            und.join(nmin, und.v == nmin.dst, "left")
+            .where(F.col("mn").isNull() | (F.col("k") < F.col("mn")))
+            .select("v"), loop)
+        parts.append(m.select("v", F.lit(r).cast("int").alias("rnd")))
+        x = (sym.join(m.select(F.col("v").alias("src")), "src")
+             .select(F.col("dst").alias("v")).distinct())
+        removed = loop_checkpoint(m.unionByName(x).distinct(), loop)
+        und = loop_checkpoint(und.join(removed, "v", "left_anti"), loop)
+        sym = loop_checkpoint(
+            sym.join(removed.select(F.col("v").alias("src")), "src",
+                     "left_anti")
+            .join(removed.select(F.col("v").alias("dst")), "dst",
+                  "left_anti"), loop)
     if not parts:
         # Edge-free co-purchase graph (or rounds=0): ``und`` only ever
         # holds edge-incident vertices, so there is nothing to decide
-        # and the oracle returns an empty set — mirror it instead of
-        # crashing on parts[0] (round-13 advice).
+        # and the oracle returns an empty set.
         return lineitem.sparkSession.createDataFrame(
             [], "partkey bigint, mis_round int")
     out = parts[0]
@@ -1316,45 +1309,27 @@ def wl_fingerprints(lineitem: DataFrame,
     DuckDB string_agg ORDER BY), so hashes, class sizes, and the
     order-free fingerprint Σ hash·count are exact integers.
 
-    Scale: per round one keyed join of the static symmetric edge
-    frame against the |V|-row label frame and one per-vertex
-    aggregate whose state is bounded by the degree cap (≤256
-    neighbor labels); summaries are label-class-sized. Output per
+    Scale (the `relax` shape): per round one keyed join of the
+    `_loop_edges` list against the |V|-row label frame (the sender's
+    label on src = v) and one per-receiver aggregate whose state is
+    bounded by the degree cap (≤256 neighbor labels), checkpointed in
+    the loop session; summaries are label-class-sized. Output per
     round: (round, n_distinct_labels, max_class, fingerprint)."""
-    edges = copart_edges(lineitem)
-    # Round-15 NEGATIVE experiment: pre-partitioning sym on the join
-    # key b before this checkpoint was bimodal at sf0.1 (6-18 s across
-    # four gated A/B pairs vs a stable ~8 s without) — the checkpoint
-    # drops the partitioning anyway (LogicalRDD, plan-verified on the
-    # components loop) and the per-round join broadcasts the label
-    # side, so the exchange bought nothing. Left out.
-    sym = bidirected(edges).toDF("a", "b").localCheckpoint(eager=False)
-    lbl = (sym.select(F.col("a").alias("v")).distinct()
-           .withColumn("lbl", F.lit("1"))
-           .localCheckpoint(eager=False))
-    # pinned per-round aggregate width (round-14's wedge-join lesson,
-    # VERDICT r14 #7): the joined frame is byte-tiny, so AQE coalesces
-    # the collect_list aggregate to 1-2 tasks of CPU-moderate string
-    # sort/concat/md5 work (profiled 2.0 s single-task per round);
-    # repartitioning on the grouping key at the deploy-configured
-    # width replaces the aggregate's own exchange rather than adding
-    # one
-    n_shuffle = int(lineitem.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"))
+    bi, loop = _loop_edges(copart_edges(lineitem))
+    lbl = loop_checkpoint(bi.select(F.col("src").alias("v")).distinct()
+                          .withColumn("lbl", F.lit("1")), loop)
     out = None
     for r in range(1, rounds + 1):
-        nb = (sym.join(lbl.select(F.col("v").alias("b"),
-                                  F.col("lbl").alias("nl")), "b")
-              .repartition(n_shuffle, F.col("a"))
-              .groupBy(F.col("a").alias("v"))
+        nb = (bi.join(lbl.select("v", F.col("lbl").alias("nl")),
+                      bi.src == F.col("v"))
+              .groupBy("dst")
               .agg(F.array_join(F.sort_array(F.collect_list("nl")),
                                 ",").alias("nls")))
-        lbl = (lbl.join(nb, "v")
-               .select("v", F.substring(
-                   F.md5(F.concat_ws("|", F.col("lbl"),
-                                     F.col("nls"))), 1, 8)
-                   .alias("lbl"))
-               .localCheckpoint(eager=True))
+        lbl = loop_checkpoint(
+            lbl.join(nb, lbl.v == nb.dst)
+            .select("v", F.substring(
+                F.md5(F.concat_ws("|", F.col("lbl"), F.col("nls"))), 1, 8)
+                .alias("lbl")), loop)
         classes = lbl.groupBy("lbl").agg(
             F.count(F.lit(1)).cast("bigint").alias("c"))
         summ = classes.agg(

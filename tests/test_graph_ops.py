@@ -13,6 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from cloud_native_mapreduce_spark.plans import audit as PA
+from cloud_native_mapreduce_spark.registry import QUERIES
+
 
 def _edges_df(spark, edges):
     """lineitem-shaped frame whose co-purchase graph is exactly
@@ -541,6 +544,20 @@ class TestLubyMis:
             nb.setdefault(b, set()).add(a)
         assert all(v in mis or nb[v] & mis for v in verts)
 
+    def test_luby_mis_edge_free_graph_is_empty(self, spark):
+        """Single-part orders produce zero co-purchase edges; the MIS
+        frame must be empty with the contract schema, not an
+        IndexError on parts[0]."""
+        from cloud_native_mapreduce_spark.operators.graph import (
+            luby_mis)
+        li = spark.createDataFrame(
+            [(1, 10, 1.0), (2, 20, 1.0), (3, 30, 2.0)],
+            "l_orderkey long, l_partkey long, l_quantity double")
+        out = luby_mis(li)
+        assert [f.name for f in out.schema.fields] == [
+            "partkey", "mis_round"]
+        assert out.count() == 0
+
 
 class TestDegreeAssortativity:
     def test_star_is_perfectly_disassortative(self, spark):
@@ -616,3 +633,81 @@ class TestWlFingerprints:
             .builder(spark, sf_dir).collect())
         assert all(rows[i][1] <= rows[i + 1][1]
                    for i in range(len(rows) - 1))
+
+
+class TestFrequentTriples:
+    def test_hand_enumeration(self, spark):
+        """Baskets {1,2,3,4}, {1,2,3,4}, {1,2,3}: triple (1,2,3)
+        supports 3; the other C(4,3)-1 triples support 2; ordering
+        is (support DESC, keys)."""
+        from cloud_native_mapreduce_spark.operators.graph import (
+            frequent_triples)
+        orders = [(1, [1, 2, 3, 4]), (2, [4, 3, 2, 1]), (3, [1, 2, 3])]
+        rows = [(o, p, 1.0) for o, parts in orders for p in parts]
+        li = spark.createDataFrame(
+            rows, "l_orderkey long, l_partkey long, l_quantity double")
+        got = [(r.pa, r.pb, r.pc, r.n_support)
+               for r in frequent_triples(li).collect()]
+        assert got[0] == (1, 2, 3, 3)
+        assert set(got[1:]) == {(1, 2, 4, 2), (1, 3, 4, 2),
+                                (2, 3, 4, 2)}
+        assert got[1:] == sorted(got[1:])   # key tiebreak order
+
+    def test_plan_no_three_way_self_join(self, spark, sf_dir):
+        """The Spark plan enumerates in-basket (generators), never a
+        3-way corpus self-join: exactly one aggregate source scan
+        feeds the TakeOrdered; no SortMergeJoin of lineitem against
+        itself."""
+        df = QUERIES["frequent_triples"].builder(spark, sf_dir)
+        a = PA.audit(df)
+        assert a.has_take_ordered
+        assert not a.has_sort_merge_join
+        assert not a.has_cartesian
+
+
+class TestHubRemoval:
+    def test_hand_star_shatters(self, spark):
+        """A star K(1,5) (hub part 1): before = 1 component, giant 6;
+        removing the hub (k=1) leaves 5 singletons."""
+        from cloud_native_mapreduce_spark.operators.graph import (
+            hub_removal_impact)
+        orders = [(i, [1, 10 + i]) for i in range(5)]
+        rows = [(o, p, 1.0) for o, parts in orders for p in parts]
+        li = spark.createDataFrame(
+            rows, "l_orderkey long, l_partkey long, l_quantity double")
+        r = hub_removal_impact(li, k=1).collect()[0]
+        assert (r.n_vertices, r.n_edges) == (6, 5)
+        assert (r.n_comp_before, r.giant_before) == (1, 6)
+        assert (r.n_comp_after, r.giant_after) == (5, 1)
+
+    def test_hand_clique_is_robust(self, spark):
+        """K5 survives one removal as K4: still one component."""
+        from cloud_native_mapreduce_spark.operators.graph import (
+            hub_removal_impact)
+        li = spark.createDataFrame(
+            [(1, p, 1.0) for p in range(1, 6)],
+            "l_orderkey long, l_partkey long, l_quantity double")
+        r = hub_removal_impact(li, k=1).collect()[0]
+        assert (r.n_comp_before, r.giant_before) == (1, 5)
+        assert (r.n_comp_after, r.giant_after) == (1, 4)
+
+
+class TestRichClub:
+    def test_hand_clique_plus_leaves(self, spark):
+        """K4 core (parts 1-4, degree >= 3 each gets +leaf) with one
+        leaf per core vertex: degrees core = 4, leaves = 1. At k=3
+        the club is the K4 -> phi = 1.0; at k=4 the club is empty."""
+        from cloud_native_mapreduce_spark.operators.graph import (
+            rich_club_coefficients)
+        orders = [(1, [1, 2, 3, 4])] + \
+                 [(10 + i, [i, 100 + i]) for i in (1, 2, 3, 4)]
+        rows = [(o, p, 1.0) for o, parts in orders for p in parts]
+        li = spark.createDataFrame(
+            rows, "l_orderkey long, l_partkey long, l_quantity double")
+        got = {r.k: r for r in rich_club_coefficients(
+            li, ks=(3, 4)).collect()}
+        assert got[3].n_members == 4
+        assert got[3].n_club_edges == 6
+        assert got[3].phi == 1.0
+        assert got[4].n_members == 0
+        assert got[4].phi is None

@@ -126,7 +126,8 @@ def test_loop_checkpoint_hands_back_a_partitioned_frame(rule_spark,
 
 @pytest.mark.parametrize("name", [
     "dag_layers", "bfs_hops", "sssp_weighted", "pagerank",
-    "pagerank_personalized", "kcore_membership", "label_propagation"])
+    "pagerank_personalized", "kcore_membership", "label_propagation",
+    "wl_fingerprints", "luby_mis", "boruvka_msf"])
 def test_loop_queries_leave_caller_conf_untouched(rule_spark, sf_dir, name):
     spark = rule_spark
     spark.__dict__.pop("_cnms_loop_sessions", None)

@@ -989,3 +989,24 @@ def test_pagerank_round_in_loop_session_shuffles_only_messages(
                 inflow[w] += want[u] // len(ns)
         want = {v: teleport + 85 * inflow[v] // 100 for v in nbrs}
     assert got == want
+
+
+def test_wl_round_in_loop_session_shuffles_only_messages(
+        spark, monkeypatch):
+    """A WL round checkpointed in the loop session (AQE off, W=2) plans
+    exactly one exchange, the messages' `hashpartitioning(dst, W)`: the
+    labels come back hash-partitioned on `v` and the `_loop_edges` list
+    sits on `src`, so the sender-label join and the join back read both
+    sides where they are. The label values are pinned by the Python
+    replica in `test_properties.py`."""
+    from cloud_native_mapreduce_spark import session as S
+    from cloud_native_mapreduce_spark.operators import graph as G
+
+    edges = _two_wide_loop_edges(spark, monkeypatch)
+    monkeypatch.setattr(G, "copart_edges", lambda lineitem: edges)
+    plans = _capture_checkpoint_exchanges(monkeypatch)
+    rounds = G.wl_fingerprints(None, 3).collect()
+    assert sorted(r["round"] for r in rounds) == [1, 2, 3]
+    # the edge list, the seed labels, then one checkpoint per round
+    assert len(plans) == 5
+    _only_message_exchanges(S.loop_session(edges), plans[2:])
