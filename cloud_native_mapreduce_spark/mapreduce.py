@@ -155,6 +155,8 @@ def _run_native_job(spark: SparkSession, spec: MapReduceSpec):
     # Moving this path to mapInArrow plus a DataFrame shuffle was tried
     # and measured slower: 3.09 vs 2.52 CPU s per word-count job on the
     # benchmark's 1 MB corpus (4 cores). The pickled RDD shuffle stays.
+    # Both sides then paid ≈0.2 CPU s per Python task to re-read
+    # pyspark.zip, which `worker_daemon` now avoids; not re-measured.
     parts = mapped.repartitionAndSortWithinPartitions(
         numPartitions=spec.num_reduce_tasks)
 

@@ -20,8 +20,16 @@ frame there and hands it back to the caller. The state then stays
 hash-partitioned on its key, so each round shuffles only its messages.
 The caller's conf is never written. The fixed-round graph loops hold
 their state this way: `relax` and its callers, PageRank and
-personalized PageRank, `kcore_membership` and `label_propagation`
-(`operators/graph.py`, edges from its `_loop_edges`).
+personalized PageRank, `kcore_membership`, `label_propagation`, WL
+fingerprints, Luby MIS and Borůvka (`operators/graph.py`, edges from
+its `_loop_edges` except Borůvka's weighted frame).
+
+Python tasks (native MapReduce jobs, pandas/Arrow UDFs) run in workers
+forked from a daemon. On local masters `get_spark` makes that daemon
+`worker_daemon`, which stops each task from re-reading `pyspark.zip`'s
+directory (≈0.2 CPU s per task on CPython 3.11), and puts this
+package's directory on the workers' path so they import the engine
+from any working directory.
 """
 
 from __future__ import annotations
@@ -29,6 +37,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+#: The directory that holds this package: on local masters, workers import
+#: the engine from here.
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def host_driver_memory() -> str:
@@ -92,6 +105,15 @@ def get_spark(app_name: str = "cloud-native-mapreduce-spark",
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
     for local runs; on a cluster, leave unset and submit via spark-submit.
+
+    On ``local*`` masters the Python workers run under the engine's
+    daemon (``spark.python.daemon.module``, see `worker_daemon`) with
+    the directory that holds this package on their ``PYTHONPATH``
+    (``spark.executorEnv.PYTHONPATH``, which PySpark appends after its
+    own zips), so workers import the engine whatever the working
+    directory. ``extra_conf`` overrides either. Cluster masters and
+    sessions passed in through ``__spark_entry__`` keep PySpark's
+    daemon; there ``ship_package`` ships the engine.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -100,6 +122,10 @@ def get_spark(app_name: str = "cloud-native-mapreduce-spark",
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    if master.startswith("local"):
+        conf.setdefault("spark.python.daemon.module",
+                        "cloud_native_mapreduce_spark.worker_daemon")
+        conf.setdefault("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -256,17 +256,86 @@ _FOREIGN_CWD_JOB = textwrap.dedent("""
 """)
 
 
-def test_pipe_job_runs_from_a_foreign_cwd(corpus_dir, tmp_path):
-    """Launched outside the repository with no PYTHONPATH, executor
-    Python workers cannot import this package; the pipe job must not
-    need them."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+def _run_from_foreign_cwd(script: str, cwd):
+    """Run `script` in a fresh interpreter from `cwd` with PYTHONPATH
+    unset; the JSON payload of its ``RESULT`` line."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    proc = subprocess.run(
-        [sys.executable, "-c",
-         _FOREIGN_CWD_JOB.format(repo=repo, corpus=corpus_dir)],
-        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300)
+    proc = subprocess.run([sys.executable, "-c", script], cwd=cwd, env=env,
+                          capture_output=True, text=True, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
     line = next(ln for ln in proc.stdout.splitlines()
                 if ln.startswith("RESULT "))
-    assert json.loads(line[len("RESULT "):]) == _golden_counts(CORPUS)
+    return json.loads(line[len("RESULT "):])
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_pipe_job_runs_from_a_foreign_cwd(corpus_dir, tmp_path):
+    """Launched outside the repository with no PYTHONPATH, the pipe job
+    runs its scripts from the JVM and starts no Python worker."""
+    got = _run_from_foreign_cwd(
+        _FOREIGN_CWD_JOB.format(repo=_REPO, corpus=corpus_dir), tmp_path)
+    assert got == _golden_counts(CORPUS)
+
+
+_FOREIGN_CWD_WORKERS = textwrap.dedent("""
+    import json, os, sys
+    sys.path[:0] = [{repo!r}, os.path.join({repo!r}, "tests")]
+    import duckdb
+    from cloud_native_mapreduce_spark import mapreduce as MR
+    from cloud_native_mapreduce_spark.registry import QUERIES
+    from cloud_native_mapreduce_spark.session import get_spark
+    from cloud_native_mapreduce_spark.sources.tables import TABLES
+    from test_registry_oracle import _multiset
+
+    def mapper(line):
+        # imported on the worker, so the worker must find the engine
+        from cloud_native_mapreduce_spark.functions.text import WORD_RE
+        import re
+        for tok in re.findall(WORD_RE, line.lower()):
+            yield tok, 1
+
+    def reducer(key, values):
+        yield key, sum(int(v) for v in values)
+
+    spark = get_spark("foreign-cwd-workers", master="local[2]",
+                      extra_conf={{"spark.ui.enabled": "false",
+                                  "spark.sql.shuffle.partitions": "4"}})
+    spec = MR.MapReduceSpec(input_paths=({corpus!r},), mapper=mapper,
+                            reducer=reducer, num_map_tasks=2,
+                            num_reduce_tasks=2)
+    counts = {{}}
+    for f in MR.submit_job(spark, spec, output_dir={out!r}):
+        with open(f, encoding="utf-8") as fh:
+            for ln in fh:
+                k, _, v = ln.rstrip("\\n").partition("\\t")
+                counts[k] = int(v)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {{t}} AS SELECT * FROM "
+                    f"'{{os.path.join({sf!r}, t + '.parquet')}}'")
+    q = QUERIES["bmp_decode_stats"]
+    got = q.builder(spark, {sf!r}).toPandas()
+    want = con.execute(q.oracle).df()
+    cols = sorted(got.columns)
+    print("RESULT", json.dumps({{
+        "counts": counts, "rows": len(got),
+        "match": (cols == sorted(want.columns)
+                  and _multiset(got, cols) == _multiset(want, cols))}}))
+    spark.stop()
+""")
+
+
+def test_python_workers_import_the_engine_from_a_foreign_cwd(
+        corpus_dir, sf_dir, tmp_path):
+    """Launched outside the repository with no PYTHONPATH, jobs whose
+    Python workers import this package still run: a native word count
+    whose mapper imports the engine's tokenizer, and a media-codec
+    query whose UDFs live in engine modules. `get_spark` puts the
+    package's directory on the workers' path on local masters."""
+    got = _run_from_foreign_cwd(_FOREIGN_CWD_WORKERS.format(
+        repo=_REPO, corpus=corpus_dir, out=str(tmp_path / "out"),
+        sf=sf_dir), tmp_path)
+    assert got["counts"] == _golden_counts(CORPUS)
+    assert got["rows"] > 0 and got["match"]
