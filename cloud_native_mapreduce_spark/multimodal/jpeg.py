@@ -24,10 +24,10 @@ quality).
 All constants below are from the public ITU T.81 spec (Annex K tables,
 zig-zag order) and the JFIF color transform — no library code.
 
-Factory pattern (like `_png_codec`): the returned functions are nested
-closures so cloudpickle ships them BY VALUE into executor Python
-workers; a module-level function would pickle by reference and require
-this package on the executor's sys.path.
+The codec is built by one factory, `_jpeg_codec`, whose closures share
+the tables it precomputes. `binary.py` registers this package with
+cloudpickle to pickle by value, so Python workers need no import path
+to the engine.
 """
 
 from __future__ import annotations
@@ -1005,36 +1005,3 @@ def _jpeg_codec():
 
 
 encode_jpeg, decode_jpeg, encode_jpeg_progressive = _jpeg_codec()
-
-
-def decode_jpeg_backend(payload: bytes, backend: str = "python"):
-    """Backend-selectable JPEG decode (round-8 judge item 5): the
-    pure-Python codec above remains the default and the oracle/test
-    path; ``backend="pil"`` binds Pillow/libjpeg-turbo behind the same
-    honest-gate convention as the unimplemented codings — it raises
-    NotImplementedError when Pillow is absent (it is not in this
-    container) instead of silently falling back, and a parity pytest
-    (skipped without Pillow) pins byte-compatible dims/channels and
-    bounded pixel deviation between the two backends. Production
-    deploys with Pillow installed flip one argument and keep every
-    contract."""
-    if backend == "python":
-        return decode_jpeg(payload)
-    if backend == "pil":
-        try:
-            import io
-
-            from PIL import Image  # type: ignore
-        except ImportError as exc:
-            raise NotImplementedError(
-                "decode_backend='pil' requires Pillow (libjpeg); "
-                "install Pillow or use the pure-Python backend"
-            ) from exc
-        img = Image.open(io.BytesIO(payload))
-        img.load()
-        channels = {"L": 1, "RGB": 3}.get(img.mode)
-        if channels is None:
-            img = img.convert("RGB")
-            channels = 3
-        return img.width, img.height, channels, img.tobytes()
-    raise ValueError(f"unknown JPEG decode backend: {backend!r}")

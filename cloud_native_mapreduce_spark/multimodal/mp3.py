@@ -12,8 +12,7 @@ the Layer III bitrate and sample-rate index tables, and the
 `144 * bitrate / sample_rate + padding` frame-size rule. Actual
 audio DECODE (Huffman spectral data, IMDCT) stays behind the module's
 `decode_audio()` NotImplementedError gate — a deployment binds a real
-codec library, the same posture as `wav.py`'s MP3 note and
-`jpeg.py`'s backend binding.
+codec library, the same posture as `wav.py`'s MP3 note.
 
 All outputs are exact integers (frame counts, byte offsets, kbps,
 floor-divided milliseconds), so the stats query carries a full
@@ -152,7 +151,7 @@ def parse_mp3(payload: bytes) -> Mp3Info:
 def decode_audio(payload: bytes) -> list[int]:
     """Full Layer III audio decode (Huffman + IMDCT) is out of the
     pure-stdlib baseline — bind a real codec library in deployment
-    (the `wav.py` / `jpeg.py` backend posture)."""
+    (the `wav.py` posture)."""
     raise NotImplementedError(
         "MP3 audio decode requires a codec backend; parse_mp3() "
         "provides the metadata layer")

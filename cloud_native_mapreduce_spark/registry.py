@@ -3904,8 +3904,7 @@ def q_audio_decode_stats(spark, sf_dir):
 def q_video_frame_stats(spark, sf_dir):
     from cloud_native_mapreduce_spark.multimodal import binary
     docs = load_table(spark, sf_dir, "documents")
-    return binary.video_frame_stats(binary.y4m_payloads(docs),
-                                    frame_stride=2)
+    return binary.video_frame_stats(binary.y4m_payloads(docs))
 
 
 @_register(

@@ -257,9 +257,10 @@ def ship_package(spark: SparkSession) -> None:
     the driver's cwd/sys.path, by zipping it and shipping via addPyFile.
 
     Needed only for code paths that run *named module functions* on workers
-    (module-level UDFs). Closures defined inside functions
-    are pickled by value and don't need this — the preferred style here.
-    Idempotent per session.
+    (module-level UDFs): cloudpickle ships a closure by value, but the
+    module-level functions it calls by reference. The media codecs
+    (`multimodal`) register their package to be pickled by value and
+    don't need this. Idempotent per session.
     """
     import os
     import tempfile

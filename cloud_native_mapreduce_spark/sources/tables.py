@@ -101,17 +101,6 @@ def fan_out(df: DataFrame, *cols: str,
     return df.repartition(target)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views so queries can be written in SQL
-    (mirrors the DuckDB oracle's pre-registered views)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 # --- bucketed layout (co-located joins at scale) ----------------------------
 
 def write_bucketed(df: DataFrame, table_name: str, path: str,

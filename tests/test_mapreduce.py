@@ -279,15 +279,30 @@ def test_pipe_job_runs_from_a_foreign_cwd(corpus_dir, tmp_path):
     assert got == _golden_counts(CORPUS)
 
 
+#: Script lines that run `bmp_decode_stats` at `sf` in `spark` and
+#: compare it with its DuckDB oracle: sets `got` and `match`.
+_BMP_VS_ORACLE = """
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {{t}} AS SELECT * FROM "
+                    f"'{{os.path.join({sf!r}, t + '.parquet')}}'")
+    q = QUERIES["bmp_decode_stats"]
+    got = q.builder(spark, {sf!r}).toPandas()
+    want = con.execute(q.oracle).df()
+    cols = sorted(got.columns)
+    match = (cols == sorted(want.columns)
+             and _rows_multiset(got, cols) == _rows_multiset(want, cols))
+"""
+
 _FOREIGN_CWD_WORKERS = textwrap.dedent("""
     import json, os, sys
-    sys.path[:0] = [{repo!r}, os.path.join({repo!r}, "tests")]
+    sys.path[:0] = [{repo!r}, os.path.join({repo!r}, "tools")]
     import duckdb
+    from check_oracle import _rows_multiset
     from cloud_native_mapreduce_spark import mapreduce as MR
     from cloud_native_mapreduce_spark.registry import QUERIES
     from cloud_native_mapreduce_spark.session import get_spark
     from cloud_native_mapreduce_spark.sources.tables import TABLES
-    from test_registry_oracle import _multiset
 
     def mapper(line):
         # imported on the worker, so the worker must find the engine
@@ -311,18 +326,9 @@ _FOREIGN_CWD_WORKERS = textwrap.dedent("""
             for ln in fh:
                 k, _, v = ln.rstrip("\\n").partition("\\t")
                 counts[k] = int(v)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {{t}} AS SELECT * FROM "
-                    f"'{{os.path.join({sf!r}, t + '.parquet')}}'")
-    q = QUERIES["bmp_decode_stats"]
-    got = q.builder(spark, {sf!r}).toPandas()
-    want = con.execute(q.oracle).df()
-    cols = sorted(got.columns)
-    print("RESULT", json.dumps({{
-        "counts": counts, "rows": len(got),
-        "match": (cols == sorted(want.columns)
-                  and _multiset(got, cols) == _multiset(want, cols))}}))
+""" + _BMP_VS_ORACLE + """
+    print("RESULT", json.dumps({{"counts": counts, "rows": len(got),
+                                 "match": match}}))
     spark.stop()
 """)
 
@@ -332,10 +338,39 @@ def test_python_workers_import_the_engine_from_a_foreign_cwd(
     """Launched outside the repository with no PYTHONPATH, jobs whose
     Python workers import this package still run: a native word count
     whose mapper imports the engine's tokenizer, and a media-codec
-    query whose UDFs live in engine modules. `get_spark` puts the
-    package's directory on the workers' path on local masters."""
+    query. `get_spark` puts the package's directory on the workers'
+    path on local masters."""
     got = _run_from_foreign_cwd(_FOREIGN_CWD_WORKERS.format(
         repo=_REPO, corpus=corpus_dir, out=str(tmp_path / "out"),
         sf=sf_dir), tmp_path)
     assert got["counts"] == _golden_counts(CORPUS)
+    assert got["rows"] > 0 and got["match"]
+
+
+_BARE_SESSION_CODEC = textwrap.dedent("""
+    import json, os, sys
+    sys.path[:0] = [{repo!r}, os.path.join({repo!r}, "tools")]
+    import duckdb
+    from pyspark.sql import SparkSession
+    from check_oracle import _rows_multiset
+    from cloud_native_mapreduce_spark.registry import QUERIES
+    from cloud_native_mapreduce_spark.sources.tables import TABLES
+
+    spark = (SparkSession.builder.master("local[2]")
+             .config("spark.ui.enabled", "false")
+             .config("spark.sql.shuffle.partitions", "4").getOrCreate())
+""" + _BMP_VS_ORACLE + """
+    print("RESULT", json.dumps({{"rows": len(got), "match": match}}))
+    spark.stop()
+""")
+
+
+def test_codec_query_runs_in_a_bare_session_from_a_foreign_cwd(
+        sf_dir, tmp_path):
+    """A session built with a bare `SparkSession.builder` (as a caller
+    of `__spark_entry__` hands over) runs a media-codec query from
+    outside the repository with no PYTHONPATH: its workers never import
+    the engine, because the codec package is pickled by value."""
+    got = _run_from_foreign_cwd(
+        _BARE_SESSION_CODEC.format(repo=_REPO, sf=sf_dir), tmp_path)
     assert got["rows"] > 0 and got["match"]

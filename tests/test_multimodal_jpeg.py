@@ -227,47 +227,3 @@ def test_ff_fill_bytes_before_markers_are_skipped():
                  + prog[-2:])
     got_p = decode_jpeg(crafted_p)
     assert got_p[:3] == want_p[:3] and got_p[3] == want_p[3]
-
-
-def test_decode_backend_gate_is_honest():
-    """backend='pil' must raise the documented NotImplementedError in
-    this Pillow-less container (never a silent fallback), unknown
-    backends must be rejected, and 'python' must stay the default."""
-    from cloud_native_mapreduce_spark.multimodal.jpeg import (
-        decode_jpeg_backend)
-    img = _smooth(16, 16)
-    payload = encode_jpeg(img.tobytes(), 16, 16, 1)
-    assert decode_jpeg_backend(payload) == decode_jpeg(payload)
-    try:
-        import PIL  # noqa: F401
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    if not has_pil:
-        with pytest.raises(NotImplementedError, match="Pillow"):
-            decode_jpeg_backend(payload, backend="pil")
-    with pytest.raises(ValueError, match="unknown JPEG decode backend"):
-        decode_jpeg_backend(payload, backend="turbo")
-
-
-def test_decode_backend_pil_parity():
-    """Parity gate for deployments WITH Pillow: identical dims and
-    channels, mean-abs pixel deviation within the decoder tolerance
-    band on the registry pattern corpus. Skipped in this container."""
-    pytest.importorskip("PIL")
-    import numpy as np
-
-    from cloud_native_mapreduce_spark.multimodal.binary import (
-        _jpeg_pattern)
-    from cloud_native_mapreduce_spark.multimodal.jpeg import (
-        decode_jpeg_backend)
-    for d in range(12):
-        w, h, ch, sub, px = _jpeg_pattern(np, d)
-        payload = encode_jpeg(px.tobytes(), w, h, ch, quality=85,
-                              subsampling=sub)
-        pw, ph, pc, ppx = decode_jpeg_backend(payload, backend="pil")
-        gw, gh, gc, gpx = decode_jpeg_backend(payload)
-        assert (pw, ph, pc) == (gw, gh, gc) == (w, h, ch)
-        dev = np.abs(np.frombuffer(ppx, np.uint8).astype(float)
-                     - np.frombuffer(gpx, np.uint8).astype(float))
-        assert float(dev.mean()) <= 2.0  # IDCT rounding differences

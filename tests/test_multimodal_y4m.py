@@ -51,7 +51,7 @@ def test_y4m_pipeline_end_to_end(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     with_y4m = binary.y4m_payloads(docs)
     assert dict(with_y4m.dtypes)["payload"] == "binary"
-    stats = binary.video_frame_stats(with_y4m, frame_stride=2)
+    stats = binary.video_frame_stats(with_y4m)
     rows = {r["frame_idx"]: r
             for r in stats.where(stats.doc_id == 0).collect()}
     # doc 0: w=8 h=6 nf=4 -> sampled frames 0 and 2

@@ -4,31 +4,16 @@ compare after sorting columns by name)."""
 
 from __future__ import annotations
 
-import math
-from collections import Counter
+import os
+import sys
 
 import pytest
 
 from cloud_native_mapreduce_spark.registry import QUERIES
 
-
-def _norm(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm(x) for x in v)
-    if isinstance(v, bytes):
-        return v.hex()
-    return v
-
-
-def _multiset(pdf, cols):
-    return Counter(tuple(_norm(r[c]) for c in cols)
-                   for r in pdf.to_dict("records"))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "tools"))
+from check_oracle import _rows_multiset  # noqa: E402
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -42,4 +27,5 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
     assert sorted(spark_pd.columns) == sorted(duck_pd.columns)
     assert len(spark_pd) == len(duck_pd)
     cols = sorted(spark_pd.columns)
-    assert _multiset(spark_pd, cols) == _multiset(duck_pd, cols)
+    assert (_rows_multiset(spark_pd, cols)
+            == _rows_multiset(duck_pd, cols))
