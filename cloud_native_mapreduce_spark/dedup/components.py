@@ -19,7 +19,7 @@ in MapReduce and Beyond", SoCC'14) which converges in O(log n) rounds
 with the same per-round primitives.
 
 Scale notes baked in:
-  * per-round `localCheckpoint(eager=True)` truncates lineage — without
+  * a per-round `cut` (session.py) truncates lineage — without
     it round k replays rounds 1..k-1 and the DAG grows quadratically;
   * convergence is detected from a SCALAR aggregate (sum of labels,
     strictly decreasing while any label changes — labels only ever
@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from cloud_native_mapreduce_spark.session import cut
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
@@ -105,14 +107,15 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     #   STREAM, not cache, lost big — dbscan_grid 7.9 → 15.6 s,
     #   hub_removal 13.7 → 16.8, golden_record 5.0 → 8.7 (cache
     #   pressure + per-round re-optimization of the uncut lineage).
-    # The eager checkpoint without a layout is the measured optimum.
-    sym = sym.localCheckpoint(eager=True)
+    # A checkpoint without a layout is the measured optimum; as a lazy
+    # `cut` it fires no job of its own.
+    sym = cut(sym)
 
     # Propagate over NON-SINGLETON nodes only — in a near-dup corpus most
     # docs touch no edge; they keep comp=own id and never enter the loop.
     connected = sym.select(F.col("src").alias("node")).distinct()
     labels = connected.select("node", F.col("node").cast("long").alias("comp"))
-    labels = labels.localCheckpoint(eager=True)
+    labels = cut(labels)
     prev_sum = labels.agg(F.sum("comp")).collect()[0][0]
 
     def one_round(labels: DataFrame) -> DataFrame:
@@ -147,7 +150,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     # pointer_jumping is the intended tool anyway.
     for _ in range(max_iter):
         labels = one_round(labels)
-        labels = labels.localCheckpoint(eager=True)
+        labels = cut(labels)
         cur_sum = labels.agg(F.sum("comp")).collect()[0][0]
         if cur_sum == prev_sum:  # labels only decrease ⇒ equal sum = fixed point
             break

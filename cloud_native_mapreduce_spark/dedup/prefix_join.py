@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cloud_native_mapreduce_spark.functions.text import tokens
+from cloud_native_mapreduce_spark.session import cut
 
 #: Jaccard threshold as an exact rational (t = T_NUM / T_DEN).
 #: 0.9, not the PPJoin-paper-typical 0.6: the synthetic documents
@@ -90,6 +91,7 @@ def jaccard_prefix_join(docs: DataFrame, text_col: str = "text",
                             F.explode(tokens(F.col(text_col)))
                             .alias("tok"))
             .distinct()
+            # cut: `cut` raises jaccard_prefix_join 19 → 28 jobs (sf0.01)
             .localCheckpoint(eager=False))
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -124,12 +126,11 @@ def jaccard_prefix_join(docs: DataFrame, text_col: str = "text",
     b = (prefix.select(F.col("doc_id").alias("doc_b"), "tok",
                        F.col("sz").alias("sz_pb"))
          .repartition(n_shuffle, F.col("tok")))
-    cand = (a.join(b, "tok")
-            .where((F.col("doc_a") < F.col("doc_b"))
-                   & (F.col("sz_pa") * T_DEN >= T_NUM * F.col("sz_pb"))
-                   & (F.col("sz_pb") * T_DEN >= T_NUM * F.col("sz_pa")))
-            .select("doc_a", "doc_b").distinct()
-            .localCheckpoint(eager=False))
+    cand = cut(a.join(b, "tok")
+               .where((F.col("doc_a") < F.col("doc_b"))
+                      & (F.col("sz_pa") * T_DEN >= T_NUM * F.col("sz_pb"))
+                      & (F.col("sz_pb") * T_DEN >= T_NUM * F.col("sz_pa")))
+               .select("doc_a", "doc_b").distinct())
     # verify via sorted-array intersection (the triangle_count
     # edge-iterator lesson, round-14 optimization): the former
     # posting-explode form joined every candidate pair with BOTH full

@@ -54,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import cut
 from .text import tokens
 
 
@@ -129,18 +130,16 @@ def bpe_train_merges(docs: DataFrame, n_merges: int = 6,
     seqs = word_seqs(docs, text_col)
     merges: list[DataFrame] = []
     for rank in range(1, n_merges + 1):
-        best = best_pair(pair_counts(seqs), rank) \
-            .localCheckpoint(eager=False)
+        best = cut(best_pair(pair_counts(seqs), rank))
         merges.append(best)
         pair_arr = F.split(F.col("pair"), " ")
-        seqs = (seqs.crossJoin(F.broadcast(best.select("pair")))
-                .select(
-                    "cnt",
-                    greedy_fuse(F.col("seq"),
-                                F.element_at(pair_arr, 1),
-                                F.element_at(pair_arr, 2))
-                    .alias("seq"))
-                .localCheckpoint(eager=False))
+        seqs = cut(seqs.crossJoin(F.broadcast(best.select("pair")))
+                   .select(
+                       "cnt",
+                       greedy_fuse(F.col("seq"),
+                                   F.element_at(pair_arr, 1),
+                                   F.element_at(pair_arr, 2))
+                       .alias("seq")))
     out = merges[0]
     for m in merges[1:]:
         out = out.unionAll(m)

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cloud_native_mapreduce_spark.session import cut
+
 #: Byte-identical to client/scripts/mapper.py:13 in the reference.
 WORD_RE = "[a-z](?:[a-z'‘’]*[a-z])?"
 
@@ -192,18 +194,18 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     frame, which is exactly what an executor should hold at 100 TB.
     """
     toks = docs.select("doc_id", tokens(F.col(text_col)).alias("toks"))
-    th = toks.select("doc_id", F.expr(f"""
+    th = cut(toks.select("doc_id", F.expr(f"""
         transform(toks, t -> aggregate(
             transform(sequence(1, length(t)), i -> ascii(substr(t, i, 1))),
             0L, (acc, c) -> (acc * {_WINNOW_B} + c) % {_WINNOW_M}))
-        """).alias("th")).localCheckpoint(eager=False)
-    grams = th.select("doc_id", F.expr(f"""
+        """).alias("th")))
+    grams = cut(th.select("doc_id", F.expr(f"""
         CASE WHEN size(th) < 3 THEN array()
         ELSE transform(sequence(1, size(th) - 2), i ->
             (((element_at(th, i) * {_WINNOW_B} + element_at(th, i + 1))
               % {_WINNOW_M}) * {_WINNOW_B} + element_at(th, i + 2))
             % {_WINNOW_M})
-        END""").alias("g")).localCheckpoint(eager=False)
+        END""").alias("g")))
     fps = grams.where(F.size("g") > 0).select("doc_id", F.expr("""
         array_distinct(transform(
             sequence(1, greatest(size(g) - 3, 1)),
@@ -282,9 +284,8 @@ def zipf_fit(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ranged = (wc.repartitionByRange(*order)
               .withColumn("_pid", F.spark_partition_id()))
     w_local = Window.partitionBy("_pid").orderBy(*order)
-    local = (ranged.withColumn("_lrn",
-                               F.row_number().over(w_local).cast("bigint"))
-             .localCheckpoint(eager=False))
+    local = cut(ranged.withColumn("_lrn",
+                                  F.row_number().over(w_local).cast("bigint")))
     counts = local.groupBy("_pid").agg(F.max("_lrn").alias("_cnt"))
     prior = counts.select(F.col("_pid").alias("_pid2"),
                           F.col("_cnt").alias("_cnt2"))
@@ -394,11 +395,10 @@ def curation_pipeline(docs: DataFrame) -> DataFrame:
     # whole-stage codegen — measured 5 s vs 1.4 s at sf0.1. The
     # checkpointed frame is the NARROW one (ids + ratio + fingerprint;
     # token arrays dropped), so the materialization is cheap.
-    scored = (shingled.select(
+    scored = cut(shingled.select(
         "doc_id", "lang", "n_chars",
         (F.size(F.array_distinct("sh")) / F.size("sh")).alias("ratio"),
-        F.md5(F.concat_ws(" ", "toks")).alias("fp"))
-        .localCheckpoint(eager=False))
+        F.md5(F.concat_ws(" ", "toks")).alias("fp")))
     quality = (scored.where(F.col("ratio") >= 0.3)
                .select("doc_id", "lang", "n_chars", "fp"))
     w = Window.partitionBy("fp").orderBy(F.col("doc_id").asc())
@@ -633,10 +633,9 @@ def textrank_keywords(docs: DataFrame, text_col: str = "text",
     edges = (adj.select(F.least("w", "prev").alias("a"),
                         F.greatest("w", "prev").alias("b"))
              .distinct())
-    bi = (edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-          .unionByName(edges.select(F.col("b").alias("src"),
-                                    F.col("a").alias("dst")))
-          .localCheckpoint(eager=True))
+    bi = cut(edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+             .unionByName(edges.select(F.col("b").alias("src"),
+                                       F.col("a").alias("dst"))))
     outd = bi.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     rank = outd.select(F.col("src").alias("v"),
                        F.lit(TEXTRANK_SCALE).cast("bigint")
@@ -648,11 +647,10 @@ def textrank_keywords(docs: DataFrame, text_col: str = "text",
                           F.expr("rank DIV d").alias("give"))
                   .groupBy("v")
                   .agg(F.sum("give").cast("bigint").alias("inflow")))
-        rank = (inflow.select(
+        rank = cut(inflow.select(
             "v", (F.lit(150_000)
                   + F.expr("(85 * inflow) DIV 100")).cast("bigint")
-            .alias("rank"))
-            .localCheckpoint(eager=True))
+            .alias("rank")))
     return (rank.select(F.col("v").alias("word"), "rank")
             .orderBy(F.col("rank").desc(), F.col("word").asc())
             .limit(top_k))
@@ -835,10 +833,9 @@ def ngram_coverage_curve(docs: DataFrame,
     ranged = (wc.repartitionByRange(*order)
               .withColumn("_pid", F.spark_partition_id()))
     w_local = Window.partitionBy("_pid").orderBy(*order)
-    local = (ranged.withColumn("_lrn",
-                               F.row_number().over(w_local)
-                               .cast("bigint"))
-             .localCheckpoint(eager=False))
+    local = cut(ranged.withColumn("_lrn",
+                                  F.row_number().over(w_local)
+                                  .cast("bigint")))
     counts = local.groupBy("_pid").agg(F.max("_lrn").alias("_cnt"))
     prior = counts.select(F.col("_pid").alias("_pid2"),
                           F.col("_cnt").alias("_cnt2"))

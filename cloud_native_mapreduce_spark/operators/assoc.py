@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cloud_native_mapreduce_spark.session import cut
+
 #: Support floor for emitted rules.
 MIN_SUPPORT = 3
 #: Sequential-rule support floor (transitions are sparser).
@@ -165,17 +167,16 @@ def also_bought_topk(lineitem: DataFrame, k: int = 5,
     baskets = (lineitem.groupBy("l_orderkey")
                .agg(F.sort_array(F.collect_set("l_partkey"))
                     .alias("ps")))
-    pair_sup = (baskets
-                .select(F.posexplode("ps").alias("i", "a"), F.col("ps"))
-                .select("a", F.explode(
-                    F.slice("ps", F.col("i") + F.lit(2), F.size("ps")))
-                    .alias("b"))
-                .groupBy("a", "b")
-                .agg(F.count("*").cast("bigint").alias("n_baskets"))
-                .where(F.col("n_baskets") >= min_support)
-                # the union below consumes pair_sup twice — without
-                # the checkpoint both branches re-run the basket scan
-                .localCheckpoint(eager=False))
+    # the union below consumes pair_sup twice — without the cut both
+    # branches re-run the basket scan
+    pair_sup = cut(baskets
+                   .select(F.posexplode("ps").alias("i", "a"), F.col("ps"))
+                   .select("a", F.explode(
+                       F.slice("ps", F.col("i") + F.lit(2), F.size("ps")))
+                       .alias("b"))
+                   .groupBy("a", "b")
+                   .agg(F.count("*").cast("bigint").alias("n_baskets"))
+                   .where(F.col("n_baskets") >= min_support))
     sym = (pair_sup.select(F.col("a").alias("part"),
                            F.col("b").alias("also"), "n_baskets")
            .unionByName(pair_sup.select(F.col("b").alias("part"),

@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 
 from cloud_native_mapreduce_spark.functions.text import WORD_RE as T_WORD_RE
 from cloud_native_mapreduce_spark.functions.text import tokens
+from cloud_native_mapreduce_spark.session import cut
 
 #: Whitespace-run token pattern with an EXPLICIT class, not \S: Java's
 #: \s includes U+000B (vertical tab) while RE2's (DuckDB oracle)
@@ -364,8 +365,7 @@ def boilerplate_strip(docs: DataFrame, k: int = 5, min_docs: int = 3,
     project-collapse blowup documented in DESIGN notes).
     Returns (doc_id, n_before, n_after, cleaned).
     """
-    toks = (docs.select("doc_id", tokens(F.col(text_col)).alias("toks"))
-            .localCheckpoint(eager=False))
+    toks = cut(docs.select("doc_id", tokens(F.col(text_col)).alias("toks")))
     grams = toks.select(
         "doc_id",
         F.posexplode(F.expr(
@@ -692,11 +692,10 @@ def heaps_law_curve(docs: DataFrame, n_stages: int = 10) -> DataFrame:
     w_stage = (w_first.crossJoin(F.broadcast(bounds))
                .select(bucket("first_id"))
                .groupBy("k").agg(F.count(F.lit(1)).alias("words_new")))
-    stages = (d_stage.join(w_stage, "k", "left")
-              .select("k", "docs_new",
-                      F.coalesce("words_new", F.lit(0))
-                      .alias("words_new"))
-              .localCheckpoint(eager=False))
+    stages = cut(d_stage.join(w_stage, "k", "left")
+                 .select("k", "docs_new",
+                         F.coalesce("words_new", F.lit(0))
+                         .alias("words_new")))
     lower = stages.select(F.col("k").alias("k2"),
                           F.col("docs_new").alias("d2"),
                           F.col("words_new").alias("w2"))
@@ -780,8 +779,7 @@ def kneser_ney_logprob(docs: DataFrame,
           .select("doc_id", F.explode(bigrams).alias("bg"))
           .groupBy("doc_id", "bg")
           .agg(F.count("*").alias("n")))
-    cbg = (bg.groupBy("bg").agg(F.sum("n").alias("cbg"))
-           .localCheckpoint(eager=False))
+    cbg = cut(bg.groupBy("bg").agg(F.sum("n").alias("cbg")))
     ctx = (cbg.select(F.split(F.col("bg"), " ")[0].alias("w1"), "cbg")
            .groupBy("w1").agg(F.sum("cbg").alias("cctx"),
                               F.count("*").alias("n1pv")))
@@ -898,10 +896,9 @@ def greedy_coverage_select(docs: DataFrame,
     grows monotonically), one count aggregate, and a deterministic
     1-row TakeOrdered — NO driver-side collect anywhere; round
     frames are localCheckpointed so lineage stays flat."""
-    pt = (docs.select("doc_id",
-                      F.explode(tokens(F.col("text"))).alias("tok"))
-          .distinct()
-          .localCheckpoint(eager=True))
+    pt = cut(docs.select("doc_id",
+                         F.explode(tokens(F.col("text"))).alias("tok"))
+             .distinct())
     spark = docs.sparkSession
     cov = spark.createDataFrame([], "tok string")
     out = None
@@ -912,20 +909,18 @@ def greedy_coverage_select(docs: DataFrame,
         if out is not None:
             gains = gains.join(out.select("doc_id"), "doc_id",
                                "left_anti")
-        pick = (gains.orderBy(F.col("gain").desc(), "doc_id").limit(1)
-                .select(F.lit(r).cast("bigint").alias("pick_rank"),
-                        "doc_id", F.col("gain").cast("bigint")
-                        .alias("gain"))
-                .localCheckpoint(eager=True))
-        cov = (cov.unionByName(
+        pick = cut(gains.orderBy(F.col("gain").desc(), "doc_id").limit(1)
+                   .select(F.lit(r).cast("bigint").alias("pick_rank"),
+                           "doc_id", F.col("gain").cast("bigint")
+                           .alias("gain")))
+        cov = cut(cov.unionByName(
             pt.join(pick.select("doc_id"), "doc_id").select("tok"))
-            .distinct()
-            .localCheckpoint(eager=True))
+            .distinct())
         n_cov = cov.agg(F.count(F.lit(1)).cast("bigint")
                         .alias("covered_total"))
         row = pick.crossJoin(F.broadcast(n_cov))
         out = row if out is None else out.unionByName(row)
-        out = out.localCheckpoint(eager=True)
+        out = cut(out)
     return out
 
 
@@ -1031,11 +1026,10 @@ def odds_ratio_keywords(docs: DataFrame,
     corpus term counts and language totals broadcast back; the z
     evaluation and the lang-PARTITIONED top-k window run on the
     vocabulary×|langs|-bounded cell frame."""
-    tl = (docs.select("lang",
-                      F.explode(tokens(F.col(text_col))).alias("tok"))
-          .groupBy("lang", "tok")
-          .agg(F.count(F.lit(1)).alias("y"))
-          .localCheckpoint(eager=False))
+    tl = cut(docs.select("lang",
+                         F.explode(tokens(F.col(text_col))).alias("tok"))
+             .groupBy("lang", "tok")
+             .agg(F.count(F.lit(1)).alias("y")))
     tw = tl.groupBy("tok").agg(F.sum("y").alias("yw"))
     nl = tl.groupBy("lang").agg(F.sum("y").alias("nl"))
     nt = tl.agg(F.sum("y").alias("nt"))
@@ -1082,24 +1076,22 @@ def neyman_allocation(docs: DataFrame,
     Output: (source, n_h, weight_q, alloc_n)."""
     d38 = "decimal(38,0)"
     x = F.col("n_chars").cast(d38)
-    per = (docs.groupBy("source")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_h"),
-                F.sum(x).cast(d38).alias("sx"),
-                F.sum(x * x).cast(d38).alias("ssq"))
-           .where(F.col("n_h") >= 2)
-           .select("source", "n_h", F.expr(
-               "CAST(round(sqrt(CAST(n_h AS DOUBLE) "
-               "* CAST(n_h * ssq - sx * sx AS DOUBLE) "
-               "/ (n_h - 1)), 0) AS BIGINT)").alias("wq"))
-           .localCheckpoint(eager=False))
+    per = cut(docs.groupBy("source")
+              .agg(F.count(F.lit(1)).cast("bigint").alias("n_h"),
+                   F.sum(x).cast(d38).alias("sx"),
+                   F.sum(x * x).cast(d38).alias("ssq"))
+              .where(F.col("n_h") >= 2)
+              .select("source", "n_h", F.expr(
+                  "CAST(round(sqrt(CAST(n_h AS DOUBLE) "
+                  "* CAST(n_h * ssq - sx * sx AS DOUBLE) "
+                  "/ (n_h - 1)), 0) AS BIGINT)").alias("wq")))
     w_tot = per.agg(F.sum("wq").cast("bigint").alias("w"))
-    p2 = (per.crossJoin(F.broadcast(w_tot))
-          .select("source", "n_h", "wq",
-                  F.expr(f"({total} * wq) DIV w").cast("bigint")
-                  .alias("base"),
-                  F.expr(f"({total} * wq) % w").cast("bigint")
-                  .alias("rem"))
-          .localCheckpoint(eager=False))
+    p2 = cut(per.crossJoin(F.broadcast(w_tot))
+             .select("source", "n_h", "wq",
+                     F.expr(f"({total} * wq) DIV w").cast("bigint")
+                     .alias("base"),
+                     F.expr(f"({total} * wq) % w").cast("bigint")
+                     .alias("rem")))
     sf = p2.agg((F.lit(total) - F.sum("base")).cast("bigint")
                 .alias("n_bonus"))
     p3 = p2.crossJoin(F.broadcast(sf))
@@ -1184,6 +1176,7 @@ def cross_source_contamination(docs: DataFrame,
             f"i -> array_join(slice(toks, i + 1, {n}), ' ')) END"
         )).alias("gram"))
         .distinct()
+        # cut: `cut` raises cross_source_contamination 7 → 8 jobs (sf0.01)
         .localCheckpoint(eager=False))
     per = sg.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_grams"))
@@ -1225,7 +1218,7 @@ def doc_novelty_ratio(docs: DataFrame, n: int = 5) -> DataFrame:
     Scale: two hash aggregates with map-side combine (the gram table
     is vocabulary-bounded) and one keyed join — the tfidf_top_terms
     plan shape."""
-    dg = _word_ngrams(docs, n).distinct().localCheckpoint(eager=False)
+    dg = cut(_word_ngrams(docs, n).distinct())
     df_tab = dg.groupBy("gram").agg(
         F.count(F.lit(1)).cast("bigint").alias("df"))
     per_doc = (dg.join(df_tab, "gram")

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cloud_native_mapreduce_spark.session import cut
+
 
 def tumbling_counts(events: DataFrame) -> DataFrame:
     """1-hour tumbling windows × event_type: count + sum(value)."""
@@ -1368,6 +1370,55 @@ def kalman_daily(events: DataFrame) -> DataFrame:
         (F.round("k_gain", 6) + F.lit(0.0)).alias("k_gain"))
 
 
+def _survival_durations(events: DataFrame) -> DataFrame:
+    """(user_id, t, e) per signed-up user: the survival family's
+    time-to-first-purchase. `t` is whole 86400s-days from the first
+    signup to the first purchase at or after it (`e` = 1) or to the
+    corpus max timestamp (`e` = 0, censored), on exact integer
+    microseconds (unix_micros here, epoch_us in the oracles); a
+    purchase before the signup counts as censored."""
+    us_day = 86400000000
+    first = (events.where(F.col("event_type") == "signup")
+             .groupBy("user_id")
+             .agg(F.min(F.unix_micros("ts")).alias("s_us")))
+    fp = (events.where(F.col("event_type") == "purchase")
+          .groupBy("user_id").agg(F.min(F.unix_micros("ts"))
+                                  .alias("p_us")))
+    horizon = events.agg(F.max(F.unix_micros("ts")).alias("h_us"))
+    return (first.join(fp, "user_id", "left")
+            .crossJoin(F.broadcast(horizon))
+            .select(
+                "user_id",
+                # floor, NOT cast: Spark casts double->bigint by
+                # truncation but DuckDB by rounding — floor() is the
+                # portable integer-day bucket on both engines
+                F.when(F.col("p_us") >= F.col("s_us"),
+                       F.floor((F.col("p_us") - F.col("s_us"))
+                               / F.lit(us_day))).alias("ev_day"),
+                F.floor((F.col("h_us") - F.col("s_us"))
+                        / F.lit(us_day)).alias("cens_day"))
+            .select("user_id",
+                    F.coalesce(F.col("ev_day"), F.col("cens_day"))
+                    .cast("bigint").alias("t"),
+                    F.col("ev_day").isNotNull().cast("int").alias("e")))
+
+
+def _survival_risk(events: DataFrame) -> DataFrame:
+    """(t, d, n_risk) on every event day of `_survival_durations`: `d`
+    users convert on day t, `n_risk` are still at risk (duration >=
+    t). The day frame is cut once and its risk sets come from a
+    broadcast triangular count over it, never a users×days join."""
+    days = cut(_survival_durations(events).groupBy("t")
+               .agg(F.sum("e").cast("bigint").alias("d"),
+                    F.count(F.lit(1)).cast("bigint").alias("ended")))
+    later = days.select(F.col("t").alias("t2"),
+                        F.col("ended").alias("ended2"))
+    return (days.join(F.broadcast(later), F.col("t2") >= F.col("t"))
+            .groupBy("t", "d")
+            .agg(F.sum("ended2").cast("bigint").alias("n_risk"))
+            .where(F.col("d") > 0))
+
+
 def kaplan_meier(events: DataFrame) -> DataFrame:
     """Kaplan-Meier survival curve for time-to-first-purchase after
     first signup, right-censored at the end of the observation
@@ -1390,39 +1441,7 @@ def kaplan_meier(events: DataFrame) -> DataFrame:
     op sequence via a recursive CTE. Rounding is engine-side."""
     import pandas as pd
 
-    us_day = 86400000000
-    first = (events.where(F.col("event_type") == "signup")
-             .groupBy("user_id")
-             .agg(F.min(F.unix_micros("ts")).alias("s_us")))
-    fp = (events.where(F.col("event_type") == "purchase")
-          .groupBy("user_id").agg(F.min(F.unix_micros("ts"))
-                                  .alias("p_us")))
-    horizon = events.agg(F.max(F.unix_micros("ts")).alias("h_us"))
-    per_user = (first.join(fp, "user_id", "left")
-                .crossJoin(F.broadcast(horizon))
-                .select(
-                    # floor, NOT cast: Spark casts double->bigint by
-                    # truncation but DuckDB by rounding — floor() is
-                    # the portable integer-day bucket on both engines
-                    F.when(F.col("p_us") >= F.col("s_us"),
-                           F.floor((F.col("p_us") - F.col("s_us"))
-                                   / F.lit(us_day)))
-                    .alias("ev_day"),
-                    F.floor((F.col("h_us") - F.col("s_us"))
-                            / F.lit(us_day)).alias("cens_day")))
-    durations = per_user.select(
-        F.coalesce(F.col("ev_day"), F.col("cens_day")).alias("t"),
-        F.when(F.col("ev_day").isNotNull(), 1).otherwise(0).alias("e"))
-    days = (durations.groupBy("t")
-            .agg(F.sum("e").cast("bigint").alias("d"),
-                 F.count(F.lit(1)).cast("bigint").alias("ended"))
-            .localCheckpoint(eager=False))
-    later = days.select(F.col("t").alias("t2"),
-                        F.col("ended").alias("ended2"))
-    risk = (days.join(F.broadcast(later), F.col("t2") >= F.col("t"))
-            .groupBy("t", "d")
-            .agg(F.sum("ended2").cast("bigint").alias("n_risk"))
-            .where(F.col("d") > 0))
+    risk = _survival_risk(events)
 
     schema = "t bigint, n_risk bigint, n_events bigint, s double"
 
@@ -1481,12 +1500,11 @@ def seasonal_decompose(events: DataFrame, period: int = 7) -> DataFrame:
         "day_i", F.datediff(F.col("day"), F.lit("1970-01-05").cast("date")))
     w = (Window.partitionBy("event_type").orderBy("day_i")
          .rangeBetween(-half, half))
-    d4 = (d2.withColumn("sum_w", F.sum("v").over(w))
-          .withColumn("n_w", F.count("v").over(w))
-          .where(F.col("n_w") == period)
-          .withColumn("ds", F.lit(period) * F.col("v") - F.col("sum_w"))
-          .withColumn("dow", F.col("day_i") % period)
-          .localCheckpoint(eager=False))
+    d4 = cut(d2.withColumn("sum_w", F.sum("v").over(w))
+             .withColumn("n_w", F.count("v").over(w))
+             .where(F.col("n_w") == period)
+             .withColumn("ds", F.lit(period) * F.col("v") - F.col("sum_w"))
+             .withColumn("dow", F.col("day_i") % period))
     seas = (d4.groupBy("event_type", "dow")
             .agg(F.sum("ds").alias("s_ds"),
                  F.count(F.lit(1)).alias("n_dow")))
@@ -1722,12 +1740,11 @@ def rolling_median_daily(events: DataFrame, half: int = 3) -> DataFrame:
     (type, center-day)-partitioned rank window. Edge days (window
     not full) are dropped, matching seasonal_decompose's guard."""
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("v"))
-             .withColumn("day_i", F.datediff(
-                 F.col("day"), F.lit("1970-01-05").cast("date")))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy("event_type", F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("v"))
+                .withColumn("day_i", F.datediff(
+                    F.col("day"), F.lit("1970-01-05").cast("date"))))
     rhs = daily.select(F.col("event_type").alias("t2"),
                        F.col("day_i").alias("j"),
                        F.col("v").alias("vj"))
@@ -1844,6 +1861,7 @@ def dtw_daily_pairs(events: DataFrame) -> DataFrame:
     daily = (events
              .groupBy("event_type", F.to_date("ts").alias("day"))
              .agg(F.sum(cents).cast("bigint").alias("v"))
+             # cut: `cut` raises dtw_daily_pairs 6 → 10 jobs (sf0.01)
              .localCheckpoint(eager=False))
     types = daily.select("event_type").distinct()
     pairs = (types.select(F.col("event_type").alias("t1"))
@@ -1908,13 +1926,12 @@ def ltv_cohort_curves(events: DataFrame) -> DataFrame:
     sizes = fu.groupBy("cohort_wk").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users"))
     cents = F.round(F.col("value") * 100).cast("bigint")
-    wk_rev = (events.select("user_id", F.expr(wk).alias("wk"),
-                            cents.alias("c"))
-              .join(fu, "user_id")
-              .groupBy("cohort_wk",
-                       (F.col("wk") - F.col("cohort_wk")).alias("age"))
-              .agg(F.sum("c").alias("rev"))
-              .localCheckpoint(eager=False))
+    wk_rev = cut(events.select("user_id", F.expr(wk).alias("wk"),
+                               cents.alias("c"))
+                 .join(fu, "user_id")
+                 .groupBy("cohort_wk",
+                          (F.col("wk") - F.col("cohort_wk")).alias("age"))
+                 .agg(F.sum("c").alias("rev")))
     rhs = wk_rev.select(F.col("cohort_wk").alias("cw2"),
                         F.col("age").alias("age2"),
                         F.col("rev").alias("rev2"))
@@ -1954,12 +1971,11 @@ def theil_sen_trend(events: DataFrame) -> DataFrame:
     multi-year window, switch to the sampled/binary-search Theil-Sen
     variant before this frame crosses ~10^7 rows)."""
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("v"))
-             .withColumn("i", F.datediff(
-                 F.col("day"), F.lit("1970-01-05").cast("date")))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy("event_type", F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("v"))
+                .withColumn("i", F.datediff(
+                    F.col("day"), F.lit("1970-01-05").cast("date"))))
     rhs = daily.select(F.col("event_type").alias("t2"),
                        F.col("i").alias("j"), F.col("v").alias("vj"))
     slopes = (daily.join(rhs, (F.col("t2") == F.col("event_type"))
@@ -1997,10 +2013,9 @@ def mad_daily(events: DataFrame) -> DataFrame:
     window under a (value, day) total order. Output per type:
     n_days, median dollars, MAD dollars (2dp fixed divisions)."""
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("v"))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy("event_type", F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("v")))
     w1 = Window.partitionBy("event_type").orderBy("v", "day")
     n = F.count(F.lit(1)).over(Window.partitionBy("event_type"))
     med = (daily.withColumn("rn", F.row_number().over(w1))
@@ -2044,6 +2059,7 @@ def robust_anomaly_days(events: DataFrame,
     daily = (events
              .groupBy("event_type", F.to_date("ts").alias("day"))
              .agg(F.sum(cents).cast("bigint").alias("v"))
+             # cut: `cut` raises robust_anomaly_days 7 → 8 jobs (sf0.01)
              .localCheckpoint(eager=False))
     w1 = Window.partitionBy("event_type").orderBy("v", "day")
     n = F.count(F.lit(1)).over(Window.partitionBy("event_type"))
@@ -2080,9 +2096,9 @@ def nelson_aalen_hazard(events: DataFrame) -> DataFrame:
     of choice when hazards are the quantity being modelled (H is
     additive across intervals where S is multiplicative).
 
-    Exactness: the cohort machinery is kaplan_meier's verbatim
-    (exact integer microseconds, floor day buckets, triangular risk
-    sets over the bounded day frame) — but where KM's product needs
+    Exactness: the cohort machinery is kaplan_meier's, shared
+    through `_survival_risk` (exact integer microseconds, floor day
+    buckets, triangular risk sets over the bounded day frame) — but where KM's product needs
     a sequential fold (applyInPandas + recursive-CTE oracle), the NA
     SUM quantizes each increment to BIGINT 1e-8 units via integer
     division ((d * 1e8) DIV n — engine-identical floor), so the
@@ -2093,38 +2109,8 @@ def nelson_aalen_hazard(events: DataFrame) -> DataFrame:
     Scale: keyed per-user aggregates collapse the corpus; everything
     after is the bounded |days| frame and broadcast triangular
     joins. No window, no recursion, no Python."""
-    us_day = 86400000000
-    first = (events.where(F.col("event_type") == "signup")
-             .groupBy("user_id")
-             .agg(F.min(F.unix_micros("ts")).alias("s_us")))
-    fp = (events.where(F.col("event_type") == "purchase")
-          .groupBy("user_id").agg(F.min(F.unix_micros("ts"))
-                                  .alias("p_us")))
-    horizon = events.agg(F.max(F.unix_micros("ts")).alias("h_us"))
-    per_user = (first.join(fp, "user_id", "left")
-                .crossJoin(F.broadcast(horizon))
-                .select(
-                    F.when(F.col("p_us") >= F.col("s_us"),
-                           F.floor((F.col("p_us") - F.col("s_us"))
-                                   / F.lit(us_day)))
-                    .alias("ev_day"),
-                    F.floor((F.col("h_us") - F.col("s_us"))
-                            / F.lit(us_day)).alias("cens_day")))
-    durations = per_user.select(
-        F.coalesce(F.col("ev_day"), F.col("cens_day")).alias("t"),
-        F.when(F.col("ev_day").isNotNull(), 1).otherwise(0).alias("e"))
-    days = (durations.groupBy("t")
-            .agg(F.sum("e").cast("bigint").alias("d"),
-                 F.count(F.lit(1)).cast("bigint").alias("ended"))
-            .localCheckpoint(eager=False))
-    later = days.select(F.col("t").alias("t2"),
-                        F.col("ended").alias("ended2"))
-    risk = (days.join(F.broadcast(later), F.col("t2") >= F.col("t"))
-            .groupBy("t", "d")
-            .agg(F.sum("ended2").cast("bigint").alias("n_risk"))
-            .where(F.col("d") > 0)
-            .withColumn("hq", F.expr(f"(d * {NA_SCALE}) DIV n_risk"))
-            .localCheckpoint(eager=False))
+    risk = cut(_survival_risk(events)
+               .withColumn("hq", F.expr(f"(d * {NA_SCALE}) DIV n_risk")))
     prev = risk.select(F.col("t").alias("t3"), F.col("hq").alias("hq3"))
     return (risk.join(F.broadcast(prev), F.col("t3") <= F.col("t"))
             .groupBy("t", "d", "n_risk")
@@ -2252,7 +2238,7 @@ def removal_effect_attribution(events: DataFrame) -> DataFrame:
         # driver gap, 5.9 s wall). The checkpoint is a 1-row cache;
         # arithmetic and round count are unchanged.
         if r % 3 == 2:
-            cur = cur.localCheckpoint(eager=False)
+            cur = cut(cur)
     fin = removal_final_exprs()
     res = cur.select(*[F.expr(sql).alias(name)
                        for name, sql in fin.items()])
@@ -2296,8 +2282,7 @@ def growth_accounting(events: DataFrame) -> DataFrame:
     churn join-back is a broadcast of that bounded frame."""
     wk = F.expr("CAST(datediff(to_date(ts), DATE '1970-01-05') DIV 7 "
                 "AS BIGINT)")
-    uw = (events.select("user_id", wk.alias("wk")).distinct()
-          .localCheckpoint(eager=False))
+    uw = cut(events.select("user_id", wk.alias("wk")).distinct())
     w = Window.partitionBy("user_id").orderBy("wk")
     lab = (uw.withColumn("prev", F.lag("wk").over(w))
            .select("wk",
@@ -2307,12 +2292,11 @@ def growth_accounting(events: DataFrame) -> DataFrame:
                    .otherwise(0).alias("is_ret"),
                    F.when(F.col("prev") <= F.col("wk") - 2, 1)
                    .otherwise(0).alias("is_res")))
-    per = (lab.groupBy("wk")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_active"),
-                F.sum("is_new").cast("bigint").alias("n_new"),
-                F.sum("is_ret").cast("bigint").alias("n_retained"),
-                F.sum("is_res").cast("bigint").alias("n_resurrected"))
-           .localCheckpoint(eager=False))
+    per = cut(lab.groupBy("wk")
+              .agg(F.count(F.lit(1)).cast("bigint").alias("n_active"),
+                   F.sum("is_new").cast("bigint").alias("n_new"),
+                   F.sum("is_ret").cast("bigint").alias("n_retained"),
+                   F.sum("is_res").cast("bigint").alias("n_resurrected")))
     prev = per.select((F.col("wk") + 1).alias("wk"),
                       F.col("n_active").alias("prev_active"))
     return (per.join(F.broadcast(prev), "wk", "left")
@@ -2356,12 +2340,11 @@ def series_strengths(events: DataFrame, period: int = 7) -> DataFrame:
         "day_i", F.datediff(F.col("day"), F.lit("1970-01-05").cast("date")))
     w = (Window.partitionBy("event_type").orderBy("day_i")
          .rangeBetween(-half, half))
-    d4 = (d2.withColumn("sum_w", F.sum("v").over(w))
-          .withColumn("n_w", F.count("v").over(w))
-          .where(F.col("n_w") == period)
-          .withColumn("ds", F.lit(period) * F.col("v") - F.col("sum_w"))
-          .withColumn("dow", F.col("day_i") % period)
-          .localCheckpoint(eager=False))
+    d4 = cut(d2.withColumn("sum_w", F.sum("v").over(w))
+             .withColumn("n_w", F.count("v").over(w))
+             .where(F.col("n_w") == period)
+             .withColumn("ds", F.lit(period) * F.col("v") - F.col("sum_w"))
+             .withColumn("dow", F.col("day_i") % period))
     seas = (d4.groupBy("event_type", "dow")
             .agg(F.sum("ds").alias("s_ds"),
                  F.count(F.lit(1)).alias("n_dow")))
@@ -2428,12 +2411,11 @@ def mase_backtest(events: DataFrame, period: int = 7,
     Scale: corpus → |types × days| frame; one keyed self-join and
     one per-type aggregate after."""
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("v"))
-             .withColumn("day_i", F.datediff(
-                 F.col("day"), F.lit("1970-01-05").cast("date")))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy("event_type", F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("v"))
+                .withColumn("day_i", F.datediff(
+                    F.col("day"), F.lit("1970-01-05").cast("date"))))
     mx = daily.groupBy("event_type").agg(F.max("day_i").alias("mx"))
     lag = daily.select(F.col("event_type").alias("t2"),
                        (F.col("day_i") + period).alias("di2"),
@@ -2542,7 +2524,7 @@ def expected_steps_to_absorption(events: DataFrame) -> DataFrame:
         # CollapseProject fix (see there); 1-row frame, arithmetic
         # and round count unchanged
         if r % 3 == 2:
-            cur = cur.localCheckpoint(eager=False)
+            cur = cut(cur)
     start_terms = " + ".join(f"(v_st_{u} * p_start_{u})"
                              for u in ATTR_CHANNELS)
     res = cur.select(
@@ -2585,17 +2567,15 @@ def max_drawdown_daily(events: DataFrame) -> DataFrame:
     drawdown_pct of peak 6dp), days as yyyy-MM-dd strings (the
     cross-engine date convention)."""
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("v"))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy("event_type", F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("v")))
     w = Window.partitionBy("event_type").orderBy("day")
-    d2 = (daily
-          .withColumn("peak", F.max("v").over(
-              w.rowsBetween(Window.unboundedPreceding,
-                            Window.currentRow)))
-          .withColumn("dd", F.col("peak") - F.col("v"))
-          .localCheckpoint(eager=False))
+    d2 = cut(daily
+             .withColumn("peak", F.max("v").over(
+                 w.rowsBetween(Window.unboundedPreceding,
+                               Window.currentRow)))
+             .withColumn("dd", F.col("peak") - F.col("v")))
     per = d2.groupBy(F.col("event_type").alias("et")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
         F.max("dd").alias("max_dd"))
@@ -2650,12 +2630,11 @@ def hodges_lehmann_daily(events: DataFrame) -> DataFrame:
     the corpus (same documented bound as theil_sen_trend: beyond a
     multi-year window, sample pairs or binary-search the value)."""
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("v"))
-             .withColumn("i", F.datediff(
-                 F.col("day"), F.lit("1970-01-05").cast("date")))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy("event_type", F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("v"))
+                .withColumn("i", F.datediff(
+                    F.col("day"), F.lit("1970-01-05").cast("date"))))
     rhs = daily.select(F.col("event_type").alias("t2"),
                        F.col("i").alias("j"), F.col("v").alias("vj"))
     walsh = (daily.join(rhs, (F.col("t2") == F.col("event_type"))
@@ -2704,10 +2683,9 @@ def diebold_mariano_daily(events: DataFrame) -> DataFrame:
     type-partitioned window, one bounded aggregate — nothing
     downstream of the daily collapse touches corpus-sized data."""
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("v"))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy("event_type", F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("v")))
     w = Window.partitionBy("event_type").orderBy("day")
     lagged = (daily
               .withColumn("l1", F.lag("v", 1).over(w))
@@ -2792,17 +2770,15 @@ def shapley_attribution(events: DataFrame) -> DataFrame:
           .agg(F.expr(f"bit_or({bit_case})").alias("mask"),
                F.max(F.when(F.col("event_type") == "purchase", 1)
                      .otherwise(0)).alias("conv")))
-    mv = (jm.groupBy("mask")
-          .agg(F.sum("conv").cast("bigint").alias("cv"))
-          .localCheckpoint(eager=False))
+    mv = cut(jm.groupBy("mask")
+             .agg(F.sum("conv").cast("bigint").alias("cv")))
     masks = spark.range(0, 1 << n).select(
         F.col("id").cast("int").alias("s"))
-    v = (masks.join(F.broadcast(mv), F.expr("(mask & s) = mask"),
-                    "left")
-         .groupBy("s")
-         .agg(F.coalesce(F.sum("cv"), F.lit(0)).cast("bigint")
-              .alias("v"))
-         .localCheckpoint(eager=False))
+    v = cut(masks.join(F.broadcast(mv), F.expr("(mask & s) = mask"),
+                       "left")
+            .groupBy("s")
+            .agg(F.coalesce(F.sum("cv"), F.lit(0)).cast("bigint")
+                 .alias("v")))
     chans = spark.createDataFrame(
         [(c, 1 << i) for i, c in enumerate(ATTR_CHANNELS)],
         "channel string, bit int")
@@ -2928,12 +2904,11 @@ def kruskal_wallis_dow(events: DataFrame) -> DataFrame:
     Scale: |types × days| collapse; rank windows partition by
     event_type over the bounded daily frame; output is |types|."""
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("v"))
-             .withColumn("dow", F.expr(
-                 "datediff(day, DATE '1970-01-05') % 7"))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy("event_type", F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("v"))
+                .withColumn("dow", F.expr(
+                    "datediff(day, DATE '1970-01-05') % 7")))
     wr = Window.partitionBy("event_type").orderBy("v")
     wt = Window.partitionBy("event_type", "v")
     r = (daily
@@ -3045,21 +3020,19 @@ def transition_entropy(events: DataFrame) -> DataFrame:
         F.col("event_type").alias("from_type"),
         F.lead("event_type").over(w).alias("to_type"))
         .where(F.col("to_type").isNotNull()))
-    counts = (pairs.groupBy("from_type", "to_type")
-              .agg(F.count("*").cast("bigint").alias("n"))
-              .localCheckpoint(eager=False))
+    counts = cut(pairs.groupBy("from_type", "to_type")
+                 .agg(F.count("*").cast("bigint").alias("n")))
     ln_mn = "CAST(round(ln(CAST({x} AS DOUBLE)) * 1000000, 0) AS BIGINT)"
     per = (counts
            .groupBy("from_type")
            .agg(F.sum("n").cast("bigint").alias("n_from")))
-    h = (counts.join(per, "from_type")
-         .select("from_type", "n_from",
-                 F.expr(f"n * ({ln_mn.format(x='n_from')} "
-                        f"- {ln_mn.format(x='n')})").alias("term"))
-         .groupBy("from_type", "n_from")
-         .agg(F.expr("sum(term) DIV max(n_from)").cast("bigint")
-              .alias("entropy_mn"))
-         .localCheckpoint(eager=False))
+    h = cut(counts.join(per, "from_type")
+            .select("from_type", "n_from",
+                    F.expr(f"n * ({ln_mn.format(x='n_from')} "
+                           f"- {ln_mn.format(x='n')})").alias("term"))
+            .groupBy("from_type", "n_from")
+            .agg(F.expr("sum(term) DIV max(n_from)").cast("bigint")
+                 .alias("entropy_mn")))
     tot = h.agg(F.sum("n_from").cast("bigint").alias("n_all"))
     rate = (h.crossJoin(F.broadcast(tot))
             .agg(F.expr("sum(n_from * entropy_mn) DIV max(n_all)")
@@ -3108,28 +3081,26 @@ def segmented_trend_break(events: DataFrame) -> DataFrame:
     explained = 1 − split/single, 6dp)."""
     d38 = "decimal(38,0)"
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("y"))
-             .withColumn("x", F.datediff(
-                 F.col("day"), F.lit("1970-01-05").cast("date"))
-                 .cast("bigint"))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy("event_type", F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("y"))
+                .withColumn("x", F.datediff(
+                    F.col("day"), F.lit("1970-01-05").cast("date"))
+                    .cast("bigint")))
     w = (Window.partitionBy("event_type").orderBy("x")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = (daily
-           .withColumn("rn", F.row_number().over(
-               Window.partitionBy("event_type").orderBy("x")))
-           .withColumn("cn", F.count(F.lit(1)).over(w))
-           .withColumn("csx", F.sum("x").over(w))
-           .withColumn("csy", F.sum("y").over(w))
-           .withColumn("csxy", F.sum(F.expr(f"CAST(x AS {d38}) * y"))
-                       .over(w))
-           .withColumn("csxx", F.sum(F.expr(f"CAST(x AS {d38}) * x"))
-                       .over(w))
-           .withColumn("csyy", F.sum(F.expr(f"CAST(y AS {d38}) * y"))
-                       .over(w))
-           .localCheckpoint(eager=False))
+    cum = cut(daily
+              .withColumn("rn", F.row_number().over(
+                  Window.partitionBy("event_type").orderBy("x")))
+              .withColumn("cn", F.count(F.lit(1)).over(w))
+              .withColumn("csx", F.sum("x").over(w))
+              .withColumn("csy", F.sum("y").over(w))
+              .withColumn("csxy", F.sum(F.expr(f"CAST(x AS {d38}) * y"))
+                          .over(w))
+              .withColumn("csxx", F.sum(F.expr(f"CAST(x AS {d38}) * x"))
+                          .over(w))
+              .withColumn("csyy", F.sum(F.expr(f"CAST(y AS {d38}) * y"))
+                          .over(w)))
     tot = (cum.groupBy(F.col("event_type").alias("et"))
            .agg(F.max("cn").cast("bigint").alias("n"),
                 F.max("csx").cast("bigint").alias("tx"),
@@ -3203,9 +3174,9 @@ def logrank_test(events: DataFrame) -> DataFrame:
     its risk sets (censoring handled correctly, unlike a naive
     conversion-rate z-test).
 
-    Durations and censoring are the kaplan_meier definitions
-    verbatim (whole days from first signup to first purchase at or
-    after it, censored at the corpus horizon, exact integer
+    Durations and censoring come from `_survival_durations`, as in
+    `kaplan_meier` (whole days from first signup to first purchase at
+    or after it, censored at the corpus horizon, exact integer
     microseconds). At each event day d: O₁ += d₁, E₁ += n₁·d/n and
     V += d·n₁·n₀·(n−d)/(n²·(n−1)) — each term quantized by ONE
     integer division (LOGRANK_SCALE) so the sums are order-free
@@ -3220,33 +3191,11 @@ def logrank_test(events: DataFrame) -> DataFrame:
     Output: one row (n_treat, n_ctrl, o1, e1_q, v_q, chi2,
     p_micro)."""
     d38 = "decimal(38,0)"
-    us_day = 86400000000
-    first = (events.where(F.col("event_type") == "signup")
-             .groupBy("user_id")
-             .agg(F.min(F.unix_micros("ts")).alias("s_us")))
-    fp = (events.where(F.col("event_type") == "purchase")
-          .groupBy("user_id").agg(F.min(F.unix_micros("ts"))
-                                  .alias("p_us")))
-    horizon = events.agg(F.max(F.unix_micros("ts")).alias("h_us"))
-    pu = (first.join(fp, "user_id", "left")
-          .crossJoin(F.broadcast(horizon))
-          .select((F.col("user_id") % 2).alias("arm"),
-                  # kaplan_meier's duration definitions verbatim:
-                  # floor (portable), purchase-before-signup counts
-                  # as censored at the horizon
-                  F.when(F.col("p_us") >= F.col("s_us"),
-                         F.floor((F.col("p_us") - F.col("s_us"))
-                                 / F.lit(us_day))).alias("ev_day"),
-                  F.floor((F.col("h_us") - F.col("s_us"))
-                          / F.lit(us_day)).alias("cens_day"))
-          .select("arm",
-                  F.coalesce(F.col("ev_day"), F.col("cens_day"))
-                  .cast("bigint").alias("t"),
-                  F.col("ev_day").isNotNull().cast("int").alias("ev"))
-          .localCheckpoint(eager=False))
+    pu = cut(_survival_durations(events)
+             .select((F.col("user_id") % 2).alias("arm"), "t", "e"))
     per = (pu.groupBy("arm", "t")
            .agg(F.count(F.lit(1)).cast("bigint").alias("ended"),
-                F.sum("ev").cast("bigint").alias("d")))
+                F.sum("e").cast("bigint").alias("d")))
     ntot = pu.groupBy("arm").agg(F.count(F.lit(1)).cast("bigint")
                                  .alias("n_arm"))
     days = per.select("t").distinct()
@@ -3271,9 +3220,8 @@ def logrank_test(events: DataFrame) -> DataFrame:
                       .select("t", F.col("d").alias(f"d{a}")),
                       "t", "left")
                 .na.fill({f"d{a}": 0}))
-    both = (risk_for_all_days(0).join(risk_for_all_days(1), "t")
-            .where((F.col("d0") + F.col("d1")) >= 1)
-            .localCheckpoint(eager=False))
+    both = cut(risk_for_all_days(0).join(risk_for_all_days(1), "t")
+               .where((F.col("d0") + F.col("d1")) >= 1))
     s = LOGRANK_SCALE
     e1 = (f"(CAST(n1 AS {d38}) * (d0 + d1) * {s}) DIV (n0 + n1)")
     vt = (f"CASE WHEN n0 + n1 > 1 THEN "
@@ -3352,10 +3300,9 @@ def mann_kendall_trend(events: DataFrame) -> DataFrame:
 
     Output: (event_type, n_days, s_stat, var18, z, trend)."""
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("v"))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy("event_type", F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("v")))
     d2 = daily.select(F.col("event_type").alias("et2"),
                       F.col("day").alias("day2"),
                       F.col("v").alias("v2"))
@@ -3402,16 +3349,15 @@ def kendall_tau_daily(events: DataFrame, type_x: str = "click",
     Output: one row (n_days, concordant, discordant, ties_x_only,
     ties_y_only, ties_both, tau_b)."""
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .where(F.col("event_type").isin([type_x, type_y]))
-             .groupBy(F.to_date("ts").alias("day"))
-             .pivot("event_type", [type_x, type_y])
-             .agg(F.coalesce(F.sum(cents), F.lit(0)).cast("bigint"))
-             .where(F.col(type_x).isNotNull()
-                    & F.col(type_y).isNotNull())
-             .select("day", F.col(type_x).alias("x"),
-                     F.col(type_y).alias("y"))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .where(F.col("event_type").isin([type_x, type_y]))
+                .groupBy(F.to_date("ts").alias("day"))
+                .pivot("event_type", [type_x, type_y])
+                .agg(F.coalesce(F.sum(cents), F.lit(0)).cast("bigint"))
+                .where(F.col(type_x).isNotNull()
+                       & F.col(type_y).isNotNull())
+                .select("day", F.col(type_x).alias("x"),
+                        F.col(type_y).alias("y")))
     d2 = daily.select(F.col("day").alias("day2"),
                       F.col("x").alias("x2"), F.col("y").alias("y2"))
     pairs = (daily.join(d2, F.col("day") < F.col("day2"))
@@ -3463,16 +3409,15 @@ def spearman_daily(events: DataFrame, type_x: str = "click",
     ranks — the doubling cancels), 6dp, NULL on a constant margin.
     Output: one row (n_days, rho)."""
     cents = F.round(F.col("value") * 100).cast("bigint")
-    daily = (events
-             .where(F.col("event_type").isin([type_x, type_y]))
-             .groupBy(F.to_date("ts").alias("day"))
-             .pivot("event_type", [type_x, type_y])
-             .agg(F.coalesce(F.sum(cents), F.lit(0)).cast("bigint"))
-             .where(F.col(type_x).isNotNull()
-                    & F.col(type_y).isNotNull())
-             .select("day", F.col(type_x).alias("x"),
-                     F.col(type_y).alias("y"))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .where(F.col("event_type").isin([type_x, type_y]))
+                .groupBy(F.to_date("ts").alias("day"))
+                .pivot("event_type", [type_x, type_y])
+                .agg(F.coalesce(F.sum(cents), F.lit(0)).cast("bigint"))
+                .where(F.col(type_x).isNotNull()
+                       & F.col(type_y).isNotNull())
+                .select("day", F.col(type_x).alias("x"),
+                        F.col(type_y).alias("y")))
 
     def ranked(col: str) -> DataFrame:
         g = daily.groupBy(col).agg(
@@ -3533,7 +3478,7 @@ def friedman_dow(events: DataFrame) -> DataFrame:
     full = (daily.groupBy("wk")
             .agg(F.count(F.lit(1)).alias("nd"))
             .where(F.col("nd") == 7).select("wk"))
-    d = daily.join(full, "wk").localCheckpoint(eager=False)
+    d = cut(daily.join(full, "wk"))
     # doubled within-week midranks over k=7 values
     d2 = d.select(F.col("wk").alias("wk2"), F.col("v").alias("v2"))
     r2 = (d.join(d2, F.col("wk") == F.col("wk2"))
@@ -3628,10 +3573,9 @@ def matrix_profile_daily(events: DataFrame,
              .groupBy("event_type", F.to_date("ts").alias("day"))
              .agg(F.sum(cents).cast("bigint").alias("v")))
     w = Window.partitionBy("event_type").orderBy("day")
-    pos = (daily.withColumn("pos",
-                            (F.row_number().over(w) - 1).cast("int"))
-           .select("event_type", "pos", "v")
-           .localCheckpoint(eager=False))
+    pos = cut(daily.withColumn("pos",
+                               (F.row_number().over(w) - 1).cast("int"))
+              .select("event_type", "pos", "v"))
     # window vectors as (start, offset) pairs: win(start) covers
     # positions start .. start+m-1
     offs = pos.sparkSession.range(m).select(
@@ -3679,9 +3623,9 @@ def event_type_mi(events: DataFrame) -> DataFrame:
     bounded pair cell and rounds to 4dp (the tfidf hash-stability
     convention). Output: (type_a, type_b, n11, n10, n01, n00,
     mi_nats)."""
-    pres = (events.select("user_id",
-                          F.col("event_type").alias("t"))
+    pres = (events.select("user_id", F.col("event_type").alias("t"))
             .distinct()
+            # cut: `cut` raises event_type_mi 10 → 11 jobs (sf0.01)
             .localCheckpoint(eager=False))
     n_users = events.select("user_id").distinct().agg(
         F.count(F.lit(1)).cast("bigint").alias("nn"))
@@ -3829,12 +3773,11 @@ def scc_event_graph(events: DataFrame) -> DataFrame:
     distinct per round; SCC id = min type mutually reachable with
     self-reach included. Output: (event_type, scc_id, scc_size)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (events
-             .select(F.col("event_type").alias("src"),
-                     F.lead("event_type").over(w).alias("dst"))
-             .where(F.col("dst").isNotNull())
-             .distinct()
-             .localCheckpoint(eager=True))
+    edges = cut(events
+                .select(F.col("event_type").alias("src"),
+                        F.lead("event_type").over(w).alias("dst"))
+                .where(F.col("dst").isNotNull())
+                .distinct())
     verts = (edges.select(F.col("src").alias("v"))
              .unionAll(edges.select(F.col("dst").alias("v")))
              .distinct())
@@ -3849,8 +3792,7 @@ def scc_event_graph(events: DataFrame) -> DataFrame:
                                        F.col("dst").alias("dst2")),
                           "dst")
                .select("src", F.col("dst2").alias("dst")))
-        reach = (reach.unionAll(hop).distinct()
-                 .localCheckpoint(eager=True))
+        reach = cut(reach.unionAll(hop).distinct())
     back = reach.select(F.col("dst").alias("src"),
                         F.col("src").alias("dst"))
     mutual = reach.join(back, ["src", "dst"], "left_semi")
@@ -4001,10 +3943,9 @@ def decile_lift(events: DataFrame) -> DataFrame:
     ranged = (base.repartitionByRange(*order)
               .withColumn("_pid", F.spark_partition_id()))
     w_local = Window.partitionBy("_pid").orderBy(*order)
-    local = (ranged.withColumn("_lrn",
-                               F.row_number().over(w_local)
-                               .cast("bigint"))
-             .localCheckpoint(eager=False))
+    local = cut(ranged.withColumn("_lrn",
+                                  F.row_number().over(w_local)
+                                  .cast("bigint")))
     counts = local.groupBy("_pid").agg(F.max("_lrn").alias("_cnt"))
     prior = counts.select(F.col("_pid").alias("_pid2"),
                           F.col("_cnt").alias("_cnt2"))
@@ -4340,10 +4281,9 @@ def ccf_lead_lag(events: DataFrame, max_lag: int = 3) -> DataFrame:
     other direction."""
     cents = F.round(F.col("value") * 100).cast("bigint")
     d38 = "decimal(38,0)"
-    daily = (events
-             .groupBy("event_type", F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("v"))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy("event_type", F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("v")))
     lags = events.sparkSession.createDataFrame(
         [(h,) for h in range(-max_lag, max_lag + 1)], "lag int")
     a = daily.select(F.col("event_type").alias("type_a"),
@@ -4470,6 +4410,7 @@ def hurst_rs(events: DataFrame) -> DataFrame:
     daily = (events
              .groupBy(F.to_date("ts").alias("day"))
              .agg(F.sum(cents).cast("bigint").alias("v"))
+             # cut: `cut` raises hurst_rs 12 → 17 jobs (sf0.01)
              .localCheckpoint(eager=False))
     day0 = daily.agg(F.min("day").alias("day0"))
     sizes = events.sparkSession.createDataFrame(
@@ -4585,8 +4526,7 @@ def chain_ladder_forecast(events: DataFrame) -> DataFrame:
            .groupBy("cohort_week",
                     (F.col("week") - F.col("cohort_week")).alias("age"))
            .agg(F.count("*").cast("bigint").alias("inc")))
-    weeks = (ev.select("week").distinct()
-             .localCheckpoint(eager=False))
+    weeks = cut(ev.select("week").distinct())
     max_w = weeks.agg(F.max("week").alias("max_week"))
     cohorts = cohort.select(F.col("cohort_week").alias("c")).distinct()
     grid = (cohorts.join(F.broadcast(weeks),
@@ -4594,12 +4534,11 @@ def chain_ladder_forecast(events: DataFrame) -> DataFrame:
             .select("c", (F.col("week") - F.col("c")).alias("age")))
     wcum = (Window.partitionBy("c").orderBy("age")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = (grid.join(pur, (pur.cohort_week == grid.c)
-                     & (pur.age == grid.age), "left")
-           .select("c", grid.age.alias("age"),
-                   F.coalesce("inc", F.lit(0)).alias("inc"))
-           .withColumn("cum", F.sum("inc").over(wcum).cast("bigint"))
-           .localCheckpoint(eager=False))
+    cum = cut(grid.join(pur, (pur.cohort_week == grid.c)
+                        & (pur.age == grid.age), "left")
+              .select("c", grid.age.alias("age"),
+                      F.coalesce("inc", F.lit(0)).alias("inc"))
+              .withColumn("cum", F.sum("inc").over(wcum).cast("bigint")))
     nxt = cum.select(F.col("c").alias("c2"),
                      (F.col("age") - 1).alias("age_m"),
                      F.col("cum").alias("cum_next"))
@@ -4750,15 +4689,13 @@ def isotonic_daily_fit(events: DataFrame) -> DataFrame:
     data-sized, no global window anywhere."""
     cents = F.round(F.col("value") * 100).cast("bigint")
     d38 = "decimal(38,0)"
-    daily = (events
-             .groupBy(F.to_date("ts").alias("day"))
-             .agg(F.sum(cents).cast("bigint").alias("v"))
-             .localCheckpoint(eager=False))
+    daily = cut(events
+                .groupBy(F.to_date("ts").alias("day"))
+                .agg(F.sum(cents).cast("bigint").alias("v")))
     day0 = daily.agg(F.min("day").alias("day0"))
-    idx = (daily.crossJoin(F.broadcast(day0))
-           .select("day", F.expr("datediff(day, day0)").alias("t"),
-                   "v")
-           .localCheckpoint(eager=False))
+    idx = cut(daily.crossJoin(F.broadcast(day0))
+              .select("day", F.expr("datediff(day, day0)").alias("t"),
+                      "v"))
     a = idx.select(F.col("t").alias("ta"))
     b = idx.select(F.col("t").alias("tb"))
     ivals = a.join(F.broadcast(b), F.col("ta") <= F.col("tb"))

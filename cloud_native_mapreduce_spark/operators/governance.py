@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cloud_native_mapreduce_spark.session import cut
+
 #: Cent shift making every balance positive before bucketing
 #: (|min| = $999.85 << $100,000).
 BAL_SHIFT_CENTS = 10_000_000
@@ -173,10 +175,9 @@ def erasure_cascade_audit(customer: DataFrame, orders: DataFrame,
     1-row table total. Output is 4 rows."""
     batch = (customer.where(F.col("c_custkey") % ERASURE_MOD == 0)
              .select("c_custkey"))
-    ords = (orders.join(batch, orders.o_custkey == batch.c_custkey,
-                        "left_semi")
-            .select("o_orderkey")
-            .localCheckpoint(eager=False))
+    ords = cut(orders.join(batch, orders.o_custkey == batch.c_custkey,
+                           "left_semi")
+               .select("o_orderkey"))
     li = lineitem.join(ords, lineitem.l_orderkey == ords.o_orderkey,
                        "left_semi")
     ev = events.join(batch, events.user_id == batch.c_custkey,

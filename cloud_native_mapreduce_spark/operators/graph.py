@@ -21,8 +21,8 @@ Big Data Analysis*, VLDB'12), and three kernels, defined next to
     loop behind `bfs_hops`, `sssp_weighted`, `landmark_distances`, the
     `graph_diameter_approx` sweeps and `dag_layers`.
 
-The fixed-round loops hold their state one way: every round
-checkpoints through `loop_checkpoint` in the loop session
+The fixed-round loops hold their state one way: every round is a
+`session.cut` in the loop session of its edge frame
 (`session.loop_session`: AQE off, one width from the edge frame's
 size). They are `relax`, PageRank and personalized PageRank through
 `_pagerank_rounds`, `kcore_membership`, `label_propagation`,
@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloud_native_mapreduce_spark.session import (
-    loop_checkpoint, loop_session)
+    cut, loop_session)
 
 #: Drop vertices with more co-occurrence partners than this before the
 #: closure stage (the WWW'11 "last reducer" guard; with degree
@@ -180,7 +180,7 @@ def relax(edges: DataFrame, state: DataFrame, agg, msg,
         nbr = (edges.join(state, edges.src == state.v)
                .groupBy("dst")
                .agg(*[agg(msg(F.col(c))).alias(f"n_{c}") for c in cols]))
-        state = loop_checkpoint(
+        state = cut(
             state.join(nbr.hint("shuffle_hash"), state.v == nbr.dst, "left")
             .select("v", *[keep(c, f"n_{c}").alias(c) for c in cols]),
             loop)
@@ -202,7 +202,7 @@ def _loop_edges(edges: DataFrame,
     loop = loop_session(edges)
     width = ([] if loop is edges.sparkSession
              else [int(loop.conf.get("spark.sql.shuffle.partitions"))])
-    edges = loop_checkpoint(edges, loop)
+    edges = cut(edges, loop)
     bi = (bidirected(edges, *carry).repartition(*width, "src")
           .persist(StorageLevel.MEMORY_AND_DISK))
     return bi, loop
@@ -242,8 +242,7 @@ def triangle_count(lineitem: DataFrame,
     edge-iteration: n_triangles = Σ over oriented edges of
     |N⁺(src) ∩ N⁺(dst)| — each triangle tallied exactly once at its
     (deg, id)-minimum corner."""
-    edges = capped_oriented(copart_pairs(lineitem), max_degree) \
-        .localCheckpoint(eager=False)
+    edges = cut(capped_oriented(copart_pairs(lineitem), max_degree))
     tri = (_closing_adjacency(edges.select("src", "dst")).select(
         F.size(F.array_intersect("na", "nb")).alias("t"))
         .agg(F.coalesce(F.sum("t"), F.lit(0)).cast("bigint")
@@ -304,7 +303,7 @@ def _pagerank_edges(
     consumer and 33.7 s with it built once."""
     bi, loop = _loop_edges(edges)
     outd = bi.groupBy("src").agg(F.count("*").alias("d"))
-    return loop_checkpoint(bi.join(outd, "src"), loop), outd, loop
+    return cut(bi.join(outd, "src"), loop), outd, loop
 
 
 def _pagerank_rounds(bi_d: DataFrame, ranks: DataFrame, teleport,
@@ -330,7 +329,7 @@ def _pagerank_rounds(bi_d: DataFrame, ranks: DataFrame, teleport,
                   .agg(F.sum(F.expr("rank DIV d")).alias("inflow")))
         if consts is not None:
             inflow = inflow.crossJoin(F.broadcast(consts))
-        ranks = loop_checkpoint(inflow.select(
+        ranks = cut(inflow.select(
             F.col("dst").alias("v"),
             (teleport + F.expr("(85 * inflow) DIV 100")).cast("long")
             .alias("rank")), loop)
@@ -396,8 +395,7 @@ def link_prediction(lineitem: DataFrame, min_common: int = 2,
     """
     from pyspark import StorageLevel
 
-    edges = copart_edges(lineitem, max_degree) \
-        .localCheckpoint(eager=False)
+    edges = cut(copart_edges(lineitem, max_degree))
     bi = bidirected(edges).toDF("u", "v") \
         .persist(StorageLevel.MEMORY_AND_DISK)
     deg = bi.groupBy("u").agg(F.count("*").alias("deg"))
@@ -479,11 +477,10 @@ def kcore_membership(lineitem: DataFrame, k: int = 3,
     symmetric edge list that is v's degree, and a round plans one
     exchange, on dst (at sf0.1 the survivor sets broadcast)."""
     bi, loop = _loop_edges(copart_edges(lineitem, max_degree))
-    verts = loop_checkpoint(bi.select(F.col("src").alias("v")).distinct(),
-                            loop)
+    verts = cut(bi.select(F.col("src").alias("v")).distinct(), loop)
     alive = verts
     for _ in range(n_rounds):
-        alive = loop_checkpoint(
+        alive = cut(
             bi.join(alive.select(F.col("v").alias("src")), "src",
                     "left_semi")
             .join(alive.select(F.col("v").alias("dst")), "dst",
@@ -551,9 +548,7 @@ def kcore_decomposition(lineitem: DataFrame,
     from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
-    # AQE, not the loop session: rounds persist; porting cut 145 → 141 jobs
-    edges = copart_edges(lineitem, max_degree) \
-        .localCheckpoint(eager=False)
+    edges = cut(copart_edges(lineitem, max_degree))
     bi = (bidirected(edges).toDF("u", "w")
           .persist(StorageLevel.MEMORY_AND_DISK))
     deg = (bi.groupBy("u").agg(F.count("*").alias("deg"))
@@ -573,7 +568,8 @@ def kcore_decomposition(lineitem: DataFrame,
                .select(F.col("u").alias("v"),
                        F.least("deg", "h").alias("core"), "old")
                .persist(StorageLevel.MEMORY_AND_DISK))
-        # AQE, not the loop session: rounds persist; porting cut 145 → 141 jobs
+        # eager: the checkpoint then takes the filled cache's exact size;
+        # cut: a lazy `cut` ran 158 jobs, 27 s against 143, 13 s (sf0.01)
         new_core = pre.localCheckpoint(eager=True)
         # drop the previous round's cache entry now that its
         # successor is materialized (checkpoint blocks keep the data)
@@ -731,7 +727,7 @@ def _propagate_labels(bi: DataFrame, loop: SparkSession,
     for _ in range(n_rounds):
         counts = (bi.join(labels, bi.src == labels.v)
                   .groupBy("dst", "label").agg(F.count("*").alias("c")))
-        labels = loop_checkpoint(
+        labels = cut(
             counts.withColumn("rn", F.row_number().over(rn))
             .where(F.col("rn") == 1)
             .select(F.col("dst").alias("v"), "label"), loop)
@@ -758,9 +754,8 @@ def hits_scores(lineitem: DataFrame, top_k: int = 20,
     direction `capped_oriented` already proves; top_k by (auth²
     DESC, v) is a TakeOrdered cut, no global sort.
     """
-    oriented = (capped_oriented(copart_pairs(lineitem), max_degree)
-                .select("src", "dst")
-                .localCheckpoint(eager=False))
+    oriented = cut(capped_oriented(copart_pairs(lineitem), max_degree)
+                   .select("src", "dst"))
     auth1 = (oriented.groupBy("dst")
              .agg(F.count("*").cast("bigint").alias("a1")))
     hub1 = (oriented.join(auth1, "dst")
@@ -845,7 +840,7 @@ def neighbor_agg_2hop(lineitem: DataFrame, part: DataFrame,
     """
     from pyspark import StorageLevel
 
-    edges = copart_edges(lineitem, max_degree).localCheckpoint(eager=False)
+    edges = cut(copart_edges(lineitem, max_degree))
     bi = bidirected(edges).toDF("u", "w") \
         .persist(StorageLevel.MEMORY_AND_DISK)
     feat = (bi.select(F.col("u").alias("v")).distinct()
@@ -922,8 +917,9 @@ def clustering_coefficients(lineitem: DataFrame,
     Scale: identical movement to triangle_count (capped adjacency
     lists keyed twice) plus one |triangles|-row explode and a
     |V|-row degree join — no new corpus-sized shuffle."""
-    edges = capped_oriented(copart_pairs(lineitem), max_degree) \
-        .localCheckpoint(eager=False)
+    edges = (capped_oriented(copart_pairs(lineitem), max_degree)
+             # cut: `cut` raises clustering_coefficients 13 → 19 jobs
+             .localCheckpoint(eager=False))
     tri_inst = (_closing_adjacency(edges.select("src", "dst"))
                 .select("src", "dst",
                         F.explode(F.array_intersect("na", "nb"))
@@ -971,8 +967,8 @@ def dag_layers(lineitem: DataFrame,
     bounded by n_rounds + 1 rows."""
     edges = copart_pairs(lineitem)
     loop = loop_session(edges)
-    edges = loop_checkpoint(edges, loop)
-    state = loop_checkpoint(
+    edges = cut(edges, loop)
+    state = cut(
         endpoints(edges).distinct().select("v", F.lit(0).alias("lay")),
         loop)
     state = relax(edges.toDF("src", "dst"), state, F.max,
@@ -1036,12 +1032,12 @@ def boruvka_msf(lineitem: DataFrame, n_rounds: int = BORUVKA_ROUNDS,
 
     edges = copart_weighted_edges(lineitem, max_degree)
     loop = loop_session(edges)
-    edges = loop_checkpoint(edges, loop)
-    comp = loop_checkpoint(endpoints(edges).distinct()
-                           .select("v", F.col("v").alias("c")), loop)
+    edges = cut(edges, loop)
+    comp = cut(endpoints(edges).distinct()
+               .select("v", F.col("v").alias("c")), loop)
     round_stats = []
     for r in range(1, n_rounds + 1):
-        ce = loop_checkpoint(
+        ce = cut(
             edges.join(comp.select(F.col("v").alias("a"),
                                    F.col("c").alias("ca")), "a")
             .join(comp.select(F.col("v").alias("b"),
@@ -1052,7 +1048,7 @@ def boruvka_msf(lineitem: DataFrame, n_rounds: int = BORUVKA_ROUNDS,
                 .unionAll(ce.select(F.col("cb").alias("cc"), "w", "a",
                                     "b", F.col("ca").alias("oc"))))
         wsel = Window.partitionBy("cc").orderBy("w", "a", "b")
-        sel = loop_checkpoint(
+        sel = cut(
             cand.withColumn("rn", F.row_number().over(wsel))
             .where(F.col("rn") == 1)
             .select("cc", "oc", "w", "a", "b"), loop)
@@ -1063,11 +1059,11 @@ def boruvka_msf(lineitem: DataFrame, n_rounds: int = BORUVKA_ROUNDS,
                       .alias("weight_added")))
         # selection graph (bidirectional) is FIXED for the inner
         # loop; only the |C|-row label frame moves per round
-        gedges = loop_checkpoint(
+        gedges = cut(
             bidirected(sel.select(F.col("cc").alias("a"),
                                   F.col("oc").alias("b")))
             .toDF("gc", "gn").distinct(), loop)
-        label = loop_checkpoint(
+        label = cut(
             comp.select(F.col("c").alias("cc")).distinct()
             .select("cc", F.col("cc").alias("lab")), loop)
         for _ in range(n_label_rounds):
@@ -1075,12 +1071,12 @@ def boruvka_msf(lineitem: DataFrame, n_rounds: int = BORUVKA_ROUNDS,
                                             "lab"), "gn")
                    .groupBy(F.col("gc").alias("cc"))
                    .agg(F.min("lab").alias("nl")))
-            label = loop_checkpoint(
+            label = cut(
                 label.join(nbr, "cc", "left")
                 .select("cc", F.least(
                     F.col("lab"), F.coalesce(F.col("nl"), F.col("lab")))
                     .alias("lab")), loop)
-        comp = loop_checkpoint(
+        comp = cut(
             comp.join(label.select(F.col("cc").alias("c"), "lab"), "c")
             .select("v", F.col("lab").alias("c")), loop)
         n_comp = comp.select("c").distinct() \
@@ -1116,8 +1112,7 @@ def graph_diameter_approx(lineitem: DataFrame, n_hops: int = 4,
     broadcast. Output is one row: (source_v, ecc_source, far_v,
     diameter_lb)."""
     bi, loop = _loop_edges(copart_edges(lineitem, max_degree))
-    verts = loop_checkpoint(bi.select(F.col("src").alias("v")).distinct(),
-                            loop)
+    verts = cut(bi.select(F.col("src").alias("v")).distinct(), loop)
 
     def sweep(source):  # source: broadcastable 1-row frame with col s
         return relax(bi, _from_source(verts, source, BFS_INF), F.min,
@@ -1248,8 +1243,8 @@ def luby_mis(lineitem: DataFrame,
                   16, 10).cast("bigint")
            * F.lit(_MIS_SHIFT) + F.col("v"))
     sym, loop = _loop_edges(copart_edges(lineitem))
-    und = loop_checkpoint(sym.select(F.col("src").alias("v")).distinct()
-                          .withColumn("k", key), loop)
+    und = cut(sym.select(F.col("src").alias("v")).distinct()
+              .withColumn("k", key), loop)
     parts = []
     for r in range(1, rounds + 1):
         if und.isEmpty():
@@ -1257,16 +1252,16 @@ def luby_mis(lineitem: DataFrame,
         nmin = (sym.join(und.select(F.col("v").alias("src"),
                                     F.col("k").alias("kn")), "src")
                 .groupBy("dst").agg(F.min("kn").alias("mn")))
-        m = loop_checkpoint(
+        m = cut(
             und.join(nmin, und.v == nmin.dst, "left")
             .where(F.col("mn").isNull() | (F.col("k") < F.col("mn")))
             .select("v"), loop)
         parts.append(m.select("v", F.lit(r).cast("int").alias("rnd")))
         x = (sym.join(m.select(F.col("v").alias("src")), "src")
              .select(F.col("dst").alias("v")).distinct())
-        removed = loop_checkpoint(m.unionByName(x).distinct(), loop)
-        und = loop_checkpoint(und.join(removed, "v", "left_anti"), loop)
-        sym = loop_checkpoint(
+        removed = cut(m.unionByName(x).distinct(), loop)
+        und = cut(und.join(removed, "v", "left_anti"), loop)
+        sym = cut(
             sym.join(removed.select(F.col("v").alias("src")), "src",
                      "left_anti")
             .join(removed.select(F.col("v").alias("dst")), "dst",
@@ -1316,8 +1311,8 @@ def wl_fingerprints(lineitem: DataFrame,
     the loop session; summaries are label-class-sized. Output per
     round: (round, n_distinct_labels, max_class, fingerprint)."""
     bi, loop = _loop_edges(copart_edges(lineitem))
-    lbl = loop_checkpoint(bi.select(F.col("src").alias("v")).distinct()
-                          .withColumn("lbl", F.lit("1")), loop)
+    lbl = cut(bi.select(F.col("src").alias("v")).distinct()
+              .withColumn("lbl", F.lit("1")), loop)
     out = None
     for r in range(1, rounds + 1):
         nb = (bi.join(lbl.select("v", F.col("lbl").alias("nl")),
@@ -1325,7 +1320,7 @@ def wl_fingerprints(lineitem: DataFrame,
               .groupBy("dst")
               .agg(F.array_join(F.sort_array(F.collect_list("nl")),
                                 ",").alias("nls")))
-        lbl = loop_checkpoint(
+        lbl = cut(
             lbl.join(nb, lbl.v == nb.dst)
             .select("v", F.substring(
                 F.md5(F.concat_ws("|", F.col("lbl"), F.col("nls"))), 1, 8)
@@ -1437,17 +1432,15 @@ def ktruss_edges(lineitem: DataFrame, k: int = KTRUSS_K,
     values.
 
     Output: the surviving canonical edge list (a, b)."""
-    edges = copart_edges(lineitem).localCheckpoint(eager=True)
+    edges = cut(copart_edges(lineitem))
     prev_n = None
     for _ in range(rounds):
-        d = _rank_oriented(edges, _degrees(edges)) \
-            .localCheckpoint(eager=True)
+        d = cut(_rank_oriented(edges, _degrees(edges)))
         supp = (_triangle_edges(d).groupBy("a", "b")
                 .agg(F.count(F.lit(1)).alias("sup")))
-        edges = (edges.join(supp, ["a", "b"])
-                 .where(F.col("sup") >= k - 2)
-                 .select("a", "b")
-                 .localCheckpoint(eager=True))
+        edges = cut(edges.join(supp, ["a", "b"])
+                    .where(F.col("sup") >= k - 2)
+                    .select("a", "b"))
         n = edges.count()
         if prev_n is not None and n == prev_n:
             break
@@ -1580,12 +1573,11 @@ def hub_removal_impact(lineitem: DataFrame,
     the standard persisted-edge label loop."""
     from cloud_native_mapreduce_spark.dedup.components import (
         connected_components)
-    edges = copart_edges(lineitem).localCheckpoint(eager=True)
-    verts = endpoints(edges).distinct().localCheckpoint(eager=False)
+    edges = cut(copart_edges(lineitem))
+    verts = cut(endpoints(edges).distinct())
     deg = _degrees(edges)
-    hubs = (deg.orderBy(F.col("deg").desc(), F.col("v"))
-            .limit(k).select("v")
-            .localCheckpoint(eager=True))
+    hubs = cut(deg.orderBy(F.col("deg").desc(), F.col("v"))
+               .limit(k).select("v"))
 
     def summarize(nodes, es):
         # edges_canonical: copart_edges yields DISTINCT a < b pairs and
@@ -1643,13 +1635,12 @@ def rich_club_coefficients(lineitem: DataFrame,
     members report NULL). Output: (k, n_members, n_club_edges,
     phi)."""
     spark = lineitem.sparkSession
-    edges = copart_edges(lineitem).localCheckpoint(eager=False)
-    deg = _degrees(edges).localCheckpoint(eager=False)
+    edges = cut(copart_edges(lineitem))
+    deg = cut(_degrees(edges))
     kf = spark.createDataFrame([(k,) for k in ks], "k int")
-    members = (deg.crossJoin(F.broadcast(kf))
-               .where(F.col("deg") > F.col("k"))
-               .select("k", "v")
-               .localCheckpoint(eager=False))
+    members = cut(deg.crossJoin(F.broadcast(kf))
+                  .where(F.col("deg") > F.col("k"))
+                  .select("k", "v"))
     n_m = members.groupBy("k").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members"))
     # both endpoints must be in the k-club: two keyed inner joins
@@ -1688,9 +1679,9 @@ def local_bridges(lineitem: DataFrame) -> DataFrame:
     have zero triangles. One summary column marks whether either
     endpoint is degree-1 (a pendant edge — trivially a local
     bridge). Output: (a, b, deg_a, deg_b, pendant)."""
-    edges = copart_edges(lineitem).localCheckpoint(eager=False)
+    edges = cut(copart_edges(lineitem))
     deg = _degrees(edges)
-    d = _rank_oriented(edges, deg).localCheckpoint(eager=False)
+    d = cut(_rank_oriented(edges, deg))
     supported = _triangle_edges(d).distinct()
     return (edges.join(supported, ["a", "b"], "left_anti")
             .join(deg.select(F.col("v").alias("a"),
@@ -1722,7 +1713,7 @@ def brand_assortativity(lineitem: DataFrame,
     (denominator 0). The brand table is a broadcast dimension join.
 
     Output: (n_edges, n_brands, same_brand_edges, assortativity)."""
-    edges = copart_edges(lineitem).localCheckpoint(eager=False)
+    edges = cut(copart_edges(lineitem))
     br = part.select(F.col("p_partkey"), F.col("p_brand"))
     lab = (edges
            .join(F.broadcast(br.select(

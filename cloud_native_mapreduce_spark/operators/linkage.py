@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cloud_native_mapreduce_spark.session import cut
+
 #: Offset namespace for the corrupted replica's keys.
 DIRTY_OFFSET = 9_000_000
 
@@ -210,15 +212,14 @@ def golden_record(customer: DataFrame,
     dirty = corrupted_customers(customer)
     matches = record_linkage(customer, threshold)
 
-    members = (clean.select(F.col("clean_key").alias("rec_key"),
-                            "name", "nation", "seg", "bal_cents")
-               .unionByName(dirty.select(
-                   F.col("dirty_key").alias("rec_key"),
-                   F.col("d_name").alias("name"),
-                   F.col("d_nation").alias("nation"),
-                   F.col("d_seg").alias("seg"),
-                   F.col("d_bal_cents").alias("bal_cents")))
-               .localCheckpoint(eager=False))
+    members = cut(clean.select(F.col("clean_key").alias("rec_key"),
+                               "name", "nation", "seg", "bal_cents")
+                  .unionByName(dirty.select(
+                      F.col("dirty_key").alias("rec_key"),
+                      F.col("d_name").alias("name"),
+                      F.col("d_nation").alias("nation"),
+                      F.col("d_seg").alias("seg"),
+                      F.col("d_bal_cents").alias("bal_cents"))))
     # edges_canonical: record_linkage emits DISTINCT (clean, dirty)
     # pairs and clean keys sort strictly below the replica offset, so
     # the reversed leg can never collide — skip the components loop's
@@ -227,7 +228,7 @@ def golden_record(customer: DataFrame,
         members.select("rec_key"), matches, node_col="rec_key",
         src_col="clean_key", dst_col="dirty_key",
         edges_canonical=True, hint_labels=True)
-    m = members.join(comps, "rec_key").localCheckpoint(eager=False)
+    m = cut(members.join(comps, "rec_key"))
 
     w_name = Window.partitionBy("comp").orderBy(
         F.length("name").desc(), F.col("name"))

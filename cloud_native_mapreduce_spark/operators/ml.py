@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cloud_native_mapreduce_spark.functions.text import tokens
+from cloud_native_mapreduce_spark.session import cut
 
 #: Micronat quantization scale for NB model cells: 1e6 keeps ln values
 #: (|ln p| < 20) inside 8 digits — summed over a 10^5-token document
@@ -54,6 +55,7 @@ def nb_scored(train: DataFrame, test: DataFrame) -> DataFrame:
                        .alias("tok"))
           .groupBy("lang", "tok")
           .agg(F.count(F.lit(1)).alias("c"))
+          # cut: `cut` raises naive_bayes_lang 23 → 25 jobs (sf0.01)
           .localCheckpoint(eager=False))
     vocab = tl.select("tok").distinct().agg(F.count(F.lit(1)).alias("v"))
     totals = tl.groupBy("lang").agg(F.sum("c").alias("ctot"))
@@ -316,10 +318,9 @@ def decision_stump(lineitem: DataFrame) -> DataFrame:
         F.expr("stack(2, 'quantity', CAST(l_quantity AS DOUBLE), "
                "'discount', l_discount) AS (feature, val)"),
         pos.alias("pos"))
-    hist = (vals.groupBy("feature", "val")
-            .agg(F.count(F.lit(1)).alias("cnt"),
-                 F.sum("pos").alias("p"))
-            .localCheckpoint(eager=False))
+    hist = cut(vals.groupBy("feature", "val")
+               .agg(F.count(F.lit(1)).alias("cnt"),
+                    F.sum("pos").alias("p")))
     tot = hist.groupBy("feature").agg(F.sum("cnt").alias("n"),
                                       F.sum("p").alias("pos_tot"))
     rhs = hist.select(F.col("feature").alias("f2"),
@@ -394,10 +395,9 @@ def classifier_agreement_kappa(docs: DataFrame,
         .select("doc_id", F.col("predicted_lang").alias("nb_lang"))
     heur = language_id_heuristic(test) \
         .select("doc_id", F.col("lang_pred").alias("heur_lang"))
-    conf = (nb.join(heur, "doc_id")
-            .groupBy("nb_lang", "heur_lang")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-            .localCheckpoint(eager=False))
+    conf = cut(nb.join(heur, "doc_id")
+               .groupBy("nb_lang", "heur_lang")
+               .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs")))
     d38 = "decimal(38,0)"
     rows = conf.groupBy(F.col("nb_lang").alias("lab")) \
         .agg(F.sum("n_docs").alias("r"))
@@ -460,8 +460,8 @@ def _pca_cmat(embeddings: DataFrame) -> DataFrame:
     # fan_out: the Θ(N·d²) scatter expansion (N×4096 rows through the
     # partial aggregate) happens BEFORE the first exchange; the single-
     # row-group embeddings scan would run it all on one core
-    vecs = (fan_out(embeddings.select("vec_id", q.alias("q")), "vec_id")
-            .select("q").localCheckpoint(eager=False))
+    vecs = cut(fan_out(embeddings.select("vec_id", q.alias("q")), "vec_id")
+               .select("q"))
     di = spark.range(1, PCA_DIM + 1).select(
         F.col("id").cast("int").alias("i"))
     dj = spark.range(1, PCA_DIM + 1).select(
@@ -478,14 +478,13 @@ def _pca_cmat(embeddings: DataFrame) -> DataFrame:
               .cast(d38).alias("g")))
     cfull = (f"(CAST(n AS {d38}) * g "
              f"- CAST(si AS {d38}) * sj)")
-    return (g.join(F.broadcast(s), "i")
-            .join(F.broadcast(s.select(F.col("i").alias("j"),
-                                       F.col("si").alias("sj"))), "j")
-            .crossJoin(F.broadcast(nf))
-            .select("i", "j",
-                    F.expr(_sdiv(cfull, "n")).cast("bigint")
-                    .alias("c"))
-            .localCheckpoint(eager=True))
+    return cut(g.join(F.broadcast(s), "i")
+               .join(F.broadcast(s.select(F.col("i").alias("j"),
+                                          F.col("si").alias("sj"))), "j")
+               .crossJoin(F.broadcast(nf))
+               .select("i", "j",
+                       F.expr(_sdiv(cfull, "n")).cast("bigint")
+                       .alias("c")))
 
 
 def _sdiv_py(x: int, d: int) -> int:
@@ -792,10 +791,9 @@ def _best_splits_per_node(vals: DataFrame) -> DataFrame:
     grouping key so one pass scores every node of a tree level.
     `vals` columns: node, feature, val, pos. Nodes with no valid
     split (pure or single-valued) simply emit no row."""
-    hist = (vals.groupBy("node", "feature", "val")
-            .agg(F.count(F.lit(1)).alias("cnt"),
-                 F.sum("pos").alias("p"))
-            .localCheckpoint(eager=False))
+    hist = cut(vals.groupBy("node", "feature", "val")
+               .agg(F.count(F.lit(1)).alias("cnt"),
+                    F.sum("pos").alias("p")))
     tot = hist.groupBy("node", "feature").agg(
         F.sum("cnt").alias("n"), F.sum("p").alias("pos_tot"))
     rhs = hist.select(F.col("node").alias("n2"),
@@ -864,10 +862,9 @@ def decision_tree_depth2(lineitem: DataFrame) -> DataFrame:
     winner selection is a bounded-frame window. The root row is a
     one-row broadcast — never a collect."""
     pos = F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-    rows = (lineitem.select(
+    rows = cut(lineitem.select(
         F.col("l_quantity").cast("double").alias("quantity"),
-        F.col("l_discount").alias("discount"), pos.alias("pos"))
-        .localCheckpoint(eager=False))
+        F.col("l_discount").alias("discount"), pos.alias("pos")))
     stacked = rows.select(
         F.lit("root").alias("node"),
         F.expr("stack(2, 'quantity', quantity, 'discount', discount) "

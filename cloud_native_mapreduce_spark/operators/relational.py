@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cloud_native_mapreduce_spark.session import cut
+
 
 # --- scans / filters / projections -----------------------------------------
 
@@ -489,9 +491,8 @@ def customer_value_tiles(customer: DataFrame) -> DataFrame:
               .repartitionByRange(*order)
               .withColumn("_pid", F.spark_partition_id()))
     w_local = Window.partitionBy("_pid").orderBy(*order)
-    local = (ranged.withColumn("_lrn",
-                               F.row_number().over(w_local).cast("bigint"))
-             .localCheckpoint(eager=False))
+    local = cut(ranged.withColumn("_lrn",
+                                  F.row_number().over(w_local).cast("bigint")))
     counts = local.groupBy("_pid").agg(F.max("_lrn").alias("_cnt"))
     prior = counts.select(F.col("_pid").alias("_pid2"),
                           F.col("_cnt").alias("_cnt2"))
@@ -783,14 +784,13 @@ def top_supplier(supplier: DataFrame, lineitem: DataFrame) -> DataFrame:
     task. Exact integer revenue units."""
     cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
     disc_pct = F.round(F.col("l_discount") * 100).cast("bigint")
-    rev = (lineitem
-           .where((F.col("l_shipdate") >= "1996-01-01")
-                  & (F.col("l_shipdate") < "1996-04-01"))
-           .groupBy("l_suppkey")
-           .agg(F.sum(cents * (100 - disc_pct)).alias("rev_e4"))
-           # two consumers below (scalar max + join back); materialize the
-           # small per-supplier frame once instead of scanning lineitem twice
-           .localCheckpoint(eager=False))
+    # two consumers below (scalar max + join back); cut the small
+    # per-supplier frame once instead of scanning lineitem twice
+    rev = cut(lineitem
+              .where((F.col("l_shipdate") >= "1996-01-01")
+                     & (F.col("l_shipdate") < "1996-04-01"))
+              .groupBy("l_suppkey")
+              .agg(F.sum(cents * (100 - disc_pct)).alias("rev_e4")))
     best_e4 = rev.agg(F.max("rev_e4").alias("best_e4"))
     best = (rev.join(F.broadcast(best_e4),
                      F.col("rev_e4") == F.col("best_e4"))
@@ -874,12 +874,11 @@ def small_quantity_revenue(part: DataFrame, lineitem: DataFrame) -> DataFrame:
     (sum, count) aggregate is computed from that SAME filtered frame
     (checkpointed so the fact scan happens once) and joined back on
     partkey — partkey-bounded build side, no window."""
-    brand_items = (lineitem
-                   .join(F.broadcast(part.where(F.col("p_brand")
-                                                == "Brand#3")),
-                         F.col("l_partkey") == F.col("p_partkey"))
-                   .select("l_partkey", "l_quantity", "l_extendedprice")
-                   .localCheckpoint(eager=False))
+    brand_items = cut(lineitem
+                      .join(F.broadcast(part.where(F.col("p_brand")
+                                                   == "Brand#3")),
+                            F.col("l_partkey") == F.col("p_partkey"))
+                      .select("l_partkey", "l_quantity", "l_extendedprice"))
     per_part = brand_items.groupBy(
         F.col("l_partkey").alias("agg_partkey")).agg(
         F.sum(F.col("l_quantity").cast("bigint")).alias("sum_qty"),
@@ -1023,12 +1022,11 @@ def min_cost_supplier(part: DataFrame, supplier: DataFrame,
     rounding could differ at a boundary."""
     cost_e6 = F.expr("(CAST(round(l_extendedprice * 100) AS BIGINT) "
                      "* 10000) DIV CAST(round(l_quantity) AS BIGINT)")
-    offers = (lineitem
-              .select("l_partkey", "l_suppkey", cost_e6.alias("c"))
-              .groupBy("l_partkey", "l_suppkey")
-              .agg(F.min("c").alias("cost_e6"))
-              # feeds both the per-part min and the join-back
-              .localCheckpoint(eager=False))
+    # feeds both the per-part min and the join-back
+    offers = cut(lineitem
+                 .select("l_partkey", "l_suppkey", cost_e6.alias("c"))
+                 .groupBy("l_partkey", "l_suppkey")
+                 .agg(F.min("c").alias("cost_e6")))
     best = offers.groupBy("l_partkey").agg(F.min("cost_e6").alias("best"))
     sel_part = part.where((F.col("p_type") == "ECONOMY")
                           & (F.col("p_size") <= 10))
@@ -1115,13 +1113,12 @@ def important_stock(lineitem: DataFrame, supplier: DataFrame,
                                                == "NATION_1")),
                       F.col("s_nationkey") == F.col("n_nationkey"))
                 .select("s_suppkey"))
-    per_part = (lineitem
-                .join(F.broadcast(nat_supp),
-                      F.col("l_suppkey") == F.col("s_suppkey"),
-                      "left_semi")
-                .groupBy("l_partkey")
-                .agg(F.sum(val_e4).alias("value_e4"))
-                .localCheckpoint(eager=False))
+    per_part = cut(lineitem
+                   .join(F.broadcast(nat_supp),
+                         F.col("l_suppkey") == F.col("s_suppkey"),
+                         "left_semi")
+                   .groupBy("l_partkey")
+                   .agg(F.sum(val_e4).alias("value_e4")))
     total = per_part.agg(F.sum("value_e4").alias("total_e4"))
     return (per_part.join(F.broadcast(total))
             .where(F.col("value_e4") * 2000 > F.col("total_e4"))
@@ -1166,15 +1163,14 @@ def potential_promotion(lineitem: DataFrame, part: DataFrame,
     total is exact."""
     promo = part.where(F.col("p_type") == "PROMO").select("p_partkey")
     qty = F.round(F.col("l_quantity")).cast("bigint")
-    ps = (lineitem
-          .where((F.col("l_shipdate") >= "1995-01-01")
-                 & (F.col("l_shipdate") < "1996-01-01"))
-          .join(F.broadcast(promo),
-                F.col("l_partkey") == F.col("p_partkey"), "left_semi")
-          .select("l_partkey", "l_suppkey", qty.alias("q"))
-          .groupBy("l_partkey", "l_suppkey")
-          .agg(F.sum("q").alias("supp_qty"))
-          .localCheckpoint(eager=False))
+    ps = cut(lineitem
+             .where((F.col("l_shipdate") >= "1995-01-01")
+                    & (F.col("l_shipdate") < "1996-01-01"))
+             .join(F.broadcast(promo),
+                   F.col("l_partkey") == F.col("p_partkey"), "left_semi")
+             .select("l_partkey", "l_suppkey", qty.alias("q"))
+             .groupBy("l_partkey", "l_suppkey")
+             .agg(F.sum("q").alias("supp_qty")))
     tot = ps.groupBy("l_partkey").agg(F.sum("supp_qty").alias("part_qty"))
     dominant = (ps.join(tot, ["l_partkey"])
                 .where(F.col("supp_qty") * 2 > F.col("part_qty"))

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cloud_native_mapreduce_spark.functions.text import tokens
+from cloud_native_mapreduce_spark.session import cut
 
 #: DSIR feature-hash width in md5 hex chars: 3 → 16^3 = 4096 buckets.
 #: md5 is the cross-engine hash (Spark and DuckDB agree byte-for-byte),
@@ -308,20 +309,18 @@ def mmr_rerank(emb: DataFrame, query_vec_id: int = 0, k: int = 10,
                    quantized(F.col("embedding")).alias("q"))
     qvec = (q.where(F.col("vec_id") == query_vec_id)
             .select(F.col("q").alias("qq")))
-    cand = (q.where(F.col("vec_id") != query_vec_id)
-            .crossJoin(F.broadcast(qvec))
-            .select("vec_id", "q",
-                    _int_dot(F.col("q"), F.col("qq")).alias("rel_q"))
-            .orderBy(F.col("rel_q").desc(), F.col("vec_id").asc())
-            .limit(n_candidates)
-            .localCheckpoint(eager=False))
-    sim = (cand.select(F.col("vec_id").alias("a"), F.col("q").alias("qa"))
-           .join(cand.select(F.col("vec_id").alias("b"),
-                             F.col("q").alias("qb")),
-                 F.col("a") != F.col("b"))
-           .select("a", "b", _int_dot(F.col("qa"), F.col("qb"))
-                   .alias("sim_q"))
-           .localCheckpoint(eager=False))
+    cand = cut(q.where(F.col("vec_id") != query_vec_id)
+               .crossJoin(F.broadcast(qvec))
+               .select("vec_id", "q",
+                       _int_dot(F.col("q"), F.col("qq")).alias("rel_q"))
+               .orderBy(F.col("rel_q").desc(), F.col("vec_id").asc())
+               .limit(n_candidates))
+    sim = cut(cand.select(F.col("vec_id").alias("a"), F.col("q").alias("qa"))
+              .join(cand.select(F.col("vec_id").alias("b"),
+                                F.col("q").alias("qb")),
+                    F.col("a") != F.col("b"))
+              .select("a", "b", _int_dot(F.col("qa"), F.col("qb"))
+                      .alias("sim_q")))
     pool = cand.select("vec_id", "rel_q")
     # round 1: pure relevance argmax
     selected = (pool.orderBy(F.col("rel_q").desc(),
@@ -345,7 +344,7 @@ def mmr_rerank(emb: DataFrame, query_vec_id: int = 0, k: int = 10,
                 .limit(1)
                 .select("vec_id", "rel_q", "mmr_x10",
                         F.lit(r).cast("bigint").alias("rank")))
-        selected = selected.unionByName(pick).localCheckpoint(eager=False)
+        selected = cut(selected.unionByName(pick))
     return selected.select("rank", "vec_id", "rel_q", "mmr_x10")
 
 
@@ -478,13 +477,12 @@ def tfidf_cosine_pairs(docs: DataFrame,
           .agg(F.count(F.lit(1)).alias("tf")))
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     nd = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    w = (tf.join(df_t, "term").crossJoin(F.broadcast(nd))
-         .where((F.col("df") >= 2)
-                & (F.col("df") * 2 <= F.col("n_docs"))
-                & (F.col("df") <= TFIDF_MAX_DF))
-         .select("doc_id", "term",
-                 F.expr(tfidf_weight_expr()).alias("w"))
-         .localCheckpoint(eager=False))
+    w = cut(tf.join(df_t, "term").crossJoin(F.broadcast(nd))
+            .where((F.col("df") >= 2)
+                   & (F.col("df") * 2 <= F.col("n_docs"))
+                   & (F.col("df") <= TFIDF_MAX_DF))
+            .select("doc_id", "term",
+                    F.expr(tfidf_weight_expr()).alias("w")))
     d = "decimal(38,0)"
     norms = (w.groupBy("doc_id")
              .agg(F.sum(F.expr(f"CAST(w AS {d}) * w")).alias("n2")))
@@ -552,20 +550,18 @@ def ndcg_retrieval_eval(docs: DataFrame, query_terms: list[str],
     # relevance gains (the retrieval-module convention) — the tf
     # aggregate is lineage-truncated because the two consumers would
     # otherwise re-run the scan+explode+combine pipeline each
-    tf = _term_freq(docs, text_col).localCheckpoint(eager=False)
+    tf = cut(_term_freq(docs, text_col))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    topk = _bm25_scores(tf, dl, query_terms, k, 1.2, 0.75) \
-        .localCheckpoint(eager=False)
+    topk = cut(_bm25_scores(tf, dl, query_terms, k, 1.2, 0.75))
     qt = spark.createDataFrame([(t,) for t in sorted(set(query_terms))],
                                "term string")
     matched = (tf.join(F.broadcast(qt), "term")
                .groupBy("doc_id")
                .agg(F.count_distinct("term").alias("nq")))
-    gains = matched.select(
+    gains = cut(matched.select(
         "doc_id",
         F.when(F.col("nq") >= 2, 3).when(F.col("nq") == 1, 1)
-        .otherwise(0).cast("bigint").alias("gain")) \
-        .localCheckpoint(eager=False)
+        .otherwise(0).cast("bigint").alias("gain")))
     # rank within the k-row result: broadcast triangular position
     other = topk.select(F.col("doc_id").alias("d2"),
                         F.col("bm25").alias("s2"))
@@ -575,12 +571,11 @@ def ndcg_retrieval_eval(docs: DataFrame, query_terms: list[str],
                            & (F.col("d2") < F.col("doc_id"))), "left")
               .groupBy("doc_id", "bm25")
               .agg((F.count("d2") + 1).cast("bigint").alias("pos")))
-    scored = (ranked.join(gains, "doc_id", "left")
-              .select("doc_id", "pos",
-                      F.coalesce(F.col("gain"), F.lit(0)).cast("bigint")
-                      .alias("gain"),
-                      F.expr(ndcg_discount_expr()).alias("w"))
-              .localCheckpoint(eager=False))
+    scored = cut(ranked.join(gains, "doc_id", "left")
+                 .select("doc_id", "pos",
+                         F.coalesce(F.col("gain"), F.lit(0)).cast("bigint")
+                         .alias("gain"),
+                         F.expr(ndcg_discount_expr()).alias("w")))
     dcg = scored.agg(F.sum(F.expr("gain * w")).cast("bigint")
                      .alias("dcg_q"))
     first_hit = (scored.where(F.col("gain") > 0)
@@ -706,12 +701,11 @@ def pmi_pairs(docs: DataFrame, min_pair: int = PMI_MIN_PAIR,
     the pair aggregate map-side combines; marginal join-backs are
     |vocab|-row; min_pair prunes before the ln. Output: (tok_a,
     tok_b, n_pair, df_a, df_b, pmi_mn)."""
-    grouped = (docs.select(
+    grouped = cut(docs.select(
         "doc_id",
         F.array_distinct(tokens(F.col("text"))).alias("ts"))
         .select("doc_id", F.sort_array("ts").alias("ts"))
-        .where(F.size("ts") >= 1)
-        .localCheckpoint(eager=False))
+        .where(F.size("ts") >= 1))
     nd = grouped.agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
     df = (grouped.select(F.explode("ts").alias("t"))
           .groupBy("t").agg(F.count(F.lit(1)).cast("bigint")

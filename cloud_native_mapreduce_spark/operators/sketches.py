@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cloud_native_mapreduce_spark.session import cut
+
 #: HLL precision: 2^10 = 1024 registers (~0.032 rel. std. error).
 HLL_P = 10
 HLL_M = 1 << HLL_P
@@ -370,11 +372,10 @@ def hdr_quantiles(lineitem: DataFrame,
     merged = (per_g.groupBy("k", "sub")
               .agg(F.sum("cnt").alias("cnt"))
               .select(F.lit("ALL").alias("g"), "k", "sub", "cnt"))
-    buckets = (per_g.unionByName(merged)
-               .select("g", "k", "sub", "cnt",
-                       (F.col("k") * (2 << HDR_SUB_BITS) + F.col("sub"))
-                       .alias("o"))
-               .localCheckpoint(eager=False))
+    buckets = cut(per_g.unionByName(merged)
+                  .select("g", "k", "sub", "cnt",
+                          (F.col("k") * (2 << HDR_SUB_BITS) + F.col("sub"))
+                          .alias("o")))
     tot = buckets.groupBy("g").agg(F.sum("cnt").alias("n"))
     lower = buckets.select(F.col("g").alias("g2"), F.col("o").alias("o2"),
                            F.col("cnt").alias("c2"))
@@ -439,12 +440,11 @@ def cms_heavy_change(orders: DataFrame, lineitem: DataFrame,
                   "AS INT))")
     tagged = (li.crossJoin(F.broadcast(bounds))
               .select("part", (F.col("day") <= half).alias("is_a")))
-    base = (tagged.groupBy("part")
-            .agg(F.sum(F.col("is_a").cast("int")).cast("bigint")
-                 .alias("true_a"),
-                 F.sum((~F.col("is_a")).cast("int")).cast("bigint")
-                 .alias("true_b"))
-            .localCheckpoint(eager=False))
+    base = cut(tagged.groupBy("part")
+               .agg(F.sum(F.col("is_a").cast("int")).cast("bigint")
+                    .alias("true_a"),
+                    F.sum((~F.col("is_a")).cast("int")).cast("bigint")
+                    .alias("true_b")))
     freq_a = (base.where("true_a > 0")
               .select(F.col("part").alias("k"),
                       F.col("true_a").alias("cnt")))

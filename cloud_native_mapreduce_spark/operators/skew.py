@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cloud_native_mapreduce_spark.session import cut
+
 N_SALTS = 16
 
 
@@ -97,9 +99,8 @@ def join_skew_profile(events: DataFrame,
     All integer arithmetic (scaled divisions are integer DIV): one
     map-side-combined key count, one 1-row profile aggregate
     broadcast back, a deterministic top-10 cut."""
-    cnt = (events.groupBy(F.col(key_col).alias("k"))
-           .agg(F.count(F.lit(1)).alias("cnt"))
-           .localCheckpoint(eager=False))
+    cnt = cut(events.groupBy(F.col(key_col).alias("k"))
+              .agg(F.count(F.lit(1)).alias("cnt")))
     prof = cnt.agg(F.count(F.lit(1)).alias("n_keys"),
                    F.sum("cnt").alias("total"),
                    F.max("cnt").alias("max_cnt"))

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cloud_native_mapreduce_spark.session import cut
+
 #: Grid extent per axis (coordinates are taken mod GRID).
 GRID = 256
 #: Chebyshev radius — also the blocking cell side.
@@ -203,11 +205,10 @@ def dbscan_grid(customer: DataFrame,
     x = F.pmod(F.round(F.col("c_acctbal") * 100).cast("bigint"),
                F.lit(grid)).cast("int")
     y = F.pmod(F.col("c_custkey"), F.lit(grid)).cast("int")
-    pts = (customer.select(F.col("c_custkey").alias("k"),
-                           x.alias("x"), y.alias("y"))
-           .withColumn("cx", (F.col("x") / eps).cast("int"))
-           .withColumn("cy", (F.col("y") / eps).cast("int"))
-           .localCheckpoint(eager=False))
+    pts = cut(customer.select(F.col("c_custkey").alias("k"),
+                              x.alias("x"), y.alias("y"))
+              .withColumn("cx", (F.col("x") / eps).cast("int"))
+              .withColumn("cy", (F.col("y") / eps).cast("int")))
     offs = spark.range(9).select(
         (F.col("id") % 3 - 1).cast("int").alias("dx"),
         ((F.col("id") / 3).cast("int") - 1).alias("dy"))
@@ -228,16 +229,14 @@ def dbscan_grid(customer: DataFrame,
 
     ncnt = neighbor_pairs().groupBy("k").agg(
         F.count(F.lit(1)).alias("n_nb"))
-    flags = (pts.select("k", "cx", "cy")
-             .join(ncnt, "k", "left")
-             .select("k", "cx", "cy",
-                     ((F.coalesce(F.col("n_nb"), F.lit(0)) + 1)
-                      >= min_pts).alias("is_core"))
-             .localCheckpoint(eager=False))
+    flags = cut(pts.select("k", "cx", "cy")
+                .join(ncnt, "k", "left")
+                .select("k", "cx", "cy",
+                        ((F.coalesce(F.col("n_nb"), F.lit(0)) + 1)
+                         >= min_pts).alias("is_core")))
     cores = flags.where("is_core").select("k", "cx", "cy")
-    cellmin = (cores.groupBy("cx", "cy")
-               .agg(F.min("k").alias("mk"))
-               .localCheckpoint(eager=False))
+    cellmin = cut(cores.groupBy("cx", "cy")
+                  .agg(F.min("k").alias("mk")))
     star = (cores.join(cellmin, ["cx", "cy"])
             .where(F.col("k") != F.col("mk"))
             .select(F.col("mk").alias("doc_a"),

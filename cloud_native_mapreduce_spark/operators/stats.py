@@ -34,6 +34,8 @@ import math
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from cloud_native_mapreduce_spark.session import cut
+
 
 # ---------------------------------------------------------------------------
 # Shared fixed-form expression text (parsed by Spark AND DuckDB)
@@ -93,13 +95,12 @@ def _value_counts(docs: DataFrame, lang_a: str, lang_b: str) -> DataFrame:
     branches — without the barrier each branch would re-run the
     corpus scan + aggregate (the explode-rescan lesson applied to
     DAG-shaped plans)."""
-    return (docs.where(F.col("lang").isin(lang_a, lang_b))
-            .groupBy("n_chars")
-            .agg(F.sum(F.when(F.col("lang") == lang_a, 1).otherwise(0))
-                 .cast("bigint").alias("ca"),
-                 F.sum(F.when(F.col("lang") == lang_b, 1).otherwise(0))
-                 .cast("bigint").alias("cb"))
-            .localCheckpoint(eager=False))
+    return cut(docs.where(F.col("lang").isin(lang_a, lang_b))
+               .groupBy("n_chars")
+               .agg(F.sum(F.when(F.col("lang") == lang_a, 1).otherwise(0))
+                    .cast("bigint").alias("ca"),
+                    F.sum(F.when(F.col("lang") == lang_b, 1).otherwise(0))
+                    .cast("bigint").alias("cb")))
 
 
 def mann_whitney_u(docs: DataFrame, lang_a: str = "en",
@@ -159,19 +160,17 @@ def ks_two_sample(docs: DataFrame, lang_a: str = "en",
     vals = _value_counts(docs, lang_a, lang_b)
     lo = vals.select(F.col("n_chars").alias("u"),
                      F.col("ca").alias("cau"), F.col("cb").alias("cbu"))
-    cum = (vals.join(F.broadcast(lo), F.col("u") <= F.col("n_chars"))
-           .groupBy("n_chars")
-           .agg(F.sum("cau").alias("cuma"), F.sum("cbu").alias("cumb"))
-           .localCheckpoint(eager=False))
+    cum = cut(vals.join(F.broadcast(lo), F.col("u") <= F.col("n_chars"))
+              .groupBy("n_chars")
+              .agg(F.sum("cau").alias("cuma"), F.sum("cbu").alias("cumb")))
     dd = "decimal(38,0)"
     tot = cum.agg(F.max("cuma").cast("bigint").alias("n_a"),
                   F.max("cumb").cast("bigint").alias("n_b"))
-    gaps = (cum.crossJoin(F.broadcast(tot))
-            .select("n_chars", "n_a", "n_b",
-                    F.abs(F.col("cuma").cast(dd) * F.col("n_b").cast(dd)
-                          - F.col("cumb").cast(dd)
-                          * F.col("n_a").cast(dd)).alias("gap"))
-            .localCheckpoint(eager=False))
+    gaps = cut(cum.crossJoin(F.broadcast(tot))
+               .select("n_chars", "n_a", "n_b",
+                       F.abs(F.col("cuma").cast(dd) * F.col("n_b").cast(dd)
+                             - F.col("cumb").cast(dd)
+                             * F.col("n_a").cast(dd)).alias("gap")))
     best = (gaps.groupBy("n_a", "n_b")
             .agg(F.max("gap").alias("maxgap")))
     located = (gaps.join(F.broadcast(best), ["n_a", "n_b"])
@@ -246,19 +245,17 @@ def benford_digits(orders: DataFrame) -> DataFrame:
     aggregate collapses the corpus; everything after is 9-sized."""
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     digit = F.substring(cents.cast("string"), 1, 1).cast("int")
-    obs = (orders.select(digit.alias("digit"))
-           .groupBy("digit").agg(F.count(F.lit(1)).alias("obs"))
-           .localCheckpoint(eager=False))
+    obs = cut(orders.select(digit.alias("digit"))
+              .groupBy("digit").agg(F.count(F.lit(1)).alias("obs")))
     tot = obs.agg(F.sum("obs").alias("n_orders"))
     p = F.expr(benford_expected_sql())
     term = (F.col("obs") - F.col("n_orders") * p) \
         * (F.col("obs") - F.col("n_orders") * p) \
         / (F.col("n_orders") * p)
-    per = (obs.crossJoin(F.broadcast(tot))
-           .select("digit", "obs", "n_orders",
-                   F.round(F.col("n_orders") * p, 4).alias("expected"),
-                   F.round(term * 1e6).cast("bigint").alias("term_micro"))
-           .localCheckpoint(eager=False))
+    per = cut(obs.crossJoin(F.broadcast(tot))
+              .select("digit", "obs", "n_orders",
+                      F.round(F.col("n_orders") * p, 4).alias("expected"),
+                      F.round(term * 1e6).cast("bigint").alias("term_micro")))
     chi = per.groupBy().agg(
         (F.sum("term_micro") / F.lit(1e6)).alias("chi2"))
     return (per.crossJoin(F.broadcast(chi))
@@ -327,13 +324,12 @@ def bootstrap_ci_mean(orders: DataFrame,
                    F.expr(poisson_mult_case("h")).alias("m"))
            .where(F.col("m") > 0))
     dd = "decimal(38,0)"
-    means = (rep.groupBy("b")
-             .agg(F.sum(F.col("m").cast(dd) * F.col("cents").cast(dd))
-                  .alias("s"),
-                  F.sum("m").cast("bigint").alias("n"))
-             .select("b", (F.col("s").cast("double")
-                           / F.col("n").cast("double")).alias("mean_b"))
-             .localCheckpoint(eager=False))
+    means = cut(rep.groupBy("b")
+                .agg(F.sum(F.col("m").cast(dd) * F.col("cents").cast(dd))
+                     .alias("s"),
+                     F.sum("m").cast("bigint").alias("n"))
+                .select("b", (F.col("s").cast("double")
+                              / F.col("n").cast("double")).alias("mean_b")))
     ranked = (means.join(
         F.broadcast(means.select(F.col("b").alias("b2"),
                                  F.col("mean_b").alias("m2"))),
@@ -452,17 +448,16 @@ def psi_drift(orders: DataFrame) -> DataFrame:
     p = f"(CAST(n_ref + 1 AS DOUBLE) / (t_ref + {PSI_N_BUCKETS}))"
     q = f"(CAST(n_cur + 1 AS DOUBLE) / (t_cur + {PSI_N_BUCKETS}))"
     contrib = f"(({p} - {q}) * ln({p} / {q}))"
-    per = (cnt.crossJoin(F.broadcast(tot))
-           .select(F.col("bucket").cast("bigint").alias("bucket"),
-                   F.col("n_ref").cast("bigint").alias("n_ref"),
-                   F.col("n_cur").cast("bigint").alias("n_cur"),
-                   (F.round(F.expr(p), 6) + F.lit(0.0)).alias("p_ref"),
-                   (F.round(F.expr(q), 6) + F.lit(0.0)).alias("p_cur"),
-                   (F.round(F.expr(contrib), 6) + F.lit(0.0))
-                   .alias("contribution"),
-                   F.expr(f"CAST(round(({contrib}) * {PSI_SCALE}, 0) "
-                          f"AS BIGINT)").alias("c_mn"))
-           .localCheckpoint(eager=False))
+    per = cut(cnt.crossJoin(F.broadcast(tot))
+              .select(F.col("bucket").cast("bigint").alias("bucket"),
+                      F.col("n_ref").cast("bigint").alias("n_ref"),
+                      F.col("n_cur").cast("bigint").alias("n_cur"),
+                      (F.round(F.expr(p), 6) + F.lit(0.0)).alias("p_ref"),
+                      (F.round(F.expr(q), 6) + F.lit(0.0)).alias("p_cur"),
+                      (F.round(F.expr(contrib), 6) + F.lit(0.0))
+                      .alias("contribution"),
+                      F.expr(f"CAST(round(({contrib}) * {PSI_SCALE}, 0) "
+                             f"AS BIGINT)").alias("c_mn")))
     total = per.agg((F.sum("c_mn") / F.lit(float(PSI_SCALE)))
                     .alias("psi"))
     return (per.crossJoin(F.broadcast(total))
@@ -492,12 +487,11 @@ def eb_shrunk_rates(lineitem: DataFrame) -> DataFrame:
 
     Shape: one fact aggregate to |parts| rows; one 1-row moment
     frame; a broadcast join-back; a TakeOrdered cut."""
-    per = (lineitem.groupBy(F.col("l_partkey").alias("part"))
-           .agg(F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("l_returnflag") == "R", 1)
-                      .otherwise(0)).alias("x"))
-           .withColumn("rs", F.expr("(x * 1000000) DIV n"))
-           .localCheckpoint(eager=False))
+    per = cut(lineitem.groupBy(F.col("l_partkey").alias("part"))
+              .agg(F.count(F.lit(1)).alias("n"),
+                   F.sum(F.when(F.col("l_returnflag") == "R", 1)
+                         .otherwise(0)).alias("x"))
+              .withColumn("rs", F.expr("(x * 1000000) DIV n")))
     mom = per.agg(
         F.count(F.lit(1)).alias("k"),
         F.sum("rs").alias("s1"),
@@ -542,7 +536,7 @@ def emd_length_drift(docs: DataFrame) -> DataFrame:
     broadcast |sources|-row frame. Output is |sources| rows."""
     v = F.col("n_chars").alias("v")
     hist_p = docs.groupBy(v).agg(F.count(F.lit(1)).alias("cp"))
-    vals = hist_p.select("v").localCheckpoint(eager=False)
+    vals = cut(hist_p.select("v"))
     rhs_p = hist_p.select(F.col("v").alias("v2"), F.col("cp").alias("c2"))
     cum_p = (vals.join(F.broadcast(rhs_p), F.col("v2") <= F.col("v"))
              .groupBy("v").agg(F.sum("c2").alias("cump")))
@@ -600,16 +594,14 @@ def v_optimal_histogram(docs: DataFrame,
     length — independent of corpus size); the DP unrolls k−1 joins
     and the backtrack k deterministic 1-row TakeOrdereds. Output is
     k rows: (bin, lo, hi, n_docs, sse_q)."""
-    hist = (docs.groupBy(F.col("n_chars").alias("v"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .localCheckpoint(eager=False))
+    hist = cut(docs.groupBy(F.col("n_chars").alias("v"))
+               .agg(F.count(F.lit(1)).alias("c")))
     # dense 1..n value ranks WITHOUT a global window (repo rule):
     # i = triangular count over the bounded histogram frame
     lower = hist.select(F.col("v").alias("v2"))
-    idx = (hist.join(F.broadcast(lower), F.col("v2") <= F.col("v"))
-           .groupBy("v", "c")
-           .agg(F.count(F.lit(1)).cast("int").alias("i"))
-           .localCheckpoint(eager=True))
+    idx = cut(hist.join(F.broadcast(lower), F.col("v2") <= F.col("v"))
+              .groupBy("v", "c")
+              .agg(F.count(F.lit(1)).cast("int").alias("i")))
     d = "decimal(38,0)"
     rhs = idx.select(F.col("i").alias("j"), F.col("v").alias("vj"),
                      F.col("c").alias("cj"))
@@ -619,13 +611,12 @@ def v_optimal_histogram(docs: DataFrame,
     # cost O(n²) and interval sums are their exact decimal(38)
     # differences — integer sums of the same terms, so every m/sv/svv
     # (and hence the DP and the bins) is bit-identical
-    pre = (idx.select(F.col("i").alias("p"))
-           .join(F.broadcast(rhs), F.col("j") <= F.col("p"))
-           .groupBy("p")
-           .agg(F.sum("cj").alias("pc"),
-                F.sum(F.expr(f"CAST(cj AS {d}) * vj")).alias("psv"),
-                F.sum(F.expr(f"CAST(cj AS {d}) * vj * vj")).alias("psvv"))
-           .localCheckpoint(eager=True))
+    pre = cut(idx.select(F.col("i").alias("p"))
+              .join(F.broadcast(rhs), F.col("j") <= F.col("p"))
+              .groupBy("p")
+              .agg(F.sum("cj").alias("pc"),
+                   F.sum(F.expr(f"CAST(cj AS {d}) * vj")).alias("psv"),
+                   F.sum(F.expr(f"CAST(cj AS {d}) * vj * vj")).alias("psvv")))
     pb = pre.select(F.col("p").alias("b"), F.col("pc").alias("cb"),
                     F.col("psv").alias("svb"), F.col("psvv").alias("svvb"))
     pa = pre.select((F.col("p") + 1).cast("int").alias("a"),
@@ -633,32 +624,31 @@ def v_optimal_histogram(docs: DataFrame,
                     F.col("psv").alias("sva"), F.col("psvv").alias("svva"))
     zc = F.lit(0).cast("bigint")
     zd = F.lit(0).cast(d)
-    seg = (idx.select(F.col("i").alias("a"))
-           .join(F.broadcast(idx.select(F.col("i").alias("b"))),
-                 F.col("a") <= F.col("b"))
-           .join(F.broadcast(pb), "b")
-           .join(F.broadcast(pa), "a", "left")
-           .select("a", "b",
-                   (F.col("cb") - F.coalesce(F.col("ca"), zc)).alias("m"),
-                   (F.col("svb") - F.coalesce(F.col("sva"), zd))
-                   .cast(d).alias("sv"),
-                   (F.col("svvb") - F.coalesce(F.col("svva"), zd))
-                   .cast(d).alias("svv"))
-           .select("a", "b", "m",
-                   F.expr(f"CAST((svv * m - sv * sv) DIV m AS {d})")
-                   .alias("sse"))
-           .localCheckpoint(eager=True))
+    seg = cut(idx.select(F.col("i").alias("a"))
+              .join(F.broadcast(idx.select(F.col("i").alias("b"))),
+                    F.col("a") <= F.col("b"))
+              .join(F.broadcast(pb), "b")
+              .join(F.broadcast(pa), "a", "left")
+              .select("a", "b",
+                      (F.col("cb") - F.coalesce(F.col("ca"), zc)).alias("m"),
+                      (F.col("svb") - F.coalesce(F.col("sva"), zd))
+                      .cast(d).alias("sv"),
+                      (F.col("svvb") - F.coalesce(F.col("svva"), zd))
+                      .cast(d).alias("svv"))
+              .select("a", "b", "m",
+                      F.expr(f"CAST((svv * m - sv * sv) DIV m AS {d})")
+                      .alias("sse")))
     n_vals = idx.agg(F.max("i").alias("n")).collect()[0]["n"]
     # DP: dk[(b)] = min cost of covering 1..b with kk bins
     dk = seg.where(F.col("a") == 1).select("b", F.col("sse").alias("d"))
-    tables = {1: dk.localCheckpoint(eager=True)}
+    tables = {1: cut(dk)}
     for kk in range(2, k + 1):
         prev = tables[kk - 1].select(F.col("b").alias("j"),
                                      F.col("d").alias("dp"))
         dk = (seg.join(F.broadcast(prev), F.col("j") == F.col("a") - 1)
               .groupBy("b")
               .agg(F.min(F.col("dp") + F.col("sse")).alias("d")))
-        tables[kk] = dk.localCheckpoint(eager=True)
+        tables[kk] = cut(dk)
     # backtrack: walk right edge down, picking the smallest argmin j
     edges = []  # bin right-edge indexes, discovered right-to-left
     b_cur = n_vals
@@ -738,11 +728,10 @@ def hbos_outliers(orders: DataFrame) -> DataFrame:
     unpiv = orders.select(F.expr(
         f"stack({len(feats)}, {stack_args}) AS (feat, val)"))
     n = orders.agg(F.count(F.lit(1)).alias("n"))
-    hist = (unpiv.groupBy("feat", "val")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .crossJoin(F.broadcast(n))
-            .select("feat", "val", F.expr(hbos_cost_expr()).alias("mn"))
-            .localCheckpoint(eager=False))
+    hist = cut(unpiv.groupBy("feat", "val")
+               .agg(F.count(F.lit(1)).alias("c"))
+               .crossJoin(F.broadcast(n))
+               .select("feat", "val", F.expr(hbos_cost_expr()).alias("mn")))
     fact = orders.select(
         "o_orderkey",
         F.expr(feats["price_b"]).alias("v1"),
@@ -816,15 +805,14 @@ def cuped_adjusted_lift(events: DataFrame) -> DataFrame:
     bounds = events.agg(F.min(day).alias("dmin"), F.max(day).alias("dmax"))
     half = F.expr("date_add(dmin, CAST(datediff(dmax, dmin) DIV 2 "
                   "AS INT))")
-    per_user = (events.crossJoin(F.broadcast(bounds))
-                .select(F.col("user_id"), cents.alias("c"),
-                        (day <= half).cast("int").alias("is_pre"))
-                .groupBy("user_id")
-                .agg(F.sum(F.expr("c * is_pre")).cast("bigint")
-                     .alias("x"),
-                     F.sum(F.expr("c * (1 - is_pre)")).cast("bigint")
-                     .alias("y"))
-                .localCheckpoint(eager=False))
+    per_user = cut(events.crossJoin(F.broadcast(bounds))
+                   .select(F.col("user_id"), cents.alias("c"),
+                           (day <= half).cast("int").alias("is_pre"))
+                   .groupBy("user_id")
+                   .agg(F.sum(F.expr("c * is_pre")).cast("bigint")
+                        .alias("x"),
+                        F.sum(F.expr("c * (1 - is_pre)")).cast("bigint")
+                        .alias("y")))
     pooled = per_user.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -890,31 +878,29 @@ def stratified_treatment_effect(events: DataFrame) -> DataFrame:
     cell = (pu.groupBy("stratum", "arm")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
                  F.sum("y").cast("bigint").alias("sy")))
-    strata = (cell.groupBy("stratum")
-              .agg(F.sum(F.when(F.col("arm") == 0, F.col("n"))
-                         .otherwise(0)).cast("bigint").alias("n0"),
-                   F.sum(F.when(F.col("arm") == 0, F.col("sy"))
-                         .otherwise(0)).cast("bigint").alias("sy0"),
-                   F.sum(F.when(F.col("arm") == 1, F.col("n"))
-                         .otherwise(0)).cast("bigint").alias("n1"),
-                   F.sum(F.when(F.col("arm") == 1, F.col("sy"))
-                         .otherwise(0)).cast("bigint").alias("sy1"))
-              .where((F.col("n0") > 0) & (F.col("n1") > 0))
-              .localCheckpoint(eager=False))
+    strata = cut(cell.groupBy("stratum")
+                 .agg(F.sum(F.when(F.col("arm") == 0, F.col("n"))
+                            .otherwise(0)).cast("bigint").alias("n0"),
+                      F.sum(F.when(F.col("arm") == 0, F.col("sy"))
+                            .otherwise(0)).cast("bigint").alias("sy0"),
+                      F.sum(F.when(F.col("arm") == 1, F.col("n"))
+                            .otherwise(0)).cast("bigint").alias("n1"),
+                      F.sum(F.when(F.col("arm") == 1, F.col("sy"))
+                            .otherwise(0)).cast("bigint").alias("sy1"))
+                 .where((F.col("n0") > 0) & (F.col("n1") > 0)))
     total = strata.agg(F.sum(F.col("n0") + F.col("n1")).alias("nn"))
     diff = ("(CAST(sy1 AS DOUBLE) / n1 - CAST(sy0 AS DOUBLE) / n0)")
     contrib = (f"(CAST(n0 + n1 AS DOUBLE) / nn * {diff})")
-    per = (strata.crossJoin(F.broadcast(total))
-           .select("stratum", "n0", "n1",
-                   (F.round(F.expr("CAST(sy0 AS DOUBLE) / n0 / 100.0"),
-                            4) + F.lit(0.0)).alias("mean_y0"),
-                   (F.round(F.expr("CAST(sy1 AS DOUBLE) / n1 / 100.0"),
-                            4) + F.lit(0.0)).alias("mean_y1"),
-                   (F.round(F.expr(f"{diff} / 100.0"), 4) + F.lit(0.0))
-                   .alias("diff"),
-                   F.expr(f"CAST(round(({contrib}) * {ATE_SCALE}, 0) "
-                          f"AS BIGINT)").alias("c_mn"))
-           .localCheckpoint(eager=False))
+    per = cut(strata.crossJoin(F.broadcast(total))
+              .select("stratum", "n0", "n1",
+                      (F.round(F.expr("CAST(sy0 AS DOUBLE) / n0 / 100.0"),
+                               4) + F.lit(0.0)).alias("mean_y0"),
+                      (F.round(F.expr("CAST(sy1 AS DOUBLE) / n1 / 100.0"),
+                               4) + F.lit(0.0)).alias("mean_y1"),
+                      (F.round(F.expr(f"{diff} / 100.0"), 4) + F.lit(0.0))
+                      .alias("diff"),
+                      F.expr(f"CAST(round(({contrib}) * {ATE_SCALE}, 0) "
+                             f"AS BIGINT)").alias("c_mn")))
     ate = per.agg((F.sum("c_mn")
                    / F.lit(float(ATE_SCALE) * 100.0)).alias("a"))
     return (per.crossJoin(F.broadcast(ate))
@@ -950,9 +936,8 @@ def quantile_treatment_effect(events: DataFrame) -> DataFrame:
           .agg(F.sum(F.when(F.col("event_type") == "purchase", 1)
                      .otherwise(0)).alias("np"))
           .select((F.col("user_id") % 2).alias("arm"), "np"))
-    hist = (pu.groupBy("arm", "np")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .localCheckpoint(eager=False))
+    hist = cut(pu.groupBy("arm", "np")
+               .agg(F.count(F.lit(1)).alias("c")))
     rhs = hist.select(F.col("arm").alias("a2"),
                       F.col("np").alias("np2"), F.col("c").alias("c2"))
     cum = (hist.join(F.broadcast(rhs),
@@ -1012,11 +997,10 @@ def lorenz_curve_points(orders: DataFrame,
         "o_custkey")
     w = (W.partitionBy("nationkey")
          .orderBy(F.col("x").asc(), F.col("o_custkey").asc()))
-    ranked = (by_nation
-              .withColumn("i", F.row_number().over(w))
-              .withColumn("cum", F.sum("x").over(
-                  w.rowsBetween(W.unboundedPreceding, W.currentRow)))
-              .localCheckpoint(eager=False))
+    ranked = cut(by_nation
+                 .withColumn("i", F.row_number().over(w))
+                 .withColumn("cum", F.sum("x").over(
+                     w.rowsBetween(W.unboundedPreceding, W.currentRow))))
     per_nat = ranked.groupBy("nationkey").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").cast("bigint").alias("sx"))
@@ -1084,16 +1068,15 @@ def bh_fdr_return_rates(lineitem: DataFrame, orders: DataFrame,
     the customer dimension) collapses the corpus to 25 rows;
     everything after is bounded-frame arithmetic."""
     flag = (F.col("l_returnflag") == "R").cast("bigint")
-    nat = (lineitem.select("l_orderkey", flag.alias("r"))
-           .join(orders.select(F.col("o_orderkey").alias("l_orderkey"),
-                               "o_custkey"), "l_orderkey")
-           .join(F.broadcast(customer.select(
-               F.col("c_custkey").alias("o_custkey"),
-               F.col("c_nationkey").alias("nation"))), "o_custkey")
-           .groupBy("nation")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_h"),
-                F.sum("r").cast("bigint").alias("k_h"))
-           .localCheckpoint(eager=False))
+    nat = cut(lineitem.select("l_orderkey", flag.alias("r"))
+              .join(orders.select(F.col("o_orderkey").alias("l_orderkey"),
+                                  "o_custkey"), "l_orderkey")
+              .join(F.broadcast(customer.select(
+                  F.col("c_custkey").alias("o_custkey"),
+                  F.col("c_nationkey").alias("nation"))), "o_custkey")
+              .groupBy("nation")
+              .agg(F.count(F.lit(1)).cast("bigint").alias("n_h"),
+                   F.sum("r").cast("bigint").alias("k_h")))
     tot = nat.agg(F.sum("n_h").cast("bigint").alias("n_all"),
                   F.sum("k_h").cast("bigint").alias("k_all"),
                   F.count(F.lit(1)).cast("bigint").alias("m"))
@@ -1103,12 +1086,11 @@ def bh_fdr_return_rates(lineitem: DataFrame, orders: DataFrame,
          "        * (1.0 - CAST(k_all AS DOUBLE) / n_all) "
          "        * (1.0 / n_h + 1.0 / (n_all - n_h))))")
     p = normal_two_sided_p_expr(z)
-    base = (nat.crossJoin(F.broadcast(tot))
-            .select("nation", "n_h", "k_h", "m",
-                    (F.round(F.expr(z), 4) + F.lit(0.0)).alias("z"),
-                    F.expr(f"CAST(round({p} * {BH_P_SCALE}, 0) "
-                           "AS BIGINT)").alias("p_micro"))
-            .localCheckpoint(eager=False))
+    base = cut(nat.crossJoin(F.broadcast(tot))
+               .select("nation", "n_h", "k_h", "m",
+                       (F.round(F.expr(z), 4) + F.lit(0.0)).alias("z"),
+                       F.expr(f"CAST(round({p} * {BH_P_SCALE}, 0) "
+                              "AS BIGINT)").alias("p_micro")))
     rhs = base.select(F.col("p_micro").alias("p2"),
                       F.col("nation").alias("nat2"))
     ranked = (base.join(F.broadcast(rhs),
@@ -1348,10 +1330,9 @@ def jonckheere_terpstra(lineitem: DataFrame,
                          F.col("l_quantity").cast("bigint").alias("q"))
          .join(orders.select("o_orderkey", "o_orderpriority"),
                F.col("l_orderkey") == F.col("o_orderkey")))
-    cells = (j.groupBy(F.substring("o_orderpriority", 1, 1)
-                       .cast("int").alias("w"), "q")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-             .localCheckpoint(eager=False))
+    cells = cut(j.groupBy(F.substring("o_orderpriority", 1, 1)
+                          .cast("int").alias("w"), "q")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
     a = cells.select(F.col("w").alias("wi"), F.col("q").alias("qi"),
                      F.col("c").alias("ci"))
     b = cells.select(F.col("w").alias("wj"), F.col("q").alias("qj"),
@@ -1433,15 +1414,14 @@ def slope_reversal_audit(lineitem: DataFrame) -> DataFrame:
     x = F.col("l_quantity").cast("bigint")
     base = lineitem.select(F.col("l_returnflag").alias("grp"),
                            x.alias("x"), y.alias("y"))
-    g = (base.groupBy("grp")
-         .agg(F.count("*").cast("bigint").alias("n"),
-              F.sum(F.col("x").cast(d38)).alias("sx"),
-              F.sum(F.col("y").cast(d38)).alias("sy"),
-              F.sum(F.col("x").cast(d38) * F.col("y").cast(d38))
-              .alias("sxy"),
-              F.sum(F.col("x").cast(d38) * F.col("x").cast(d38))
-              .alias("sxx"))
-         .localCheckpoint(eager=False))
+    g = cut(base.groupBy("grp")
+            .agg(F.count("*").cast("bigint").alias("n"),
+                 F.sum(F.col("x").cast(d38)).alias("sx"),
+                 F.sum(F.col("y").cast(d38)).alias("sy"),
+                 F.sum(F.col("x").cast(d38) * F.col("y").cast(d38))
+                 .alias("sxy"),
+                 F.sum(F.col("x").cast(d38) * F.col("x").cast(d38))
+                 .alias("sxx")))
     pool = g.agg(F.sum("n").cast("bigint").alias("np"),
                  F.sum("sx").cast(d38).alias("sxp"),
                  F.sum("sy").cast(d38).alias("syp"),

@@ -8,21 +8,26 @@ on (vectorized Python boundary), sane shuffle partitioning, and a broadcast
 threshold that lets dimension tables (region/nation/supplier at any SF)
 broadcast instead of shuffling.
 
-Loop state is the one exception. An iterated MapReduce round (a graph
-relaxation, a label propagation) cuts its lineage with a localCheckpoint
-per round, and under AQE every such checkpoint executes an adaptive plan
-that runs each shuffle stage as its own job and drops the state's hash
-partitioning. `loop_session` returns a child session of the caller
-(`newSession()`: same SparkContext and cache, its own SQL conf) with AQE
-off and one shuffle width derived from the size of the loop's edge
-frame, the way AQE would coalesce it; `loop_checkpoint` checkpoints a
-frame there and hands it back to the caller. The state then stays
-hash-partitioned on its key, so each round shuffles only its messages.
+Lineage cuts are the one exception. The engine is a chain of MapReduce
+rounds, and the cut between two rounds is a localCheckpoint; `cut` is
+the only one. Under AQE every checkpoint executes an adaptive plan that
+runs each shuffle stage as its own job and drops the frame's hash
+partitioning. So `cut` runs the checkpoint in a child session of the
+caller (`newSession()`: same SparkContext and cache, its own SQL conf)
+with AQE off and one shuffle width derived from a size estimate, the
+way AQE would coalesce it (`loop_session`), and hands the frame back to
+the caller. A one-off cut sizes the width from its own frame; an
+iterated round (a graph relaxation, a label propagation) passes the
+session of its loop's edge frame, so its state stays hash-partitioned
+on its key at one width and each round shuffles only its messages. At
+the width's upper clamp the cut stays in the caller's session, on AQE.
 The caller's conf is never written. The fixed-round graph loops hold
 their state this way: `relax` and its callers, PageRank and
 personalized PageRank, `kcore_membership`, `label_propagation`, WL
 fingerprints, Luby MIS and Borůvka (`operators/graph.py`, edges from
-its `_loop_edges` except Borůvka's weighted frame).
+its `_loop_edges` except Borůvka's weighted frame). A direct
+`localCheckpoint` outside this module states on its line, or the line
+above, why it is not a `cut` (`# cut:` and a measured number).
 
 Python tasks (native MapReduce jobs, pandas/Arrow UDFs) run in workers
 forked from a daemon. On local masters `get_spark` makes that daemon
@@ -163,14 +168,18 @@ def loop_width(edges: DataFrame) -> int:
     within 4 % of the parent's wall time, and sssp_weighted keeps a
     15 % CPU cut (CHANGES.md)."""
     spark = edges.sparkSession
-    size = edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    cap = int(spark.conf.get(_WIDTH))
+    try:
+        size = edges._jdf.queryExecution().optimizedPlan().stats() \
+            .sizeInBytes()
+    except ValueError:  # over Python's 4300-digit int limit: past the cap
+        return cap
     to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils \
         .byteStringAsBytes
     advisory = to_bytes(
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
     min_partition = to_bytes(spark.conf.get(
         "spark.sql.adaptive.coalescePartitions.minPartitionSize"))
-    cap = int(spark.conf.get(_WIDTH))
     low = min(spark.sparkContext.defaultParallelism, -(-size // min_partition))
     return min(max(-(-size // advisory), low, 1), cap)
 
@@ -233,22 +242,49 @@ def loop_session(edges: DataFrame) -> SparkSession:
     return children[width][1]
 
 
-def loop_checkpoint(df: DataFrame, loop: SparkSession,
-                    eager: bool = False) -> DataFrame:
-    """`df.localCheckpoint(eager)` planned and run in `loop` (see
-    `loop_session`), handed back as a frame of `df`'s own session.
+def cut(df: DataFrame, loop: SparkSession | None = None) -> DataFrame:
+    """The engine's lineage cut: a lazy `df.localCheckpoint()` planned
+    and run in `loop`, handed back as a frame of `df`'s own session.
 
-    The frame's analyzed plan is rebuilt in `loop`, checkpointed there
-    through PySpark's own `localCheckpoint` (so tools that wrap it see
-    every round), and the checkpointed plan, an RDD scan that keeps the
-    physical partitioning, is rebuilt in the caller."""
+    `loop` defaults to `loop_session(df)`: below the upper clamp of
+    `loop_width` the cut runs in the AQE-off child at the width of
+    `df`'s own size estimate, at the clamp in the caller's session. A
+    loop passes the session of its edge frame, so every round of one
+    loop runs at one width. The frame's analyzed plan is rebuilt in
+    `loop`, checkpointed there through PySpark's own `localCheckpoint`
+    (so tools that wrap it see every cut), and the checkpointed plan,
+    an RDD scan that keeps the physical partitioning, is rebuilt in
+    the caller.
+
+    The rule: every cut in the engine goes through here. A site that
+    calls `localCheckpoint` itself states why on its line or the line
+    above (`# cut:` and the measured number); `tests/test_cut_rule.py`
+    holds the engine to that.
+
+    Why lazy: the cut fires no job of its own. In the child the frame's
+    shuffle stages run inside the first job that reads it; at the clamp
+    AQE still runs them at the cut, one job per stage, as before.
+
+    Negative results measured on a 4-core host (events.py and stats.py,
+    47 queries, sf0.01 job counts and warm sf0.1 timings), kept so they
+    are not retried:
+      * deleting the one-off cuts instead of routing them here raised
+        builder+exec jobs 483 → 504 and JVM CPU by 6 %; `logrank_test`
+        went 1.46 → 1.88 s, since its per-user durations are read by
+        several aggregates;
+      * an eager cut in the loop session cut jobs 483 → 453 but cost
+        7 % more wall time in the same window: the eager count is a
+        job of its own, and the frame's consumers wait for it.
+    """
     caller = df.sparkSession
+    if loop is None:
+        loop = loop_session(df)
     if loop is caller:
-        return df.localCheckpoint(eager)
+        return df.localCheckpoint(False)
     rows = df._sc._jvm.org.apache.spark.sql.classic.Dataset.ofRows
     frame = type(df)
     ck = frame(rows(loop._jsparkSession, df._jdf.logicalPlan()),
-               loop).localCheckpoint(eager)
+               loop).localCheckpoint(False)
     return frame(rows(caller._jsparkSession, ck._jdf.logicalPlan()), caller)
 
 

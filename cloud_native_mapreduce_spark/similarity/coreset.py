@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cloud_native_mapreduce_spark.session import cut
+
 #: Picks made by k_center_select.
 K_CENTER_K = 5
 #: Scaled self-similarity of a unit vector on the 1e-4 grid.
@@ -45,29 +47,25 @@ def k_center_select(embeddings: DataFrame,
         "vec_id",
         F.expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
                " * 10000) AS BIGINT))").alias("q"))
-    seed = (q.orderBy("vec_id").limit(1)
-            .localCheckpoint(eager=True))
-    state = (q.crossJoin(F.broadcast(seed.select(F.col("q").alias("cq"))))
-             .select("vec_id", "q",
-                     (F.lit(DOT_SCALE) - F.expr(_DOT)).alias("dmin"))
-             .localCheckpoint(eager=True))
+    seed = cut(q.orderBy("vec_id").limit(1))
+    state = cut(q.crossJoin(F.broadcast(seed.select(F.col("q").alias("cq"))))
+                .select("vec_id", "q",
+                        (F.lit(DOT_SCALE) - F.expr(_DOT)).alias("dmin")))
     out = seed.select(F.lit(1).cast("bigint").alias("pick_rank"),
                       "vec_id",
                       F.lit(DOT_SCALE).cast("bigint").alias("separation"))
     for r in range(2, k + 1):
-        pick = (state.orderBy(F.col("dmin").desc(), "vec_id").limit(1)
-                .localCheckpoint(eager=True))
+        pick = cut(state.orderBy(F.col("dmin").desc(), "vec_id").limit(1))
         out = out.unionByName(
             pick.select(F.lit(r).cast("bigint").alias("pick_rank"),
                         "vec_id",
                         F.col("dmin").cast("bigint").alias("separation")))
-        state = (state.crossJoin(F.broadcast(
+        state = cut(state.crossJoin(F.broadcast(
             pick.select(F.col("q").alias("cq"))))
             .select("vec_id", "q",
                     F.least(F.col("dmin"),
                             F.lit(DOT_SCALE) - F.expr(_DOT))
-                    .alias("dmin"))
-            .localCheckpoint(eager=True))
+                    .alias("dmin")))
     radius = state.agg(F.max("dmin").cast("bigint")
                        .alias("coverage_radius"))
     return out.crossJoin(F.broadcast(radius))

@@ -50,6 +50,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cloud_native_mapreduce_spark.session import cut
+
 #: Quantization grid: 1e-4 steps — float32×1e4 is exact in double, and
 #: unit-norm 64-dim dots stay far inside int64.
 Q_SCALE = 10_000
@@ -157,10 +159,9 @@ def knn_graph(emb: DataFrame, dim: int = 64, k: int = GRAPH_K,
     # embeddings parquet is one row group, so the n_tables × n_planes
     # sign projections otherwise compute on ONE core (round-15;
     # profiled 1.2 + 0.8 + 0.7 s single-task stages at sf0.1)
-    q = (fan_out(emb.select(
+    q = cut(fan_out(emb.select(
         F.col("vec_id"), quantized(F.col("embedding")).alias("q")),
-        "vec_id")
-        .localCheckpoint(eager=False))
+        "vec_id"))
     with_buckets = q.select(
         "vec_id", "q",
         *[_bucket("q", t, dim, n_planes).alias(f"b{t}")
@@ -216,12 +217,11 @@ def ann_graph_search(emb: DataFrame, query_vec_id: int = 0,
         F.col("vec_id"), quantized(F.col("embedding")).alias("q"))
     qvec = (q.where(F.col("vec_id") == query_vec_id)
             .select(F.col("q").alias("qq")))
-    scored_all = (q.where(F.col("vec_id") != query_vec_id)
-                  .crossJoin(F.broadcast(qvec))
-                  .select("vec_id",
-                          _int_dot(F.col("q"), F.col("qq"))
-                          .alias("dot_q"))
-                  .localCheckpoint(eager=False))
+    scored_all = cut(q.where(F.col("vec_id") != query_vec_id)
+                     .crossJoin(F.broadcast(qvec))
+                     .select("vec_id",
+                             _int_dot(F.col("q"), F.col("qq"))
+                             .alias("dot_q")))
     entry = (graph.where(F.col("src") != query_vec_id)
              .select(F.col("src").alias("vec_id")).distinct()
              .orderBy("vec_id").limit(n_entries))
@@ -236,10 +236,9 @@ def ann_graph_search(emb: DataFrame, query_vec_id: int = 0,
                 .where(F.col("vec_id") != query_vec_id)
                 .distinct()
                 .join(scored_all, "vec_id"))
-        beam_df = (cand.orderBy(F.col("dot_q").desc(),
-                                F.col("vec_id").asc())
-                   .limit(beam)
-                   .localCheckpoint(eager=False))
+        beam_df = cut(cand.orderBy(F.col("dot_q").desc(),
+                                   F.col("vec_id").asc())
+                      .limit(beam))
     return (beam_df.orderBy(F.col("dot_q").desc(), F.col("vec_id").asc())
             .limit(k)
             .select("vec_id", "dot_q",

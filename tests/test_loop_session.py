@@ -1,6 +1,7 @@
-"""The loop session (`session.loop_session`): width rule, child reuse,
-checkpoint hand-back, and the promise that the caller's conf is only
-read. Also the host-sized driver heap default."""
+"""The loop session (`session.loop_session`) and the lineage cut
+(`session.cut`): width rule, child reuse, where a cut runs, checkpoint
+hand-back, and the promise that the caller's conf is only read. Also
+the host-sized driver heap default."""
 
 from __future__ import annotations
 
@@ -107,21 +108,77 @@ def test_child_is_replaced_when_the_caller_conf_changes(rule_spark):
         spark.conf.set(key, old)
 
 
-def test_loop_checkpoint_hands_back_a_partitioned_frame(rule_spark,
-                                                        monkeypatch):
+def test_cut_hands_back_a_partitioned_frame(rule_spark, monkeypatch):
     spark = rule_spark
     _cores(monkeypatch, 2)  # W=2: one partition would read SinglePartition
     loop = S.loop_session(spark.range(2 * _PER_MIB))
     assert loop.conf.get("spark.sql.shuffle.partitions") == "2"
     df = spark.range(50).selectExpr("id % 7 AS v", "id AS x") \
         .groupBy("v").sum("x")
-    ck = S.loop_checkpoint(df, loop, eager=True)
+    ck = S.cut(df, loop)
     assert ck.sparkSession is spark
     assert sorted(ck.collect()) == sorted(df.collect())
     plan = ck._jdf.queryExecution().executedPlan()
     assert "Scan ExistingRDD" in plan.toString(), plan.toString()
     assert plan.outputPartitioning().toString() \
         .startswith("hashpartitioning(v#"), plan.outputPartitioning()
+
+
+def test_an_estimate_past_the_int_limit_is_at_the_clamp(rule_spark):
+    """A size estimate with more digits than Python converts to an int
+    (4300) is past every width: the rule returns its upper clamp."""
+    spark = rule_spark
+    df = spark.range(10**18).toDF("c")
+    for i in range(8):  # each self cross join squares the estimate
+        df = df.crossJoin(df.toDF(*[f"{c}{i}" for c in df.columns]))
+    assert S.loop_width(df) == int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _cut_sessions(spark, monkeypatch):
+    """Record the session of every frame `localCheckpoint` runs on."""
+    seen = []
+    frame = type(spark.range(1))  # the concrete class, not the API base
+    real = frame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        seen.append(self.sparkSession)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", recording)
+    return seen
+
+
+def test_cut_of_a_small_frame_runs_in_the_width_child(rule_spark,
+                                                      monkeypatch):
+    spark = rule_spark
+    seen = _cut_sessions(spark, monkeypatch)
+    df = spark.range(40).selectExpr("id % 3 AS k").groupBy("k").count()
+    ck = S.cut(df)
+    child = S.loop_session(df)
+    assert seen == [child] and child is not spark
+    assert child.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert child.conf.get("spark.sql.shuffle.partitions") == "1"
+    assert ck.sparkSession is spark
+    assert sorted(ck.collect()) == sorted(df.collect())
+
+
+def test_cut_at_the_clamp_runs_in_the_caller_session(rule_spark,
+                                                     monkeypatch):
+    spark = rule_spark
+    seen = _cut_sessions(spark, monkeypatch)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")  # the upper clamp: every frame is at it
+    try:
+        df = spark.range(40).selectExpr("id % 3 AS k").groupBy("k").count()
+        ck = S.cut(df)
+        assert S.loop_session(df) is spark
+        assert sorted(ck.collect()) == sorted(df.collect())
+    finally:
+        spark.conf.set(key, old)
+    assert seen == [spark]
+    assert ck.sparkSession is spark
 
 
 @pytest.mark.parametrize("name", [

@@ -59,6 +59,7 @@ def grid_for(n: int) -> int:
 
 def run_once(spark, n: int) -> float:
     g = grid_for(n)
+    # cut: eager, so the input is built before the timer starts
     df = synthetic_customers(spark, n, g).localCheckpoint(eager=True)
     t0 = time.time()
     (dbscan_grid(df, grid=g)

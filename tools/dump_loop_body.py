@@ -1,7 +1,7 @@
 """Dump the loop-BODY plans and the final formatted plan of queries.
 
-The per-round localCheckpoint turns every round's frame into a
-`Scan ExistingRDD` stub in the final explain, so pinned-width / SHJ /
+Every lineage cut (`session.cut`, a localCheckpoint) turns the frame
+of a round into a `Scan ExistingRDD` stub in the final explain, so pinned-width / SHJ /
 layout claims about loop internals are not plan-verifiable from the
 final plan alone. This tool writes both: every checkpointed frame's
 plan, then the query's final `explain("formatted")`.
@@ -14,8 +14,9 @@ from the real operator code, with no reconstruction. The real
 checkpoint then proceeds unchanged, so eager loops and convergence
 probes behave normally. Each frame's header names the session it is
 checkpointed in: its AQE flag and its shuffle width W, which tells a
-loop-session checkpoint (`session.loop_checkpoint`: AQE off, the
-loop's W) from one in the query's own session.
+cut in a width child (`session.cut` below the clamp: AQE off, the
+loop's or the frame's W) from one in the query's own session (a cut
+at the clamp, or a direct call).
 
 Usage: python tools/dump_loop_body.py <tag> <suffix> <query> [query ...]
 Writes plans/<tag>/<query>_loop_body_<suffix>.txt: the tree sections of
