@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cloud_native_mapreduce_spark.session import cut
+from cloud_native_mapreduce_spark.session import cut, loop_session
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
@@ -107,15 +107,17 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     #   STREAM, not cache, lost big — dbscan_grid 7.9 → 15.6 s,
     #   hub_removal 13.7 → 16.8, golden_record 5.0 → 8.7 (cache
     #   pressure + per-round re-optimization of the uncut lineage).
-    # A checkpoint without a layout is the measured optimum; as a lazy
-    # `cut` it fires no job of its own.
-    sym = cut(sym)
+    # A checkpoint without a layout was the measured optimum then (an
+    # eager checkpoint under AQE). Every cut of the loop now runs in the
+    # loop session of `sym`, at one width: lazy, no job of its own.
+    loop = loop_session(sym)
+    sym = cut(sym, loop)
 
     # Propagate over NON-SINGLETON nodes only — in a near-dup corpus most
     # docs touch no edge; they keep comp=own id and never enter the loop.
     connected = sym.select(F.col("src").alias("node")).distinct()
     labels = connected.select("node", F.col("node").cast("long").alias("comp"))
-    labels = cut(labels)
+    labels = cut(labels, loop)
     prev_sum = labels.agg(F.sum("comp")).collect()[0][0]
 
     def one_round(labels: DataFrame) -> DataFrame:
@@ -150,7 +152,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     # pointer_jumping is the intended tool anyway.
     for _ in range(max_iter):
         labels = one_round(labels)
-        labels = cut(labels)
+        labels = cut(labels, loop)
         cur_sum = labels.agg(F.sum("comp")).collect()[0][0]
         if cur_sum == prev_sum:  # labels only decrease ⇒ equal sum = fixed point
             break

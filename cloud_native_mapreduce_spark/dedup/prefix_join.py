@@ -91,7 +91,7 @@ def jaccard_prefix_join(docs: DataFrame, text_col: str = "text",
                             F.explode(tokens(F.col(text_col)))
                             .alias("tok"))
             .distinct()
-            # cut: `cut` raises jaccard_prefix_join 19 → 28 jobs (sf0.01)
+            # cut: `cut` raises jaccard_prefix_join 19/19 → 28/28 jobs
             .localCheckpoint(eager=False))
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))

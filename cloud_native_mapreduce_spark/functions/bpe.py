@@ -54,7 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import cut
+from ..session import cut, loop_session
 from .text import tokens
 
 
@@ -128,9 +128,10 @@ def bpe_train_merges(docs: DataFrame, n_merges: int = 6,
     merged, pair_count) — e.g. (1, 'e r', 'er', 4568).
     """
     seqs = word_seqs(docs, text_col)
+    loop = loop_session(seqs)
     merges: list[DataFrame] = []
     for rank in range(1, n_merges + 1):
-        best = cut(best_pair(pair_counts(seqs), rank))
+        best = cut(best_pair(pair_counts(seqs), rank), loop)
         merges.append(best)
         pair_arr = F.split(F.col("pair"), " ")
         seqs = cut(seqs.crossJoin(F.broadcast(best.select("pair")))
@@ -139,7 +140,7 @@ def bpe_train_merges(docs: DataFrame, n_merges: int = 6,
                        greedy_fuse(F.col("seq"),
                                    F.element_at(pair_arr, 1),
                                    F.element_at(pair_arr, 2))
-                       .alias("seq")))
+                       .alias("seq")), loop)
     out = merges[0]
     for m in merges[1:]:
         out = out.unionAll(m)

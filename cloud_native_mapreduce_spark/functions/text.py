@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cloud_native_mapreduce_spark.session import cut
+from cloud_native_mapreduce_spark.session import cut, loop_session
 
 #: Byte-identical to client/scripts/mapper.py:13 in the reference.
 WORD_RE = "[a-z](?:[a-z'‘’]*[a-z])?"
@@ -633,9 +633,10 @@ def textrank_keywords(docs: DataFrame, text_col: str = "text",
     edges = (adj.select(F.least("w", "prev").alias("a"),
                         F.greatest("w", "prev").alias("b"))
              .distinct())
+    loop = loop_session(edges)
     bi = cut(edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
              .unionByName(edges.select(F.col("b").alias("src"),
-                                       F.col("a").alias("dst"))))
+                                       F.col("a").alias("dst"))), loop)
     outd = bi.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     rank = outd.select(F.col("src").alias("v"),
                        F.lit(TEXTRANK_SCALE).cast("bigint")
@@ -650,7 +651,7 @@ def textrank_keywords(docs: DataFrame, text_col: str = "text",
         rank = cut(inflow.select(
             "v", (F.lit(150_000)
                   + F.expr("(85 * inflow) DIV 100")).cast("bigint")
-            .alias("rank")))
+            .alias("rank")), loop)
     return (rank.select(F.col("v").alias("word"), "rank")
             .orderBy(F.col("rank").desc(), F.col("word").asc())
             .limit(top_k))

@@ -31,7 +31,7 @@ from pyspark.sql.window import Window
 
 from cloud_native_mapreduce_spark.functions.text import WORD_RE as T_WORD_RE
 from cloud_native_mapreduce_spark.functions.text import tokens
-from cloud_native_mapreduce_spark.session import cut
+from cloud_native_mapreduce_spark.session import cut, loop_session
 
 #: Whitespace-run token pattern with an EXPLICIT class, not \S: Java's
 #: \s includes U+000B (vertical tab) while RE2's (DuckDB oracle)
@@ -896,9 +896,10 @@ def greedy_coverage_select(docs: DataFrame,
     grows monotonically), one count aggregate, and a deterministic
     1-row TakeOrdered — NO driver-side collect anywhere; round
     frames are localCheckpointed so lineage stays flat."""
-    pt = cut(docs.select("doc_id",
-                         F.explode(tokens(F.col("text"))).alias("tok"))
-             .distinct())
+    pt = (docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
+          .distinct())
+    loop = loop_session(pt)
+    pt = cut(pt, loop)
     spark = docs.sparkSession
     cov = spark.createDataFrame([], "tok string")
     out = None
@@ -912,15 +913,15 @@ def greedy_coverage_select(docs: DataFrame,
         pick = cut(gains.orderBy(F.col("gain").desc(), "doc_id").limit(1)
                    .select(F.lit(r).cast("bigint").alias("pick_rank"),
                            "doc_id", F.col("gain").cast("bigint")
-                           .alias("gain")))
+                           .alias("gain")), loop)
         cov = cut(cov.unionByName(
             pt.join(pick.select("doc_id"), "doc_id").select("tok"))
-            .distinct())
+            .distinct(), loop)
         n_cov = cov.agg(F.count(F.lit(1)).cast("bigint")
                         .alias("covered_total"))
         row = pick.crossJoin(F.broadcast(n_cov))
         out = row if out is None else out.unionByName(row)
-        out = cut(out)
+        out = cut(out, loop)
     return out
 
 
@@ -1176,7 +1177,7 @@ def cross_source_contamination(docs: DataFrame,
             f"i -> array_join(slice(toks, i + 1, {n}), ' ')) END"
         )).alias("gram"))
         .distinct()
-        # cut: `cut` raises cross_source_contamination 7 → 8 jobs (sf0.01)
+        # cut: `cut` raises cross_source_contamination 7/7 → 8/8 jobs
         .localCheckpoint(eager=False))
     per = sg.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_grams"))

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cloud_native_mapreduce_spark.session import cut
+from cloud_native_mapreduce_spark.session import cut, loop_session
 
 
 def tumbling_counts(events: DataFrame) -> DataFrame:
@@ -1861,7 +1861,7 @@ def dtw_daily_pairs(events: DataFrame) -> DataFrame:
     daily = (events
              .groupBy("event_type", F.to_date("ts").alias("day"))
              .agg(F.sum(cents).cast("bigint").alias("v"))
-             # cut: `cut` raises dtw_daily_pairs 6 → 10 jobs (sf0.01)
+             # cut: `cut` raises dtw_daily_pairs 6/6 → 10/10 jobs (sf0.01)
              .localCheckpoint(eager=False))
     types = daily.select("event_type").distinct()
     pairs = (types.select(F.col("event_type").alias("t1"))
@@ -2059,7 +2059,7 @@ def robust_anomaly_days(events: DataFrame,
     daily = (events
              .groupBy("event_type", F.to_date("ts").alias("day"))
              .agg(F.sum(cents).cast("bigint").alias("v"))
-             # cut: `cut` raises robust_anomaly_days 7 → 8 jobs (sf0.01)
+             # cut: `cut` raises robust_anomaly_days 7/7 → 8/8 jobs (sf0.01)
              .localCheckpoint(eager=False))
     w1 = Window.partitionBy("event_type").orderBy("v", "day")
     n = F.count(F.lit(1)).over(Window.partitionBy("event_type"))
@@ -3625,7 +3625,7 @@ def event_type_mi(events: DataFrame) -> DataFrame:
     mi_nats)."""
     pres = (events.select("user_id", F.col("event_type").alias("t"))
             .distinct()
-            # cut: `cut` raises event_type_mi 10 → 11 jobs (sf0.01)
+            # cut: `cut` raises event_type_mi 10/10 → 11/11 jobs (sf0.01)
             .localCheckpoint(eager=False))
     n_users = events.select("user_id").distinct().agg(
         F.count(F.lit(1)).cast("bigint").alias("nn"))
@@ -3778,6 +3778,7 @@ def scc_event_graph(events: DataFrame) -> DataFrame:
                         F.lead("event_type").over(w).alias("dst"))
                 .where(F.col("dst").isNotNull())
                 .distinct())
+    loop = loop_session(edges)
     verts = (edges.select(F.col("src").alias("v"))
              .unionAll(edges.select(F.col("dst").alias("v")))
              .distinct())
@@ -3792,7 +3793,7 @@ def scc_event_graph(events: DataFrame) -> DataFrame:
                                        F.col("dst").alias("dst2")),
                           "dst")
                .select("src", F.col("dst2").alias("dst")))
-        reach = cut(reach.unionAll(hop).distinct())
+        reach = cut(reach.unionAll(hop).distinct(), loop)
     back = reach.select(F.col("dst").alias("src"),
                         F.col("src").alias("dst"))
     mutual = reach.join(back, ["src", "dst"], "left_semi")
@@ -4410,7 +4411,7 @@ def hurst_rs(events: DataFrame) -> DataFrame:
     daily = (events
              .groupBy(F.to_date("ts").alias("day"))
              .agg(F.sum(cents).cast("bigint").alias("v"))
-             # cut: `cut` raises hurst_rs 12 → 17 jobs (sf0.01)
+             # cut: `cut` raises hurst_rs 12/12 → 17/17 jobs (sf0.01)
              .localCheckpoint(eager=False))
     day0 = daily.agg(F.min("day").alias("day0"))
     sizes = events.sparkSession.createDataFrame(

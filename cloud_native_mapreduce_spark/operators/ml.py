@@ -55,7 +55,7 @@ def nb_scored(train: DataFrame, test: DataFrame) -> DataFrame:
                        .alias("tok"))
           .groupBy("lang", "tok")
           .agg(F.count(F.lit(1)).alias("c"))
-          # cut: `cut` raises naive_bayes_lang 23 → 25 jobs (sf0.01)
+          # cut: `cut` raises naive_bayes_lang 23/24 → 25/25 jobs (sf0.01)
           .localCheckpoint(eager=False))
     vocab = tl.select("tok").distinct().agg(F.count(F.lit(1)).alias("v"))
     totals = tl.groupBy("lang").agg(F.sum("c").alias("ctot"))

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cloud_native_mapreduce_spark.functions.text import tokens
-from cloud_native_mapreduce_spark.session import cut
+from cloud_native_mapreduce_spark.session import cut, loop_session
 
 #: DSIR feature-hash width in md5 hex chars: 3 → 16^3 = 4096 buckets.
 #: md5 is the cross-engine hash (Spark and DuckDB agree byte-for-byte),
@@ -322,6 +322,7 @@ def mmr_rerank(emb: DataFrame, query_vec_id: int = 0, k: int = 10,
               .select("a", "b", _int_dot(F.col("qa"), F.col("qb"))
                       .alias("sim_q")))
     pool = cand.select("vec_id", "rel_q")
+    loop = loop_session(sim)
     # round 1: pure relevance argmax
     selected = (pool.orderBy(F.col("rel_q").desc(),
                              F.col("vec_id").asc()).limit(1)
@@ -344,7 +345,7 @@ def mmr_rerank(emb: DataFrame, query_vec_id: int = 0, k: int = 10,
                 .limit(1)
                 .select("vec_id", "rel_q", "mmr_x10",
                         F.lit(r).cast("bigint").alias("rank")))
-        selected = cut(selected.unionByName(pick))
+        selected = cut(selected.unionByName(pick), loop)
     return selected.select("rank", "vec_id", "rel_q", "mmr_x10")
 
 

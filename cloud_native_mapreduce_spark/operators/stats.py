@@ -34,7 +34,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from cloud_native_mapreduce_spark.session import cut
+from cloud_native_mapreduce_spark.session import cut, loop_session
 
 
 # ---------------------------------------------------------------------------
@@ -641,14 +641,15 @@ def v_optimal_histogram(docs: DataFrame,
     n_vals = idx.agg(F.max("i").alias("n")).collect()[0]["n"]
     # DP: dk[(b)] = min cost of covering 1..b with kk bins
     dk = seg.where(F.col("a") == 1).select("b", F.col("sse").alias("d"))
-    tables = {1: cut(dk)}
+    loop = loop_session(seg)
+    tables = {1: cut(dk, loop)}
     for kk in range(2, k + 1):
         prev = tables[kk - 1].select(F.col("b").alias("j"),
                                      F.col("d").alias("dp"))
         dk = (seg.join(F.broadcast(prev), F.col("j") == F.col("a") - 1)
               .groupBy("b")
               .agg(F.min(F.col("dp") + F.col("sse")).alias("d")))
-        tables[kk] = cut(dk)
+        tables[kk] = cut(dk, loop)
     # backtrack: walk right edge down, picking the smallest argmin j
     edges = []  # bin right-edge indexes, discovered right-to-left
     b_cur = n_vals

@@ -16,18 +16,23 @@ partitioning. So `cut` runs the checkpoint in a child session of the
 caller (`newSession()`: same SparkContext and cache, its own SQL conf)
 with AQE off and one shuffle width derived from a size estimate, the
 way AQE would coalesce it (`loop_session`), and hands the frame back to
-the caller. A one-off cut sizes the width from its own frame; an
-iterated round (a graph relaxation, a label propagation) passes the
-session of its loop's edge frame, so its state stays hash-partitioned
-on its key at one width and each round shuffles only its messages. At
-the width's upper clamp the cut stays in the caller's session, on AQE.
-The caller's conf is never written. The fixed-round graph loops hold
-their state this way: `relax` and its callers, PageRank and
-personalized PageRank, `kcore_membership`, `label_propagation`, WL
-fingerprints, Luby MIS and Borůvka (`operators/graph.py`, edges from
-its `_loop_edges` except Borůvka's weighted frame). A direct
-`localCheckpoint` outside this module states on its line, or the line
-above, why it is not a `cut` (`# cut:` and a measured number).
+the caller. A one-off cut sizes the width from its frame's estimate
+and its largest input (`cut_width`); an iterated round (a
+graph relaxation, a label propagation) passes the session of its
+loop's edge frame, computed once before the loop, so its state stays
+hash-partitioned on its key at one width and each round shuffles only
+its messages. At the width's upper clamp the cut stays in the caller's
+session, on AQE. The caller's conf is never written. The fixed-round
+graph loops hold their state this way: `relax` and its callers,
+PageRank and personalized PageRank, `kcore_membership`,
+`label_propagation`, WL fingerprints, Luby MIS and Borůvka
+(`operators/graph.py`, edges from its `_loop_edges` except Borůvka's
+weighted frame); so do the converging loops, `connected_components`,
+`ktruss_edges`, `scc_event_graph`, `k_center_select`,
+`greedy_coverage_select`, `textrank_keywords` and `bpe_train_merges`.
+A direct `localCheckpoint` outside this module states on its line, or
+the line above, why it is not a `cut` (`# cut:` and a measured
+number).
 
 Python tasks (native MapReduce jobs, pandas/Arrow UDFs) run in workers
 forked from a daemon. On local masters `get_spark` makes that daemon
@@ -167,12 +172,25 @@ def loop_width(edges: DataFrame) -> int:
     32 % and 43 % slower in wall time. With this lower clamp both are
     within 4 % of the parent's wall time, and sssp_weighted keeps a
     15 % CPU cut (CHANGES.md)."""
-    spark = edges.sparkSession
-    cap = int(spark.conf.get(_WIDTH))
+    return _width(edges.sparkSession, _bytes(
+        edges._jdf.queryExecution().optimizedPlan()))
+
+
+def _bytes(plan) -> int | None:
+    """Catalyst's size estimate of a logical plan node (reading it plans
+    but fires no job); None past Python's 4300-digit int limit."""
     try:
-        size = edges._jdf.queryExecution().optimizedPlan().stats() \
-            .sizeInBytes()
-    except ValueError:  # over Python's 4300-digit int limit: past the cap
+        return plan.stats().sizeInBytes()
+    except ValueError:
+        return None
+
+
+def _width(spark: SparkSession, size: int | None, reads: int = 0) -> int:
+    """`loop_width`'s rule for an estimate of `size` bytes (None: past
+    every width, so the upper clamp), with at least one partition per
+    advisory size of `reads` bytes of input (`cut_width`)."""
+    cap = int(spark.conf.get(_WIDTH))
+    if size is None:
         return cap
     to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils \
         .byteStringAsBytes
@@ -181,7 +199,30 @@ def loop_width(edges: DataFrame) -> int:
     min_partition = to_bytes(spark.conf.get(
         "spark.sql.adaptive.coalescePartitions.minPartitionSize"))
     low = min(spark.sparkContext.defaultParallelism, -(-size // min_partition))
-    return min(max(-(-size // advisory), low, 1), cap)
+    return min(max(-(-max(size, reads) // advisory), low, 1), cap)
+
+
+def cut_width(df: DataFrame) -> int:
+    """The width of a one-off cut of `df`: the `loop_width` rule over
+    `df`'s own size estimate, and at least one partition per advisory
+    size of its largest input (a leaf of its plan: a table, a range or
+    an earlier cut).
+
+    The frame's own estimate alone is no input: a frame that ends in a
+    `limit(k)` or a global aggregate reads a few bytes, so W=1, while
+    every shuffle under it (a per-document aggregate, a beam join) runs
+    at that width with AQE off, corpus-sized work in one task. The
+    input term gives such a shuffle the reducers AQE would coalesce its
+    input to. It leaves out the lower clamp's cores term, so inputs of
+    a few MiB keep W=1: with that term as well (W=4 on 4 cores) the
+    events and ml families lost every pair on JVM CPU at sf0.1 (+15 %,
+    +23 %, 3 alternating pairs, CHANGES.md)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    reads = [_bytes(leaves.apply(i)) for i in range(leaves.size())]
+    return _width(df.sparkSession,
+                  None if None in reads else _bytes(plan),
+                  max(reads, default=0))
 
 
 def loop_session(edges: DataFrame) -> SparkSession:
@@ -225,8 +266,12 @@ def loop_session(edges: DataFrame) -> SparkSession:
       * a round plan's size estimate is no input for the width rule
         (see `loop_width`).
     """
-    spark = edges.sparkSession
-    width = loop_width(edges)
+    return _session(edges.sparkSession, loop_width(edges))
+
+
+def _session(spark: SparkSession, width: int) -> SparkSession:
+    """`loop_session`'s session at `width`: the caller at its upper
+    clamp, else the caller's AQE-off child of that width."""
     if width >= int(spark.conf.get(_WIDTH)):
         return spark
     conf = spark.conf.getAll
@@ -246,15 +291,17 @@ def cut(df: DataFrame, loop: SparkSession | None = None) -> DataFrame:
     """The engine's lineage cut: a lazy `df.localCheckpoint()` planned
     and run in `loop`, handed back as a frame of `df`'s own session.
 
-    `loop` defaults to `loop_session(df)`: below the upper clamp of
-    `loop_width` the cut runs in the AQE-off child at the width of
-    `df`'s own size estimate, at the clamp in the caller's session. A
-    loop passes the session of its edge frame, so every round of one
-    loop runs at one width. The frame's analyzed plan is rebuilt in
-    `loop`, checkpointed there through PySpark's own `localCheckpoint`
-    (so tools that wrap it see every cut), and the checkpointed plan,
-    an RDD scan that keeps the physical partitioning, is rebuilt in
-    the caller.
+    `loop` defaults to the session of `cut_width(df)`: below the upper
+    clamp the cut runs in the AQE-off child of that width, at the clamp
+    in the caller's session. A loop computes `loop_session(edges)` of
+    its edge frame once and passes it to every round's cut, so every
+    round of one loop runs at one width; a round's own estimate
+    compounds from round to round (`loop_width`). A loop that measured
+    slower there passes its caller's session and stays on AQE. The
+    frame's analyzed plan is rebuilt in `loop`, checkpointed there
+    through PySpark's own `localCheckpoint` (so tools that wrap it see
+    every cut), and the checkpointed plan, an RDD scan that keeps the
+    physical partitioning, is rebuilt in the caller.
 
     The rule: every cut in the engine goes through here. A site that
     calls `localCheckpoint` itself states why on its line or the line
@@ -278,7 +325,7 @@ def cut(df: DataFrame, loop: SparkSession | None = None) -> DataFrame:
     """
     caller = df.sparkSession
     if loop is None:
-        loop = loop_session(df)
+        loop = _session(caller, cut_width(df))
     if loop is caller:
         return df.localCheckpoint(False)
     rows = df._sc._jvm.org.apache.spark.sql.classic.Dataset.ofRows

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cloud_native_mapreduce_spark.session import cut
+from cloud_native_mapreduce_spark.session import cut, loop_session
 
 #: Picks made by k_center_select.
 K_CENTER_K = 5
@@ -47,15 +47,18 @@ def k_center_select(embeddings: DataFrame,
         "vec_id",
         F.expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
                " * 10000) AS BIGINT))").alias("q"))
-    seed = cut(q.orderBy("vec_id").limit(1))
+    loop = loop_session(q)
+    seed = cut(q.orderBy("vec_id").limit(1), loop)
     state = cut(q.crossJoin(F.broadcast(seed.select(F.col("q").alias("cq"))))
                 .select("vec_id", "q",
-                        (F.lit(DOT_SCALE) - F.expr(_DOT)).alias("dmin")))
+                        (F.lit(DOT_SCALE) - F.expr(_DOT)).alias("dmin")),
+                loop)
     out = seed.select(F.lit(1).cast("bigint").alias("pick_rank"),
                       "vec_id",
                       F.lit(DOT_SCALE).cast("bigint").alias("separation"))
     for r in range(2, k + 1):
-        pick = cut(state.orderBy(F.col("dmin").desc(), "vec_id").limit(1))
+        pick = cut(state.orderBy(F.col("dmin").desc(), "vec_id").limit(1),
+                   loop)
         out = out.unionByName(
             pick.select(F.lit(r).cast("bigint").alias("pick_rank"),
                         "vec_id",
@@ -65,7 +68,7 @@ def k_center_select(embeddings: DataFrame,
             .select("vec_id", "q",
                     F.least(F.col("dmin"),
                             F.lit(DOT_SCALE) - F.expr(_DOT))
-                    .alias("dmin")))
+                    .alias("dmin")), loop)
     radius = state.agg(F.max("dmin").cast("bigint")
                        .alias("coverage_radius"))
     return out.crossJoin(F.broadcast(radius))

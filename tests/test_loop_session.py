@@ -181,6 +181,40 @@ def test_cut_at_the_clamp_runs_in_the_caller_session(rule_spark,
     assert ck.sparkSession is spark
 
 
+def test_a_one_off_cut_is_sized_by_its_inputs(rule_spark, monkeypatch):
+    """A frame topped by a limit or a global aggregate has a tiny
+    output estimate, but every shuffle under it runs at the cut's
+    width: the cut takes the width of its largest input instead."""
+    spark = rule_spark
+    big = spark.range(3 * _PER_PARTITION)
+    top = big.selectExpr("id % 1000 AS k").groupBy("k").count().limit(5)
+    total = big.groupBy().sum("id")
+    assert S.loop_width(top) == 1 and S.loop_width(total) == 1
+    assert S.cut_width(top) == S.cut_width(total) == S.loop_width(big) == 3
+    seen = _cut_sessions(spark, monkeypatch)
+    S.cut(top)
+    assert seen == [S.loop_session(big)]
+
+
+def test_a_converging_loop_cuts_every_round_in_one_session(rule_spark,
+                                                          monkeypatch):
+    """`connected_components` takes the loop session of its edge frame
+    once: its rounds do not each size a width from their own,
+    compounding, estimate."""
+    from cloud_native_mapreduce_spark.dedup.components import (
+        connected_components)
+    spark = rule_spark
+    nodes = spark.range(12).selectExpr("id AS doc_id")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 10, 2)] + [(1, 2), (5, 6)],
+        "doc_a long, doc_b long")
+    seen = _cut_sessions(spark, monkeypatch)
+    comps = connected_components(nodes, edges).collect()
+    assert len(seen) >= 4  # edges, seed labels and at least two rounds
+    assert all(s is seen[0] for s in seen), seen
+    assert len({r["comp"] for r in comps}) == 12 - 7
+
+
 @pytest.mark.parametrize("name", [
     "dag_layers", "bfs_hops", "sssp_weighted", "pagerank",
     "pagerank_personalized", "kcore_membership", "label_propagation",

@@ -15,8 +15,8 @@ checkpoint then proceeds unchanged, so eager loops and convergence
 probes behave normally. Each frame's header names the session it is
 checkpointed in: its AQE flag and its shuffle width W, which tells a
 cut in a width child (`session.cut` below the clamp: AQE off, the
-loop's or the frame's W) from one in the query's own session (a cut
-at the clamp, or a direct call).
+loop's W, or a one-off cut's `cut_width`) from one in the query's own
+session (a cut at the clamp, or a direct call).
 
 Usage: python tools/dump_loop_body.py <tag> <suffix> <query> [query ...]
 Writes plans/<tag>/<query>_loop_body_<suffix>.txt: the tree sections of
